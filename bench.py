@@ -1490,13 +1490,13 @@ def _sf10_scaling_block(spark, queries: dict) -> dict:
         out["rows"][name] = row
     # r14 (VERDICT r13 #1): the grouped default's adoption evidence at
     # the decade where it was adopted — grouped vs inrow at sf10,
-    # min-of-2 each, budget-gated like every row here (skipped rows
+    # min-of-3 each, budget-gated like every row here (skipped rows
     # recorded). The registered row above already measures grouped;
     # this block adds the inrow twin so the artifact itself shows
     # which strategy wins at sf10.
     try:
         lsh_row = out["rows"].get("lsh_candidate_pairs") or {}
-        est_inrow = 3 * float(lsh_row.get("sf10_sec") or 15.0)
+        est_inrow = 6 * float(lsh_row.get("sf10_sec") or 15.0)
         if _time.time() - t0 + est_inrow <= budget:
             from rnadam_spark.operators import dedup as _dedup
             from rnadam_spark.queries.pipeline_q import LSH_MAX_BUCKET as _LSH_CAP

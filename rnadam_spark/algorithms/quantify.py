@@ -18,11 +18,17 @@ State tables (all flat):
   mu                 (t_id, mu)                — M-state (n_transcripts rows)
 
 Scale design (100 TB): the membership edges are enriched with BOTH
-static dimensions (``rel_kmers``, ``t_len``) once up front and cached,
-so each EM iteration is exactly one broadcast (the tiny per-transcript
-``mu`` table) plus two shuffles of the edge table — the window by
-class_id and the groupBy t_id — independent of iteration count, with no
-dimension joins inside the loop.
+static dimensions (``rel_kmers``, ``t_len``) once up front, hash
+partitioned on class_id into :func:`edge_partitions` of their row count
+(about 250k rows per partition: one partition for a small
+transcriptome, thousands at corpus scale) and cached. Each EM
+iteration is then one broadcast (the per-transcript ``mu`` table), an
+exchange-free class_id window over the cached partitioning and one
+groupBy t_id shuffle, with no dimension joins inside the loop. The
+loop truncates µ's lineage every ``checkpoint_every`` iterations; after
+it, µ is materialized once as a single partition sorted by t_id, so the
+normalization and length-calibration sums add in the same order
+whatever the plan shape or edge layout.
 """
 
 from __future__ import annotations
@@ -32,6 +38,22 @@ from pyspark.sql import functions as F
 
 from rnadam_spark.functions.shingles import char_shingles
 from rnadam_spark.lineage import truncate_lineage
+
+#: target rows per partition of the cached, loop-iterated EM edge
+#: table. Measured 5-iteration loop, min-of-2 warm: sf0.1 (23k edge
+#: rows) 4.32s at 32 partitions vs 1.59s at 1; sf10 (2.3M rows) 11.3s
+#: at 32 vs 10.3s at 8 and 14.5s at 4. About 250k rows per task was the
+#: optimum at both decades, and the count keeps growing with the data
+#: (sf100 → ~93 partitions).
+EDGE_ROWS_PER_PART = 250_000
+
+
+def edge_partitions(n_rows: int) -> int:
+    """Partition count for an EM edge table of ``n_rows`` rows. Sizing
+    from the data instead of ``spark.sql.shuffle.partitions`` keeps
+    every EM iteration from paying dozens of near-empty tasks per stage
+    on small inputs."""
+    return max(1, -(-n_rows // EDGE_ROWS_PER_PART))
 
 
 def count_read_kmers(reads: DataFrame, k: int) -> DataFrame:
@@ -265,18 +287,19 @@ def quantify(
 
     # the static membership-edge table, enriched ONCE with both static
     # dimensions (class share rel_p, transcript length), PRE-PARTITIONED
-    # on class_id, and cached. The repartition is paid once at cache
-    # time and every iteration's E-step window then reuses the cached
-    # hashpartitioning(class_id) — its plan is broadcast-join + local
-    # sort + window with NO exchange (verified in tests/test_plans.py),
-    # so each EM iteration moves the edge table over the network exactly
-    # once (the M-step groupBy) instead of twice. Classes absent from
-    # class_counts drop here; their α rows carried zero weight into the
-    # M-step's rel_p join anyway.
+    # on class_id into a data-sized partition count, and cached. The
+    # repartition is paid once at cache time and every iteration's
+    # E-step window then reuses the cached hashpartitioning(class_id) —
+    # its plan is broadcast-join + local sort + window with NO exchange
+    # (verified in tests/test_plans.py), so each EM iteration moves the
+    # edge table over the network exactly once (the M-step groupBy)
+    # instead of twice. Classes absent from class_counts drop here;
+    # their α rows carried zero weight into the M-step's rel_p join
+    # anyway. The membership count bounds the enriched row count.
     edges = (
         class_transcripts.join(F.broadcast(rel_kmers), "class_id")
         .join(F.broadcast(t_len), "t_id")
-        .repartition("class_id")
+        .repartition(edge_partitions(class_transcripts.count()), "class_id")
         .cache()
     )
 
@@ -366,6 +389,12 @@ def em_loop(
                 mu = ins.timed(
                     timers, ins.M_STAGE, m_step(alpha, None, k, None, normalize=False)
                 )
+
+    # µ is one row per transcript (bounded model state): materialize it
+    # once as a single partition sorted by t_id, so the tail's global
+    # sums add in t_id order whether the plan above was forced stage by
+    # stage (timers) or lazy, and whatever the edge layout
+    mu = truncate_lineage(mu.repartition(1).sortWithinPartitions("t_id"), checkpoint_dir)
 
     # one global rescale replaces the reference's per-iteration ones —
     # scale cancels inside the loop (see m_step docstring)

@@ -1,15 +1,16 @@
 """Tare — GC/k-mer bias and transcript-length bias calibration.
 
 Re-expresses the reference's ``Tare`` (rice-core/.../algorithms/
-Tare.scala). The dinucleotide featurization (Tare.scala:88-101) is pure
-higher-order column expressions — no UDF, no explode, no shuffle; the
-regression of log-count on context fractions uses ``pyspark.ml``'s
-deterministic LinearRegression solver instead of 2015's
-LinearRegressionWithSGD (Tare.scala:121) — reference tests assert
-directional properties, not weights, so the better-converging solver is
-drop-in (SURVEY.md §7 risk register). The length-bias OLS
-(Tare.scala:164-177, driver-side jblas normal equations) becomes
-closed-form ``covar_pop/var_pop`` aggregates — fully distributed.
+Tare.scala). The dinucleotide featurization (Tare.scala:88-101) is 16
+overlapping regex counts in one codegen'd projection — no UDF, no
+lambda, no explode, no shuffle; the regression of log-count on context
+fractions uses ``pyspark.ml``'s deterministic LinearRegression solver
+instead of 2015's LinearRegressionWithSGD (Tare.scala:121) — reference
+tests assert directional properties, not weights, so the
+better-converging solver is drop-in (SURVEY.md §7 risk register). The
+length-bias OLS (Tare.scala:164-177, driver-side jblas normal
+equations) becomes closed-form ``covar_pop/var_pop`` aggregates — fully
+distributed.
 
 Formula quirks preserved exactly (pinned by TareSuite goldens):
 - P6 k-mer recalibration: count' = ⌊exp(mean + (label − prediction))⌋
@@ -21,51 +22,50 @@ Formula quirks preserved exactly (pinned by TareSuite goldens):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from functools import reduce
+from operator import add
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rnadam_spark.functions.shingles import char_shingles
-
-N_CONTEXTS = 16
-
-
-def _dinuc_idx(ctx: Column) -> Column:
-    """A→0 C→1 G→2 T→3 (case-insensitive, Tare.scala:38-43); index =
-    4·idx(c₀) + idx(c₁) (Tare.scala:62-64), computed via translate."""
-    digits = F.translate(F.upper(ctx), "ACGT", "0123")
-    return (
-        F.substring(digits, 1, 1).cast("int") * 4 + F.substring(digits, 2, 1).cast("int")
-    )
-
-
-def valid_contexts(kmer: Column | str) -> Column:
-    """2-shingles filtered to the ACGT alphabet (P3, Tare.scala:88-91)."""
-    c = F.col(kmer) if isinstance(kmer, str) else kmer
-    return F.filter(char_shingles(c, 2), lambda x: x.rlike("^[ACGTacgt]{2}$"))
+_BASES = "ACGT"
 
 
 def featurize_kmers(kmer_counts: DataFrame) -> DataFrame:
     """P5 (Tare.scala:88-101): 16-bin fractional dinucleotide-context
     histogram + label = log(multiplicity).
 
+    Bin 4·idx(c₀) + idx(c₁) with A→0 C→1 G→2 T→3 (Tare.scala:38-43,
+    62-64) holds the overlapping, case-insensitive count of that
+    dinucleotide — a zero-width lookahead match per start position —
+    divided by the count of all valid (ACGT-only) contexts (P3,
+    Tare.scala:88-91).
+
     Adds ``label DOUBLE`` and ``features ARRAY<DOUBLE>`` (length 16).
     K-mers with no valid context raise, matching the reference's
     assert (Tare.scala:91; TareSuite.scala:36-46).
     """
-    ctxs = valid_contexts("kmer")
-    idxs = F.transform(ctxs, _dinuc_idx)
-    n = F.size(idxs)
-    checked = F.when(
-        n > 0, idxs
-    ).otherwise(
-        F.raise_error(F.concat(F.lit("k-mer: "), F.col("kmer"), F.lit(" does not contain any valid contexts.")))
+    counts = [
+        F.regexp_count(F.col("kmer"), F.lit(f"(?i)(?={a}{b})")) for a in _BASES for b in _BASES
+    ]
+    # counts and their sum in one projection (subexpression elimination
+    # shares each count), the fractions in the next: a CASE WHEN branch
+    # is not subexpression-eliminated, so fractions over the raw counts
+    # would rerun every regex once per bin
+    bins = [f"_ctx{i}" for i in range(len(counts))]
+    counted = kmer_counts.select(
+        "*", *[c.alias(b) for c, b in zip(counts, bins)], reduce(add, counts).alias("_n")
     )
-    features = F.transform(
-        F.sequence(F.lit(0), F.lit(N_CONTEXTS - 1)),
-        lambda i: F.size(F.filter(checked, lambda x: x == i)) / n,
+    n = F.col("_n")
+    features = F.when(n > 0, F.array(*[F.col(b) / n for b in bins])).otherwise(
+        F.raise_error(
+            F.concat(F.lit("k-mer: "), F.col("kmer"), F.lit(" does not contain any valid contexts."))
+        )
     )
-    return kmer_counts.withColumn("label", F.log(F.col("cnt").cast("double"))).withColumn(
-        "features", features
+    return counted.select(
+        *kmer_counts.columns,
+        F.log(F.col("cnt").cast("double")).alias("label"),
+        features.alias("features"),
     )
 
 
@@ -124,6 +124,9 @@ def calibrate_tx_len_bias(
     normal-equations solve, but distributed (no sample-collect needed;
     ``sampling_rate`` subsamples the *fit*, as in the reference).
     mean = −log(n) since abundances sum to 1 (Tare.scala:158-162).
+    When every fitted length is equal, var(x) is 0 and the slope is
+    undetermined; the fit is then the intercept-only line (slope 0)
+    instead of a division by zero.
     """
     joined = mu.join(F.broadcast(t_len), "t_id")
     fit_input = joined.sample(False, sampling_rate) if sampling_rate < 1.0 else joined
@@ -131,7 +134,9 @@ def calibrate_tx_len_bias(
         F.log(F.col("t_len").cast("double")).alias("x"), F.log("mu").alias("y")
     )
     stats = xy.agg(
-        (F.covar_pop("x", "y") / F.var_pop("x")).alias("slope"),
+        F.when(F.var_pop("x") == 0, F.lit(0.0))
+        .otherwise(F.covar_pop("x", "y") / F.var_pop("x"))
+        .alias("slope"),
         F.avg("x").alias("avg_x"),
         F.avg("y").alias("avg_y"),
         (-F.log(F.count("*").cast("double"))).alias("mean"),

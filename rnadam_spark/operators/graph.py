@@ -36,7 +36,7 @@ from rnadam_spark.lineage import truncate_lineage
 #: target edge rows per partition for the opt-in loop-static edge
 #: cache — scale-adaptive (sf0.1 → 1 partition, ~10^9 edges →
 #: thousands), the same data-derived sizing as the EM edge cache
-#: (SPARK_GRAFT_EM_EDGE_ROWS_PER_PART, r13 §7). 62.5k measured better
+#: (``algorithms.quantify.edge_partitions``, r13 §7). 62.5k measured better
 #: than 250k at sf10 (4.17 vs 5.65s); override per cluster.
 _EDGE_ROWS_PER_PART = int(
     os.environ.get("SPARK_GRAFT_PR_EDGE_ROWS_PER_PART", "62500")

@@ -11,11 +11,10 @@ genomic pipeline itself (Index/Quantify/Tare over A-fixtures) lives in
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rnadam_spark.algorithms.quantify import edge_partitions
 from rnadam_spark.functions.shingles import char_shingles
 from rnadam_spark.functions.rounding import hround
 from rnadam_spark.functions.runlength import count_classes, let_, with_value_counts
@@ -468,15 +467,10 @@ def em_state(
     # cache at spark.sql.shuffle.partitions (AQE's coalescing keeps
     # defaultParallelism under parallelismFirst), so every EM iteration
     # paid 32 near-empty tasks per stage at gate/bench scale. Derive
-    # the count from the DATA instead — cc is cached and the loop
-    # forces it anyway, so the count() only moves that materialization
-    # earlier. Measured 5-iteration loop, min-of-2 warm: sf0.1 (23k
-    # edge rows) 4.32s @32 parts → 1.59s @1; sf10 (2.3M rows) 11.3s
-    # @32 → 10.3s @8, 14.5s @4 — ~250k rows/task is the measured
-    # optimum at both decades and keeps growing task counts with data
-    # (sf100 → ~93 partitions), so nothing here is tuned to local[32].
-    rows_per_part = int(os.environ.get("SPARK_GRAFT_EM_EDGE_ROWS_PER_PART", "250000"))
-    n_parts = max(1, -(-cc.count() // max(rows_per_part, 1)))
+    # the count from the DATA instead (``edge_partitions``, shared with
+    # ``quantify``) — cc is cached and the loop forces it anyway, so
+    # the count() only moves that materialization earlier.
+    n_parts = edge_partitions(cc.count())
     edges = (
         cc.crossJoin(F.broadcast(total))
         .select(

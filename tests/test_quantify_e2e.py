@@ -171,6 +171,42 @@ def test_quantify_skew_safe_matches_window_on_mega_class(spark):
         assert abs(got_w[t] - got_s[t]) < 1e-9, (t, got_w[t], got_s[t])
 
 
+def test_quantify_bit_identical_across_timers_and_edge_layout(spark, monkeypatch):
+    # CLI defaults (both calibrations on) over shared classes: the
+    # forced-stage plan (StageTimers) and the lazy plan, with the edge
+    # table in one partition or in several, must give the same
+    # abundances bit for bit — the µ tail's sums may not depend on
+    # plan shape or layout
+    from rnadam_spark import instrument as ins
+    from rnadam_spark.algorithms import quantify as q
+
+    class_size = [300, 200, 250, 150, 200, 100, 120]
+    class_mult = [1, 1, 1, 1, 2, 2, 3]
+    membership = [{0}, {1, 2}, {1, 3}, {1, 4}, {2, 5}, {2, 6}, {3, 6}, {6}, {0, 5}, {4, 6}]
+    abundances = [0.05, 0.1, 0.2, 0.1, 0.05, 0.05, 0.05, 0.2, 0.1, 0.1]
+    transcripts, names, kmer_map, class_map = gen.generate_transcripts(
+        20, class_size, class_mult, membership, seed=31
+    )
+    reads = gen.generate_reads(transcripts, abundances, 3000, 75, seed=32)
+    reads_df, kmer_df, class_df, t_df = _dataframes(
+        spark, transcripts, names, kmer_map, class_map, reads
+    )
+    n_edges = class_df.count()
+
+    def run(rows_per_part, timers):
+        monkeypatch.setattr(q, "EDGE_ROWS_PER_PART", rows_per_part)
+        out = quantify(reads_df, kmer_df, class_df, t_df, k=20, max_iterations=12, timers=timers)
+        return {r.t_id: r.abundance for r in out.select("t_id", "abundance").collect()}
+
+    one = n_edges  # all edges in one partition
+    several = 2  # ceil(n_edges / 2) partitions
+    assert q.edge_partitions(n_edges) == 1 and n_edges > 2 * several
+    want = run(one, None)
+    assert len(want) == len(names)
+    for rows_per_part, timers in ((one, ins.StageTimers()), (several, None), (several, ins.StageTimers())):
+        assert run(rows_per_part, timers) == want, (rows_per_part, timers)
+
+
 def test_em_state_fused_pandas_twin_value_equal(spark, sf_dir):
     # r12: em_state's default is the fused Arrow construction (Counter
     # + broadcast-dict accumulate straight to the class grain); the r11

@@ -5,11 +5,42 @@ import math
 import random
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from rnadam_spark.algorithms import tare
 from rnadam_spark.algorithms.generators import generate_string
+from rnadam_spark.functions.shingles import char_shingles
 from rnadam_spark.schemas import KMER_COUNTS
+
+# The higher-order-function featurization that tare.featurize_kmers
+# replaced, kept as an independent reference for its regex-count form.
+N_CONTEXTS = 16
+
+
+def _dinuc_idx(ctx: Column) -> Column:
+    """A→0 C→1 G→2 T→3 (case-insensitive, Tare.scala:38-43); index =
+    4·idx(c₀) + idx(c₁) (Tare.scala:62-64), computed via translate."""
+    digits = F.translate(F.upper(ctx), "ACGT", "0123")
+    return (
+        F.substring(digits, 1, 1).cast("int") * 4 + F.substring(digits, 2, 1).cast("int")
+    )
+
+
+def valid_contexts(kmer: Column | str) -> Column:
+    """2-shingles filtered to the ACGT alphabet (P3, Tare.scala:88-91)."""
+    c = F.col(kmer) if isinstance(kmer, str) else kmer
+    return F.filter(char_shingles(c, 2), lambda x: x.rlike("^[ACGTacgt]{2}$"))
+
+
+def reference_features(kmer: Column | str) -> Column:
+    """16-bin context fractions from filtered shingles; k-mers with no
+    valid context divide by zero instead of raising."""
+    idxs = F.transform(valid_contexts(kmer), _dinuc_idx)
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(N_CONTEXTS - 1)),
+        lambda i: F.size(F.filter(idxs, lambda x: x == i)) / F.size(idxs),
+    )
 
 
 def test_featurize_2mer_one_hot(spark):
@@ -40,6 +71,27 @@ def test_featurize_illegal_kmer_raises(spark):
     df = spark.createDataFrame([("NN", 1)], KMER_COUNTS)
     with pytest.raises(Exception, match="does not contain any valid contexts"):
         tare.featurize_kmers(df).collect()
+
+
+@pytest.mark.parametrize("k", [2, 3, 20, 31])
+def test_featurize_matches_shingle_reference(spark, k):
+    # mixed case, N and non-nucleotide letters: every k-mer keeps at
+    # least one valid context, and the regex-count features must equal
+    # the shingle/filter reference bit for bit
+    rng = random.Random(8800 + k)
+    alphabet = "ACGTACGTacgtNnRyXz"
+    drawn = {"".join(rng.choice(alphabet) for _ in range(k)) for _ in range(400)}
+    kmers = [
+        km for km in sorted(drawn) if any(a in "ACGTacgt" and b in "ACGTacgt" for a, b in zip(km, km[1:]))
+    ]
+    df = spark.createDataFrame([(km, 1) for km in kmers], KMER_COUNTS)
+    pairs = (
+        tare.featurize_kmers(df)
+        .select("features", reference_features("kmer").alias("want"))
+        .collect()
+    )
+    assert len(pairs) == len(kmers) > 50
+    assert all(r.features == r.want for r in pairs)
 
 
 def test_calibrate_kmers_reduces_gc_bias(spark):
@@ -97,6 +149,18 @@ def test_calibrate_tx_len_bias_sampled_fit(spark):
     assert len(got) == n  # every transcript rescaled, not just the sample
     for i in range(n):
         assert abs(got[str(i)] - 1.0 / n) < 0.02
+
+
+def test_calibrate_tx_len_bias_equal_lengths(spark):
+    # equal lengths leave var(log len) = 0: the fit falls back to the
+    # intercept-only line instead of dividing by zero, so µ' ∝ exp(−µ)
+    mus = {"a": 0.5, "b": 0.3, "c": 0.2}
+    mu = spark.createDataFrame(list(mus.items()), ["t_id", "mu"])
+    t_len = spark.createDataFrame([(t, 100) for t in mus], ["t_id", "t_len"])
+    got = {r.t_id: r.mu for r in tare.calibrate_tx_len_bias(mu, t_len).collect()}
+    total = sum(math.exp(-m) for m in mus.values())
+    for t, m in mus.items():
+        assert abs(got[t] - math.exp(-m) / total) < 1e-12, got
 
 
 @pytest.mark.parametrize("n", [11, 101])
