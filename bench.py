@@ -168,9 +168,8 @@ def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
     from rnadam_spark.operators import multimodal as mmod_ab
     from rnadam_spark.operators import search as search_ab
     from rnadam_spark.operators import spans as spans_ab
-    from rnadam_spark.queries.genomics_q import em_quantify
     from rnadam_spark.queries.genomics_q import kmer_count as kmer_count_q
-    from rnadam_spark.queries.pipeline_q import _BENCH_MOD, DECONTAM_N, LSH_MAX_BUCKET
+    from rnadam_spark.queries.pipeline_q import _BENCH_MOD, DECONTAM_N
     from rnadam_spark.queries.relational import pricing_summary
     from rnadam_spark.sources.tables import load_table
 
@@ -322,85 +321,6 @@ def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
             "staged_hof": timed(lambda: text.gopher_quality(docs)),
             "pandas_arrow": timed(lambda: text.gopher_quality_pandas(docs)),
         },
-        # grouped = the r13 second-session default: signature-dedup
-        # before banding (4.8x at sf10), group-grain cap + pair dedup,
-        # no doc-level distinct. sf10 5.99 vs inrow 9.44s; sf0.1 a
-        # 0.5s loss — crossover published here every round
-        "lsh_candidate_pairs": {
-            "grouped_capped": timed(
-                lambda: dedup.lsh_candidate_pairs(docs, max_bucket=LSH_MAX_BUCKET)
-            ),
-            "inrow_capped": timed(
-                lambda: dedup.lsh_candidate_pairs(
-                    docs, max_bucket=LSH_MAX_BUCKET, strategy="inrow"
-                )
-            ),
-            "selfjoin_capped": timed(
-                lambda: dedup.lsh_candidate_pairs(
-                    docs, max_bucket=LSH_MAX_BUCKET, strategy="selfjoin"
-                )
-            ),
-            # r14 (VERDICT r13 #1/#5): the crossover decade for the
-            # grouped default, in the driver's artifact (sf10 evidence
-            # lives in sf10_scaling.strategy_ab)
-            **_strategy_sf1_ab(
-                spark,
-                {
-                    "grouped_capped_sf1": lambda d1: dedup.lsh_candidate_pairs(
-                        d1, max_bucket=LSH_MAX_BUCKET
-                    ),
-                    "inrow_capped_sf1": lambda d1: dedup.lsh_candidate_pairs(
-                        d1, max_bucket=LSH_MAX_BUCKET, strategy="inrow"
-                    ),
-                },
-            ),
-        },
-        # r13 second session: the registered paragraph_near_dups chain
-        # with candidates/verify/CC at the DISTINCT-TEXT grain vs the
-        # unit grain (38.9M -> 15.7M verify pairs at sf10, 239 -> 86s;
-        # sf0.1 pays ~3s of extra stages — the crossover published
-        # here; losers set-equal, test_paragraph_near_dups_contracted_
-        # matches)
-        "paragraph_near_dups": {
-            "contracted_text_grain": timed(
-                lambda: dedup.paragraph_near_dups(
-                    docs,
-                    threshold=0.8,
-                    max_bucket=LSH_MAX_BUCKET,
-                    min_chars=40,
-                    split_pattern=" table ",
-                    unit_key="encoded",
-                )
-            ),
-            "unit_grain": timed(
-                lambda: dedup.paragraph_near_dups(
-                    docs,
-                    threshold=0.8,
-                    max_bucket=LSH_MAX_BUCKET,
-                    min_chars=40,
-                    split_pattern=" table ",
-                    unit_key="encoded",
-                    contracted=False,
-                )
-            ),
-        },
-        # r13 second session: the registered dedup_clusters' star
-        # rounds over the CONTRACTED signature-group graph (groups are
-        # cliques; 10.6x fewer edges at sf10, 52-66s -> ~13s) vs the
-        # doc-level pairs+CC composition — (node, component) sets
-        # identical (test_lsh_components_match_pairs_cc)
-        "dedup_clusters": {
-            "contracted_cc": timed(
-                lambda: dedup.lsh_near_dup_components(
-                    docs, max_bucket=LSH_MAX_BUCKET
-                )
-            ),
-            "doc_level_cc": timed(
-                lambda: dedup.lsh_near_dup_components(
-                    docs, max_bucket=LSH_MAX_BUCKET, contracted=False
-                )
-            ),
-        },
         # r13 twin: the numpy minhash kernel (per-doc grain straight
         # out of the scan, zero shuffle) vs the explode+partial-agg JVM
         # form — integer-exact, pinned value-equal by
@@ -503,11 +423,7 @@ def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
         },
         # r13 twins: the multimodal fingerprint passes on the batched
         # fake-path kernels (bit-identical, parity pinned by
-        # tests/test_multimodal.py) and the in-row pair expansion vs
-        # the banded self-join (same pair set; the text corpus's fake
-        # hashes band into ~900M candidates at sf10, where inrow's
-        # n(n-1)/2 tail-slice generation beat the n^2 self-join
-        # 10.9 vs 17.9s end-to-end in the adoption runs)
+        # tests/test_multimodal.py)
         "dhash": {
             "batch_kernel": timed(
                 lambda: mmod_ab.dhash_assets(mmod_ab.assets_from_documents(docs))
@@ -515,27 +431,6 @@ def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
             "scalar_kernel": timed(
                 lambda: mmod_ab.dhash_assets(
                     mmod_ab.assets_from_documents(docs), kernel="scalar"
-                )
-            ),
-            # grouped = the r13 second-session default (identical
-            # hashes collapse 86x at sf10, bit_count per distinct hash
-            # pair): sf10 3.59 vs inrow 14.13s, sf0.1 a ~0.9s loss —
-            # the crossover published here every round
-            "pairs_grouped": timed(
-                lambda: mmod_ab.dhash_hamming_pairs(
-                    mmod_ab.dhash_assets(mmod_ab.assets_from_documents(docs))
-                )
-            ),
-            "pairs_inrow": timed(
-                lambda: mmod_ab.dhash_hamming_pairs(
-                    mmod_ab.dhash_assets(mmod_ab.assets_from_documents(docs)),
-                    strategy="inrow",
-                )
-            ),
-            "pairs_selfjoin": timed(
-                lambda: mmod_ab.dhash_hamming_pairs(
-                    mmod_ab.dhash_assets(mmod_ab.assets_from_documents(docs)),
-                    strategy="selfjoin",
                 )
             ),
         },
@@ -598,10 +493,6 @@ def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
                     load_table(spark, sf_dir, "documents"), kernel="jvm"
                 )
             ),
-        },
-        "em_quantify": {
-            "window": timed(lambda: em_quantify(spark, sf_dir)),
-            "skew_safe": timed(lambda: em_quantify(spark, sf_dir, skew_safe=True)),
         },
         # r13 twin: the loop-static PageRank edge cache (materialized
         # once, key-partitioned by a data-derived count) vs the lazy
@@ -675,9 +566,6 @@ def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
             "fused_pandas": _timed_em_state(spark, docs, True),
             "hof_join": _timed_em_state(spark, docs, False),
         },
-        # r13: the loop residual — checkpoint cadence over a pre-built
-        # state (every-1 default; see _em_loop_ab for the adoption bar)
-        "em_loop": _em_loop_ab(spark, docs),
     }
 
 
@@ -866,53 +754,6 @@ def _timed_em_state(spark, docs, pandas_kernel: bool) -> float:
             state["edges"].unpersist()  # lazy cache marker, never forced here
 
     return _min_of_repeats(spark, run)
-
-
-def _em_loop_ab(spark, docs) -> dict[str, float]:
-    """r13 (VERDICT r12 #4): time the 5-iteration EM loop ALONE over a
-    pre-built, pre-forced state, isolating the loop residual (the
-    flagship's largest remaining sf100 block, ~45s) from the state
-    build. checkpoint_every=2 is the loop-unrolled two-iteration plan:
-    one eager truncation per two iterations, with the unchecked
-    iteration's subtree materializing once inside the next E-step's
-    broadcast exchange. The both-decades adoption bar was met on the
-    final r13 tree (loop-only min-of-k: every_2 12.14 vs 13.73s at
-    sf10, 58.29 vs 61.57s at sf100 — the §7 data-sized edge cache
-    shrank per-iteration work until the eager action dominated), so
-    every-2 is now the DEFAULT; this row keeps re-measuring both."""
-    from rnadam_spark.algorithms.quantify import em_loop
-    from rnadam_spark.queries.genomics_q import K, em_state
-
-    state = em_state(docs)
-    out: dict[str, float] = {}
-    try:
-        # force the cached state ONCE, outside every timed window
-        state["cc"].write.format("noop").mode("overwrite").save()
-        state["edges"].write.format("noop").mode("overwrite").save()
-        for label, every in (("checkpoint_every_1", 1), ("checkpoint_every_2", 2)):
-            best = None
-            for _ in range(max(REPEATS, 1)):
-                # deliberately NO clearCache (unlike _min_of_repeats):
-                # evicting the pre-built state would charge its rebuild
-                # to the loop under test — and asymmetrically, once per
-                # broadcast exchange
-                t0 = time.time()
-                em_loop(
-                    state["class_counts"],
-                    state["edges"],
-                    state["transcripts"],
-                    k=K,
-                    max_iterations=5,
-                    calibrate_length_bias=False,
-                    checkpoint_every=every,
-                ).write.format("noop").mode("overwrite").save()
-                dt = time.time() - t0
-                best = dt if best is None else min(best, dt)
-            out[label] = round(best, 3)
-    finally:
-        state["cc"].unpersist()
-        state["edges"].unpersist()
-    return out
 
 
 def _lm_vocab_ab(spark, timed, docs) -> dict[str, dict[str, float]]:
@@ -1386,10 +1227,7 @@ def _sf10_scaling_block(spark, queries: dict) -> dict:
     controlled interleaved min-of-3 read 4.85s; both sessions recorded
     the same end-of-long-bench variance signature on this row), and
     2×(sf1+sf10) ≈ 2×13s fits the 240s budget. The row records its
-    ``repeats``. The block also publishes the grouped-vs-inrow
-    decision evidence at sf10 itself (``strategy_ab``), so the
-    registered default's adoption measurement lives in the driver's
-    artifact, not only in the builder's session logs."""
+    ``repeats``."""
     import time as _time
 
     dirs = os.environ.get("SPARK_GRAFT_BENCH_SF10_DIRS", "/tmp/sf1,/tmp/sf10")
@@ -1409,9 +1247,9 @@ def _sf10_scaling_block(spark, queries: dict) -> dict:
     # read 156s at the end of the bench session while interleaved
     # min-of-3 on the same tree reads 52s — the same deep-session
     # variance signature as r13's lsh row — AND its cost blew the
-    # budget so strategy_ab got skipped; its sf10 evidence lives in
-    # OPTIMIZATION_r14.md's equality-swept interleaved measurements
-    # instead of a number this block cannot measure honestly.
+    # budget; its sf10 evidence lives in OPTIMIZATION_r14.md's
+    # equality-swept interleaved measurements instead of a number this
+    # block cannot measure honestly.
     names = [
         "kmer_count",
         "lsh_candidate_pairs",
@@ -1488,48 +1326,6 @@ def _sf10_scaling_block(spark, queries: dict) -> dict:
         if forced:
             row["forced_remeasure_after_carries"] = int((prev or {}).get("carries", 0))
         out["rows"][name] = row
-    # r14 (VERDICT r13 #1): the grouped default's adoption evidence at
-    # the decade where it was adopted — grouped vs inrow at sf10,
-    # min-of-3 each, budget-gated like every row here (skipped rows
-    # recorded). The registered row above already measures grouped;
-    # this block adds the inrow twin so the artifact itself shows
-    # which strategy wins at sf10.
-    try:
-        lsh_row = out["rows"].get("lsh_candidate_pairs") or {}
-        est_inrow = 6 * float(lsh_row.get("sf10_sec") or 15.0)
-        if _time.time() - t0 + est_inrow <= budget:
-            from rnadam_spark.operators import dedup as _dedup
-            from rnadam_spark.queries.pipeline_q import LSH_MAX_BUCKET as _LSH_CAP
-            from rnadam_spark.sources.tables import load_table as _load
-
-            docs10 = _load(spark, sf10_dir, "documents", widen=True)
-            forms = {
-                "lsh_pairs_grouped_sf10": lambda: _dedup.lsh_candidate_pairs(
-                    docs10, max_bucket=_LSH_CAP
-                ),
-                "lsh_pairs_inrow_sf10": lambda: _dedup.lsh_candidate_pairs(
-                    docs10, max_bucket=_LSH_CAP, strategy="inrow"
-                ),
-            }
-            # INTERLEAVED rounds, min per form: a sequential min-of-2
-            # block let the first form eat the whole warm-up tail (the
-            # r14 round measured grouped 7.26 sequential vs 4.87
-            # interleaved on the same tree minutes apart, with inrow
-            # steady at ~6.3 — alternation is the protocol that
-            # survives this host's regime drift)
-            best: dict[str, float] = {}
-            for _ in range(3):
-                for key, make in forms.items():
-                    spark.catalog.clearCache()
-                    t1 = _time.time()
-                    make().write.format("noop").mode("overwrite").save()
-                    dt = _time.time() - t1
-                    best[key] = min(best.get(key, dt), dt)
-            out["strategy_ab"] = {k: round(v, 2) for k, v in best.items()}
-        else:
-            out["strategy_ab"] = {"skipped": "budget"}
-    except Exception as e:
-        out["strategy_ab"] = {"error": str(e)[:200]}
     return out
 
 

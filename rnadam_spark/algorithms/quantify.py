@@ -25,7 +25,7 @@ transcriptome, thousands at corpus scale) and cached. Each EM
 iteration is then one broadcast (the per-transcript ``mu`` table), an
 exchange-free class_id window over the cached partitioning and one
 groupBy t_id shuffle, with no dimension joins inside the loop. The
-loop truncates µ's lineage every ``checkpoint_every`` iterations; after
+loop truncates µ's lineage every ``CHECKPOINT_EVERY`` iterations; after
 it, µ is materialized once as a single partition sorted by t_id, so the
 normalization and length-calibration sums add in the same order
 whatever the plan shape or edge layout.
@@ -46,6 +46,10 @@ from rnadam_spark.lineage import truncate_lineage
 #: optimum at both decades, and the count keeps growing with the data
 #: (sf100 → ~93 partitions).
 EDGE_ROWS_PER_PART = 250_000
+
+#: EM iterations between µ lineage truncations (see the cadence
+#: comment in :func:`em_loop`).
+CHECKPOINT_EVERY = 2
 
 
 def edge_partitions(n_rows: int) -> int:
@@ -110,24 +114,13 @@ def _extra_cols(class_transcripts: DataFrame) -> list[str]:
     return [c for c in class_transcripts.columns if c not in ("class_id", "t_id")]
 
 
-def initialize_em(
-    class_counts: DataFrame, class_transcripts: DataFrame, skew_safe: bool = False
-) -> DataFrame:
+def initialize_em(class_counts: DataFrame, class_transcripts: DataFrame) -> DataFrame:
     """alpha₀ (class_id, t_id, alpha): split each class count equally
-    across its member transcripts (A11, Quantify.scala:175-184).
-    ``skew_safe`` swaps the per-class count window for groupBy +
-    broadcast join — same rationale as ``e_step``. Extra columns on
-    ``class_transcripts`` pass through."""
+    across its member transcripts (A11, Quantify.scala:175-184), as one
+    per-class count window — the same shape as ``e_step``. Extra
+    columns on ``class_transcripts`` pass through."""
     extra = _extra_cols(class_transcripts)
     joined = class_counts.join(class_transcripts, "class_id")
-    if skew_safe:
-        sizes = class_transcripts.groupBy("class_id").agg(F.count("*").alias("_n"))
-        return joined.join(F.broadcast(sizes), "class_id").select(
-            "class_id",
-            "t_id",
-            *extra,
-            (F.col("cnt").cast("double") / F.col("_n")).alias("alpha"),
-        )
     w = Window.partitionBy("class_id")
     return joined.select(
         "class_id",
@@ -137,42 +130,24 @@ def initialize_em(
     )
 
 
-def e_step(mu: DataFrame, class_transcripts: DataFrame, skew_safe: bool = False) -> DataFrame:
+def e_step(mu: DataFrame, class_transcripts: DataFrame) -> DataFrame:
     """E-step (A9, Quantify.scala:200-212): α(j,i) = µ̂_i / Σ_{t∈s_j} µ̂_t.
 
-    Default: one broadcast join + one window — the reference's double
-    shuffle (flatMap → groupByKey) collapses into a single
-    partition-by-class window aggregate. Measured fastest at bench
-    scale, but ``Window.partitionBy(class_id)`` places a whole class in
-    ONE task — a mega-class (a handful of classes holding most edges,
-    plausible when classes key on k-mer multiplicity) funnels there.
-
-    ``skew_safe=True`` computes the class sums as groupBy + broadcast
-    join instead: sum() partial-aggregates map-side, so a hot class
-    contributes one row per input partition to the exchange regardless
-    of its size. Same α bit-for-bit (one double addition order may
-    differ; both paths pass the same goldens).
-
-    Measured A/B (bench.py ``ab`` block, re-run per round): at sf0.1
-    with no mega-class the window form wins (8.1s vs 8.8s for the
-    5-iteration flagship over class_id-pre-partitioned cached edges —
-    both paths reuse that partitioning, so the gap is the skew_safe
-    extra aggregate+broadcast), and it stays the default; the crossover
-    is a class whose edge count dwarfs a single task (≈ rows-per-task
-    at the configured shuffle width), where the window funnels and
-    skew_safe keeps scaling — flip it on when class sizes are
-    unbounded. Parity on the mega-class shape itself is pinned by
+    One broadcast join + one window: the reference's double shuffle
+    (flatMap → groupByKey) collapses into a single partition-by-class
+    window aggregate, which reuses the EM loop's class_id-partitioned
+    edge cache with no exchange. ``Window.partitionBy(class_id)`` places
+    a whole class in ONE task, so a mega-class funnels there; a
+    groupBy + broadcast form that partial-aggregates class sums was
+    measured and lost at every scale tried (sf10 loop 29.6 vs 12.4s in
+    OPTIMIZATION_r14.md; sf0.1 3.55 vs 2.59s in BENCH_DETAIL.json). The
+    mega-class shape is pinned against a driver-side EM by
     tests/test_quantify_e2e.py.
 
     Extra columns on ``class_transcripts`` pass through (the EM loop's
     enriched edge table)."""
     extra = _extra_cols(class_transcripts)
     edges = class_transcripts.join(F.broadcast(mu.select("t_id", "mu")), "t_id")
-    if skew_safe:
-        class_sums = edges.groupBy("class_id").agg(F.sum("mu").alias("_mu_sum"))
-        return edges.join(F.broadcast(class_sums), "class_id").select(
-            "class_id", "t_id", *extra, (F.col("mu") / F.col("_mu_sum")).alias("alpha")
-        )
     w = Window.partitionBy("class_id")
     return edges.select(
         "class_id", "t_id", *extra, (F.col("mu") / F.sum("mu").over(w)).alias("alpha")
@@ -248,9 +223,7 @@ def quantify(
     max_iterations: int,
     calibrate_kmer_bias: bool = True,
     calibrate_length_bias: bool = True,
-    checkpoint_every: int = 2,
     timers=None,
-    skew_safe: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Full pipeline (Quantify.scala:42-127): returns transcripts with
@@ -311,9 +284,7 @@ def quantify(
         max_iterations,
         calibrate_length_bias=calibrate_length_bias,
         t_len=t_len,
-        checkpoint_every=checkpoint_every,
         timers=timers,
-        skew_safe=skew_safe,
         checkpoint_dir=checkpoint_dir,
     )
 
@@ -326,9 +297,7 @@ def em_loop(
     max_iterations: int,
     calibrate_length_bias: bool = True,
     t_len: DataFrame | None = None,
-    checkpoint_every: int = 2,
     timers=None,
-    skew_safe: bool = False,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """The EM driver core over PRE-BUILT state — the loop every entry
@@ -353,7 +322,7 @@ def em_loop(
     if calibrate_length_bias and t_len is None:
         raise ValueError("calibrate_length_bias=True requires t_len")
 
-    alpha = initialize_em(class_counts, edges, skew_safe=skew_safe)
+    alpha = initialize_em(class_counts, edges)
     mu = m_step(alpha, None, k, None, normalize=False)
     mu = ins.timed(timers, ins.INIT_EM, mu)
 
@@ -363,29 +332,29 @@ def em_loop(
         # grew linearly with iterations). Cadence is a measured trade:
         # without ANY truncation each broadcast exchange re-executes
         # all prior iterations (45.9s vs 8.3s for the 5-iteration
-        # flagship at sf0.1, checkpoint_every 5 vs 1, r8); every-2 —
-        # one eager action per TWO iterations, the skipped iteration's
-        # subtree materializing once inside the next E-step broadcast —
-        # lost under r8's 32-partition edge cache (9.20 vs 8.66s) but
-        # WINS after r13 §7 sized the cache from the data: loop-only
-        # min-of-k on the final tree, every_2 vs every_1 — sf10 12.14
-        # vs 13.73s, sf100 58.29 vs 61.57s (sf0.1 is a coin flip across
-        # artifacts), meeting the both-decades adoption bar, so 2 is
-        # the default; ab.em_loop re-measures the cadence every round.
+        # flagship at sf0.1, truncating every 5 vs every 1, r8);
+        # every 2 — one eager action per TWO iterations, the skipped
+        # iteration's subtree materializing once inside the next E-step
+        # broadcast — lost under r8's 32-partition edge cache (9.20 vs
+        # 8.66s) but WINS since r13 §7 sized the cache from the data:
+        # loop-only min-of-k, every 2 vs every 1 — sf10 12.14 vs
+        # 13.73s, sf100 58.29 vs 61.57s (sf0.1 is a coin flip across
+        # artifacts; OPTIMIZATION_r13.md §19), so the cadence is fixed
+        # at 2.
         # Also measured and rejected: transporting mu through the
         # driver (collect + createDataFrame per iteration — mu is
         # bounded model state, so it is legal) was SLOWER than
         # localCheckpoint at sf0.1 (5.23s vs 4.91s warm min-of-3,
         # identical results): the collect round-trip costs more than
         # the checkpoint write.
-        if (i + 1) % checkpoint_every == 0:
+        if (i + 1) % CHECKPOINT_EVERY == 0:
             mu = truncate_lineage(mu, checkpoint_dir)
         if timers is None:
-            alpha = e_step(mu, edges, skew_safe=skew_safe)
+            alpha = e_step(mu, edges)
             mu = m_step(alpha, None, k, None, normalize=False)
         else:
             with timers.stage(ins.EM_ITER):
-                alpha = ins.timed(timers, ins.E_STAGE, e_step(mu, edges, skew_safe=skew_safe))
+                alpha = ins.timed(timers, ins.E_STAGE, e_step(mu, edges))
                 mu = ins.timed(
                     timers, ins.M_STAGE, m_step(alpha, None, k, None, normalize=False)
                 )

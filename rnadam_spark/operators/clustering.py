@@ -83,7 +83,9 @@ def connected_components(
 
     Runs star rounds to a fixpoint (edge-set checksum stable), bounded
     by ``max_rounds`` as a runaway guard; O(log n) rounds suffice, so 50
-    covers any feasible component size.
+    covers any feasible component size. Running out of rounds before
+    the fixpoint raises ``RuntimeError`` rather than returning
+    unconverged labels.
 
     ``checkpoint_dir``: per-round truncation switches from
     ``localCheckpoint`` to reliable ``checkpoint`` into that directory
@@ -105,11 +107,14 @@ def connected_components(
     for _ in range(max_rounds):
         # LAZY truncation (r14, guide §1.2/§5): the fixpoint probe below
         # is the round's action anyway, so it materializes the
-        # checkpoint as a side effect — ONE job per round where the
-        # eager form paid two (an eager count, then the probe re-reading
-        # the blocks; measured on the registered dedup_clusters chain:
-        # the probe is the only consumer before the next round, so the
-        # fused job computes the star round exactly once).
+        # checkpoint as a side effect. With ``localCheckpoint`` that is
+        # ONE job per round where the eager form paid two (an eager
+        # count, then the probe re-reading the blocks; measured on the
+        # registered dedup_clusters chain: the probe is the only
+        # consumer before the next round, so the fused job computes the
+        # star round exactly once). With ``checkpoint_dir`` the reliable
+        # checkpoint runs its own job after the probe and recomputes the
+        # round to write it, so each round runs the star round twice.
         edges = truncate_lineage(
             _small_star(_large_star(edges)).distinct(), checkpoint_dir, eager=False
         )
@@ -128,6 +133,11 @@ def connected_components(
         if sig == prev:
             break
         prev = sig
+    else:
+        raise RuntimeError(
+            f"connected_components: no fixpoint after max_rounds={max_rounds} "
+            f"({max_rounds} rounds run)"
+        )
     # converged edges are stars (child, root); roots map to themselves
     mapping = edges.groupBy("src").agg(F.min("dst").alias("component"))
     all_nodes = (

@@ -10,6 +10,12 @@ the document domain (SURVEY.md §2.7, §7 step 7):
   carries one row per document after combine (see ``shingle_codes``
   for why the explode beats a pure-projection variant ~20×);
 - SimHash: the same explode + partial-aggregate shape over token codes;
+- LSH candidates (``lsh_candidate_pairs``): banded MinHash buckets.
+  With a bucket cap, docs with identical signatures collapse to one
+  group first and pairs expand from the group grain; uncapped, a band
+  equi-self-join. Near-dup clusters (``lsh_near_dup_components``) and
+  paragraph families (``paragraph_near_dups``) run their star rounds
+  on the same contracted grain;
 - n-gram Jaccard: candidate pairs via shared-shingle equi-join
   (explode → join on shingle → per-pair count), the scale-safe
   alternative to the quadratic all-pairs comparison;
@@ -26,9 +32,12 @@ Every hash here is the portable polynomial/affine family from
 signatures bit-for-bit.
 
 Scale notes (100 TB): signatures are per-row projections (codegen,
-embarrassingly parallel). The band join's fan-out is bounded by bucket
-size; hot buckets (boilerplate text) need a bucket-size cap — exposed
-as ``max_bucket`` on ``lsh_candidate_pairs``.
+embarrassingly parallel). Pair fan-out is bounded by bucket size; hot
+buckets (boilerplate text) need a bucket-size cap — exposed as
+``max_bucket`` on ``lsh_candidate_pairs`` and the operators built on
+it. Each operator has one physical form per cap setting; the
+measurements that chose them are in OPTIMIZATION_r13.md (§21, §23,
+§24) and OPTIMIZATION_r14.md (§5).
 """
 
 from __future__ import annotations
@@ -188,82 +197,27 @@ def lsh_band_sigs(sigs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def lsh_candidate_pairs(
-    docs: DataFrame, max_bucket: int | None = None, strategy: str | None = None
-) -> DataFrame:
+def lsh_candidate_pairs(docs: DataFrame, max_bucket: int | None = None) -> DataFrame:
     """(doc_a, doc_b): near-duplicate candidates — pairs agreeing on at
     least one full band. ``max_bucket`` drops degenerate buckets (every
     pair in a bucket of n costs n², so a boilerplate bucket of 10⁶ docs
     would emit 10¹² pairs; capping is the standard scale guard).
 
-    ``strategy`` picks how bucket pairs are expanded (default: "grouped"
-    when capped, "selfjoin" uncapped — the grouped and in-row
-    expansions REQUIRE the cap, since they materialize a bucket's
-    member list in one row):
+    With ``max_bucket`` set, docs sharing an IDENTICAL full signature
+    collapse to one representative before banding; banding, the bucket
+    cap and the pair dedup all run at the GROUP grain, then group pairs
+    expand back to doc pairs exactly once, so no doc-level distinct
+    exchange runs (see :func:`_grouped_pairs` for the equality
+    argument). Uncapped (``max_bucket=None``), the pairs come from a
+    streaming band equi-self-join that tolerates unbounded buckets.
 
-    - "inrow": groupBy band → collect members → in-row pair expansion.
-      The MinHash subtree runs once and the only data shuffle is the
-      bucket groupBy — measured faster than the self-join at sf0.1
-      (A/B timings re-measured per round in bench.py's ``ab`` block),
-      and the gap widens with input size since the self-join computes
-      the signature subtree twice. The expansion itself is
-      posexplode + slice (r13): each member row pairs with the tail of
-      the sorted bucket, replacing the nested transform/sequence
-      struct build — the same pairs in the same order, one interpreted
-      HOF tree less per bucket (sf10 11.3 → 9.3s interleaved min-of-3;
-      a 5-key tuple grouping and an Arrow expansion kernel were also
-      measured and both LOST — see OPTIMIZATION_r13.md).
-    - "selfjoin": streaming band equi-self-join; tolerates unbounded
-      buckets, with the cap (when set) applied as a bucket-size
-      semi-filter first so both strategies emit identical pairs.
-    - "grouped": docs sharing an IDENTICAL full signature collapse to
-      one representative before banding (r13 second session — measured
-      4.8× signature dedup at sf10); banding, the bucket cap and the
-      pair dedup all run at the GROUP grain, then group pairs expand
-      back to doc pairs exactly once — the final 26M-row distinct
-      exchange disappears. Pair set identical (see
-      :func:`_grouped_pairs`; exceptAll both ways = 0 over 16.9M pairs
-      at sf10); requires ``max_bucket``. Default by measurement:
-      sf10 5.99 vs inrow 9.44s min-of-3 interleaved; sf0.1 is a 0.5s
-      LOSS (1.94 vs 1.41 — the extra groupBy + joins are scheduling
-      floor at small scale), the same crossover shape as kmer_count —
-      the default follows the sf10 decade and ``ab.lsh_candidate_pairs``
-      re-measures all three strategies every round."""
-    if strategy is None:
-        strategy = "grouped" if max_bucket is not None else "selfjoin"
-    if strategy == "grouped":
-        if max_bucket is None:
-            raise ValueError("grouped pair expansion requires max_bucket")
+    The grouped form replaced an in-row per-bucket expansion and a
+    capped self-join: sf10 5.99s vs 9.44s in-row, min-of-3 interleaved;
+    it loses ~0.5s of scheduling floor at sf0.1 (OPTIMIZATION_r13.md
+    §21, OPTIMIZATION_r14.md §5)."""
+    if max_bucket is not None:
         return _grouped_pairs(minhash_signatures(docs), max_bucket)
     bands = lsh_band_sigs(minhash_signatures(docs))
-    if strategy == "inrow":
-        if max_bucket is None:
-            raise ValueError("in-row pair expansion requires max_bucket")
-        g = (
-            bands.groupBy("band", "band_sig")
-            .agg(F.sort_array(F.collect_set("doc_id")).alias("ds"))
-            .filter((F.size("ds") >= 2) & (F.size("ds") <= max_bucket))
-        )
-        e1 = g.select(F.col("ds"), F.posexplode("ds").alias("i", "doc_a"))
-        return (
-            e1.select(
-                "doc_a",
-                F.explode(
-                    F.slice("ds", F.col("i") + 2, F.size("ds") - F.col("i") - 1)
-                ).alias("doc_b"),
-            )
-            .distinct()
-        )
-    if strategy != "selfjoin":
-        raise ValueError(f"unknown pair strategy: {strategy!r}")
-    if max_bucket is not None:
-        ok = (
-            bands.groupBy("band", "band_sig")
-            .agg(F.count("*").alias("_n"))
-            .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket))
-            .drop("_n")
-        )
-        bands = bands.join(ok, ["band", "band_sig"])
     a = bands.alias("a")
     b = bands.alias("b")
     return (
@@ -313,8 +267,8 @@ def _signature_groups_and_pairs(
     from rnadam_spark.lineage import truncate_lineage
 
     if max_bucket is None:
-        # `total <= None` is null and silently drops EVERY bucket —
-        # match lsh_candidate_pairs' grouped guard (r14, ADVICE fix)
+        # `total <= None` is null and silently drops EVERY bucket
+        # (r14, ADVICE fix)
         raise ValueError("signature-group pair expansion requires max_bucket")
     rows_per_band = N_HASHES // N_BANDS
     h_cols = [f"h{i}" for i in range(N_HASHES)]
@@ -371,8 +325,8 @@ def _signature_groups_and_pairs(
 
 
 def _grouped_pairs(sigs: DataFrame, max_bucket: int) -> DataFrame:
-    """Candidate pairs via signature-group collapse — the same pair SET
-    as the doc-level strategies, derived at the group grain.
+    """Candidate pairs via signature-group collapse — the pair SET of
+    doc-level banding with the same cap, derived at the group grain.
 
     Equality argument: docs with an identical full signature have
     identical band_sigs for every band, so they occupy exactly the same
@@ -388,8 +342,9 @@ def _grouped_pairs(sigs: DataFrame, max_bucket: int) -> DataFrame:
     by the signature-duplication factor (4.8× at sf10 — exact dups and
     near-dup farms are the norm in web corpora, and every exact dup is
     a signature dup); a corpus with no duplicate signatures pays one
-    extra narrow groupBy. Pinned pair-set-equal to "inrow" by
-    tests/test_dedup.py plus the gate row's DuckDB oracle."""
+    extra narrow groupBy. Pinned pair-set-equal to a driver-side bucket
+    enumeration by tests/test_dedup.py plus the gate row's DuckDB
+    oracle."""
     groups, gp = _signature_groups_and_pairs(sigs, max_bucket)
     return _expand_group_pairs(groups, gp)
 
@@ -426,10 +381,7 @@ def _expand_group_pairs(groups: DataFrame, gp: DataFrame) -> DataFrame:
 
 
 def lsh_near_dup_components(
-    docs: DataFrame,
-    max_bucket: int,
-    checkpoint_dir: str | None = None,
-    contracted: bool = True,
+    docs: DataFrame, max_bucket: int, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """(node, component): connected components of the
     ``lsh_candidate_pairs(docs, max_bucket)`` graph — the near-dup
@@ -454,15 +406,9 @@ def lsh_near_dup_components(
     (the self pair marks that; such isolated cliques become their own
     component). Pinned set-equal to the pairs+CC composition by
     tests/test_dedup.py::test_lsh_components_match_pairs_cc and the
-    ``dedup_clusters`` gate oracle.
-
-    ``contracted=False`` keeps the doc-level composition (pairs → star
-    rounds) for A/B re-measurement."""
+    ``dedup_clusters`` gate oracle."""
     from rnadam_spark.operators.clustering import connected_components
 
-    if not contracted:
-        pairs = lsh_candidate_pairs(docs, max_bucket=max_bucket)
-        return connected_components(pairs, checkpoint_dir=checkpoint_dir)
     groups, gp = _signature_groups_and_pairs(
         minhash_signatures(docs), max_bucket, checkpoint_dir=checkpoint_dir
     )
@@ -984,7 +930,6 @@ def paragraph_near_dups(
     text_col: str = "text",
     id_col: str = "doc_id",
     unit_key: str = "hash",
-    contracted: bool = True,
 ) -> DataFrame:
     """(doc_id, para_idx): paragraphs that are NEAR-duplicates of
     another paragraph anywhere in the corpus, minus one canonical
@@ -1008,7 +953,11 @@ def paragraph_near_dups(
     Scale shape: everything is the proven document path (banded LSH
     with the bucket cap, in-row verify, O(log n) star rounds); the
     paragraph explosion multiplies unit count, not algorithmic
-    risk.
+    risk. With ``max_bucket`` set, candidates, verify and star rounds
+    run at the DISTINCT-TEXT grain and expand to units at the end
+    (:func:`_contracted_unit_losers`; measured 239 → 86s at sf10 against
+    the unit-grain chain, OPTIMIZATION_r13.md §24). Uncapped, the
+    unit-grain chain runs: self-join candidates → verify → components.
 
     ``unit_key`` picks the unit-id minting: the default ``"hash"``
     (``xxhash64(doc_id, para_idx)``) works for ANY id type — including
@@ -1033,14 +982,7 @@ def paragraph_near_dups(
     ``"encoded"`` when ids permit, or swap the key for a
     struct(doc_id, para_idx) carried through CC — the CC loop is
     key-type-agnostic; only the min-key canonical convention assumes a
-    scalar orderable key.
-
-    ``contracted`` (r13 second session, default True): candidates,
-    verify and star rounds run at the DISTINCT-TEXT grain and expand
-    to units at the end (:func:`_contracted_unit_losers` — identical
-    output set, measured 239 → 86s at sf10; sf0.1 pays ~3s of extra
-    stages, re-measured per round in ``ab.paragraph_near_dups``);
-    False keeps the unit-grain composition for A/B re-measurement."""
+    scalar orderable key."""
     from rnadam_spark.operators.clustering import connected_components
 
     paras = docs.select(
@@ -1059,7 +1001,7 @@ def paragraph_near_dups(
         raise ValueError(f"unit_key must be 'hash' or 'encoded', got {unit_key!r}")
     units = paras.withColumn("_unit", key)
     u = units.select(F.col("_unit").alias("doc_id"), F.col("_ptext").alias("text"))
-    if contracted and max_bucket is not None:
+    if max_bucket is not None:
         # the contraction rides the grouped bucket machinery, which
         # needs the cap; uncapped callers keep the unit-grain chain
         losers = _contracted_unit_losers(u, threshold, max_bucket)
@@ -1097,7 +1039,7 @@ def _contracted_unit_losers(
     in a qualifying bucket, no cross verified edge) are their own
     family IFF their text has ≥ 1 shingle — the same condition under
     which their unit-grain intra pairs pass verify. Pinned set-equal
-    to the unit-grain chain by
+    to the unit-grain chain (composed from the public operators) by
     tests/test_dedup.py::test_paragraph_near_dups_contracted_matches
     and the gate row's full-chain DuckDB oracle."""
     from rnadam_spark.lineage import truncate_lineage

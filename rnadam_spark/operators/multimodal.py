@@ -24,7 +24,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -438,8 +438,8 @@ def audio_near_pairs(
 ) -> DataFrame:
     """(asset_a, asset_b, hamming): audio assets whose fingerprints
     differ in ≤ ``max_distance`` of 64 bits. Same plan as the image
-    pairs — disjoint bit bands, one band-keyed shuffle, exact
-    ``bit_count(xor)`` verify, aggregate-then-join bucket guard."""
+    pairs — disjoint bit bands, exact ``bit_count(xor)`` verify, and
+    the bucket cap and pair dedup at the distinct-hash grain."""
     return dhash_hamming_pairs(
         fingerprints,
         max_distance=max_distance,
@@ -673,7 +673,6 @@ def dhash_hamming_pairs(
     max_bucket: int | None = 10_000,
     id_col: str = "asset_id",
     hash_col: str = "dhash",
-    strategy: str | None = None,
 ) -> DataFrame:
     """(asset_a, asset_b, hamming): asset pairs whose dhashes differ in
     <= ``max_distance`` of 64 bits — near-duplicate images. The same
@@ -686,28 +685,14 @@ def dhash_hamming_pairs(
     and ``max_bucket`` capping degenerate bands (e.g. a constant-color
     thumbnail corpus hashing to all-zeros).
 
-    ``strategy`` picks how bucket pairs are expanded (default: "grouped"
-    when ``max_bucket`` is set, else "selfjoin" — the
-    lsh_candidate_pairs convention):
-
-    - "grouped" (r13 second session): identical hashes collapse to one
-      group before banding; the cap, the bit_count verify and the pair
-      dedup run at the group grain, then group pairs expand back to
-      asset pairs exactly once (see the inline comment for the
-      equality argument and the one-hash-per-id requirement).
-
-    - "inrow" (r13): members collect per bucket as a SORTED
-      (id, hash) struct array and each member pairs with the tail via
-      posexplode + slice — half the candidate fan-out of the
-      equi-self-join (the a<b filter runs after the join generated n²
-      rows; the tail slice only ever builds n(n−1)/2), and the banded
-      table feeds ONE consumer so no barrier is needed. Measured
-      54.1 → 15.4s at sf10 for the dhash extras row (the text-corpus
-      fake hashes band into ~900M candidate pairs; same pair set,
-      pinned by tests/test_multimodal.py).
-    - "selfjoin": streaming equi-self-join over the banded table,
-      barrier-materialized so the guard count and both join sides
-      never re-run the Arrow hash pass; tolerates unbounded buckets.
+    With ``max_bucket`` set, identical hashes collapse to one group
+    before banding; the cap, the bit_count verify and the pair dedup run
+    at the group grain, then group pairs expand back to asset pairs
+    exactly once (see the inline comment for the equality argument and
+    the one-hash-per-id requirement). This replaced an in-row per-bucket
+    expansion: sf10 4.46 vs 18.84s (OPTIMIZATION_r13.md §22). Uncapped
+    (``max_bucket=None``), the pairs come from a streaming equi-self-join
+    over the banded table, which tolerates unbounded buckets.
     """
     if max_distance < 0:
         raise ValueError("max_distance must be >= 0")
@@ -730,40 +715,36 @@ def dhash_hamming_pairs(
     base, extra = divmod(64, n_bands)
     widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
     offsets = [sum(widths[:i]) for i in range(n_bands)]
+
+    def band_structs(h: Column) -> Column:
+        return F.array(
+            *[
+                F.struct(
+                    F.lit(i).alias("band"),
+                    F.shiftrightunsigned(h, offsets[i])
+                    .bitwiseAND(F.lit((1 << widths[i]) - 1))
+                    .alias("val"),
+                )
+                for i in range(n_bands)
+            ]
+        )
+
     h = F.col(hash_col)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(i).alias("band"),
-                F.shiftrightunsigned(h, offsets[i])
-                .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                .alias("val"),
-            )
-            for i in range(n_bands)
-        ]
-    )
-    banded = hashes.select(
-        F.col(id_col), h.alias("_h"), F.explode(bands).alias("b")
-    ).select(id_col, "_h", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
-    if strategy is None:
-        strategy = "grouped" if max_bucket is not None else "selfjoin"
-    if strategy == "grouped":
+    if max_bucket is not None:
         # assets sharing an IDENTICAL hash collapse to one group before
         # banding (r13 second session — 86x at sf10 on the fake-path
         # corpus; identical payload bytes hash identically, so exact
         # dups always collapse): banding, the bucket cap (Σ cnt ≡ the
-        # asset count the other strategies test) and the pair dedup run
+        # bucket's asset count) and the pair dedup run
         # at the GROUP grain, bit_count evaluates once per distinct
         # hash pair instead of once per asset pair, intra-group pairs
         # are hamming 0 by construction, and group pairs expand back to
         # asset pairs exactly once — the asset-level distinct
-        # disappears. Pair set identical to "inrow"/"selfjoin" (pinned
-        # by tests/test_multimodal.py + an sf10 exceptAll run) PROVIDED
-        # each id carries ONE hash row, which every in-repo producer
-        # (dhash_assets, audio_fingerprint, video frame packing)
-        # guarantees. Default by measurement: see ab.dhash.
-        if max_bucket is None:
-            raise ValueError("grouped pair expansion requires max_bucket")
+        # disappears. Pair set identical to asset-level banding with the
+        # same cap (pinned by tests/test_multimodal.py + an sf10
+        # exceptAll run) PROVIDED each id carries ONE hash row, which
+        # every in-repo producer (dhash_assets, audio_fingerprint, video
+        # frame packing) guarantees.
         from rnadam_spark.lineage import truncate_lineage
 
         groups = truncate_lineage(
@@ -777,18 +758,9 @@ def dhash_hamming_pairs(
             )
         )
         members = groups.select("gid", "ids")
-        gbands = F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("band"),
-                    F.shiftrightunsigned(F.col("_h"), offsets[i])
-                    .bitwiseAND(F.lit((1 << widths[i]) - 1))
-                    .alias("val"),
-                )
-                for i in range(n_bands)
-            ]
-        )
-        gb = groups.select("gid", "cnt", "_h", F.explode(gbands).alias("b")).select(
+        gb = groups.select(
+            "gid", "cnt", "_h", F.explode(band_structs(F.col("_h"))).alias("b")
+        ).select(
             "gid", "cnt", "_h", F.col("b.band").alias("band"), F.col("b.val").alias("val")
         )
         buckets = (
@@ -853,50 +825,9 @@ def dhash_hamming_pairs(
             )
         )
         return cross_assets.union(intra_assets)
-    if strategy == "inrow":
-        if max_bucket is None:
-            raise ValueError("in-row pair expansion requires max_bucket")
-        g = (
-            banded.groupBy("band", "val")
-            .agg(
-                F.sort_array(
-                    F.collect_set(
-                        F.struct(F.col(id_col).alias("i"), F.col("_h").alias("h"))
-                    )
-                ).alias("ms")
-            )
-            .filter((F.size("ms") >= 2) & (F.size("ms") <= max_bucket))
-        )
-        e1 = g.select(F.col("ms"), F.posexplode("ms").alias("i", "a"))
-        return (
-            e1.select(
-                F.col("a.i").alias("asset_a"),
-                F.col("a.h").alias("_ha"),
-                F.explode(
-                    F.slice("ms", F.col("i") + 2, F.size("ms") - F.col("i") - 1)
-                ).alias("b"),
-            )
-            .select(
-                "asset_a",
-                F.col("b.i").alias("asset_b"),
-                F.bit_count(F.col("_ha").bitwiseXOR(F.col("b.h")))
-                .cast("int")
-                .alias("hamming"),
-            )
-            .filter(F.col("hamming") <= max_distance)
-            .distinct()
-        )
-    if strategy != "selfjoin":
-        raise ValueError(f"unknown pair strategy: {strategy!r}")
-    if max_bucket is not None:
-        from rnadam_spark.lineage import truncate_lineage
-        from rnadam_spark.operators.guards import drop_oversize_buckets
-
-        # materialize the slim banded table so the guard's count and
-        # both self-join sides never re-run the upstream hash pipeline
-        # (which may include the Arrow-batched Python dHash pass)
-        banded = truncate_lineage(banded)
-        banded = drop_oversize_buckets(banded, ["band", "val"], max_bucket)
+    banded = hashes.select(
+        F.col(id_col), h.alias("_h"), F.explode(band_structs(h)).alias("b")
+    ).select(id_col, "_h", F.col("b.band").alias("band"), F.col("b.val").alias("val"))
     a, b = banded.alias("a"), banded.alias("b")
     return (
         a.join(b, ["band", "val"])

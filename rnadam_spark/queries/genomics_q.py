@@ -505,7 +505,7 @@ def em_state(
 
 
 @query("em_quantify", oracle=_EM5_ORACLE)
-def em_quantify(spark: SparkSession, sf_dir: str, skew_safe: bool = False) -> DataFrame:
+def em_quantify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship: the full Sailfish EM pipeline (Quantify.scala:42-127)
     driven over the documents table — each document doubles as a
     "transcript" (its text is the reference sequence) and as its own
@@ -542,7 +542,6 @@ def em_quantify(spark: SparkSession, sf_dir: str, skew_safe: bool = False) -> Da
         k=K,
         max_iterations=5,
         calibrate_length_bias=False,
-        skew_safe=skew_safe,
     )
     return result.select("t_id", hround("abundance", 8).alias("abundance"))
 

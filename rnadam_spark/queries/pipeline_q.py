@@ -127,12 +127,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     same graph with a recursive CTE (min label over reachability) —
     feasible at oracle scale, while the star rounds are the 100 TB path.
 
-    r13 second session: the star rounds run over the CONTRACTED
-    signature-group graph (``dedup.lsh_near_dup_components`` — groups
-    are cliques, so doc components are the expanded group components;
-    10.6× fewer edges at sf10, 52–66s → ~13s; set-equal pinned by
-    test_lsh_components_match_pairs_cc + this oracle, and
-    ``ab.dedup_clusters`` re-measures both forms every round)."""
+    The star rounds run over the CONTRACTED signature-group graph
+    (``dedup.lsh_near_dup_components`` — groups are cliques, so doc
+    components are the expanded group components; 10.6× fewer edges at
+    sf10, 52–66s → ~13s, OPTIMIZATION_r13.md §23; set-equal to
+    components over ``lsh_candidate_pairs``, pinned by
+    test_lsh_components_match_pairs_cc + this oracle)."""
     cc = dedup.lsh_near_dup_components(
         load_table(spark, sf_dir, "documents", widen=True), max_bucket=LSH_MAX_BUCKET
     )

@@ -50,6 +50,14 @@ def test_converges_within_log_rounds(spark):
     assert got == {i: 1 for i in range(1, 65)}
 
 
+def test_round_cap_without_fixpoint_raises(spark):
+    # the 64-node chain needs 7 rounds to reach its fixpoint; a cap of 3
+    # must fail loudly instead of returning unconverged labels
+    pairs = [(i, i + 1) for i in range(1, 64)]
+    with pytest.raises(RuntimeError, match="max_rounds=3"):
+        _cc(spark, pairs, max_rounds=3)
+
+
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
     # same components with reliable checkpointing into a directory
     from rnadam_spark.operators.clustering import connected_components

@@ -2,9 +2,13 @@
 (the driver tables have no duplicates, so correctness of the *positive*
 path is pinned here)."""
 
+import itertools
+from collections import defaultdict
+
 from pyspark.sql import functions as F
 
 from rnadam_spark.operators import dedup
+from rnadam_spark.operators.clustering import connected_components
 
 BASE = "the quick brown fox jumps over the lazy dog and runs far away into the woods tonight"
 NEAR = BASE.replace("lazy", "sleepy")  # one-token perturbation
@@ -47,24 +51,35 @@ def test_lsh_bucket_cap(spark):
     assert dedup.lsh_candidate_pairs(docs).count() == 45  # 10 choose 2
 
 
+def _ref_lsh_pairs(docs, max_bucket):
+    """Driver-side banded-LSH reference: group the collected
+    (band, band_sig) rows into buckets, keep buckets of 2..max_bucket
+    docs (no upper bound when None), emit sorted pairs."""
+    buckets = defaultdict(set)
+    for r in dedup.lsh_band_sigs(dedup.minhash_signatures(docs)).collect():
+        buckets[(r.band, r.band_sig)].add(r.doc_id)
+    pairs = set()
+    for ds in buckets.values():
+        if len(ds) >= 2 and (max_bucket is None or len(ds) <= max_bucket):
+            pairs.update(itertools.combinations(sorted(ds), 2))
+    return pairs
+
+
+def _pair_rows(df):
+    return [(r.doc_a, r.doc_b) for r in df.collect()]
+
+
 def test_lsh_pair_strategies_agree(spark):
-    # both expansion strategies emit the identical capped pair set
+    # the capped and the uncapped forms emit the reference pair sets
     rows = [(i, BASE) for i in range(4)] + [(10 + i, BASE + f" extra{i}") for i in range(4)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    inrow = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(docs, max_bucket=6, strategy="inrow").collect()
-    }
-    selfjoin = {
-        (r.doc_a, r.doc_b)
-        for r in dedup.lsh_candidate_pairs(docs, max_bucket=6, strategy="selfjoin").collect()
-    }
-    assert inrow == selfjoin and inrow
+    capped = set(_pair_rows(dedup.lsh_candidate_pairs(docs, max_bucket=6)))
+    assert capped == _ref_lsh_pairs(docs, 6) and capped
+    uncapped = set(_pair_rows(dedup.lsh_candidate_pairs(docs)))
+    assert uncapped == _ref_lsh_pairs(docs, None) and uncapped
 
 
 def test_lsh_grouped_strategy_agrees(spark):
-    import pytest
-
     # exact dups (identical signatures) + near dups (signature differs,
     # band collides) + a loner: exercises intra-group, cross-group and
     # group-of-one paths of the grouped expansion
@@ -75,27 +90,53 @@ def test_lsh_grouped_strategy_agrees(spark):
     )
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
     for cap in (6, 100):
-        inrow = {
-            (r.doc_a, r.doc_b)
-            for r in dedup.lsh_candidate_pairs(docs, max_bucket=cap, strategy="inrow").collect()
-        }
-        grouped_df = dedup.lsh_candidate_pairs(docs, max_bucket=cap, strategy="grouped")
-        grouped = [(r.doc_a, r.doc_b) for r in grouped_df.collect()]
+        grouped = _pair_rows(dedup.lsh_candidate_pairs(docs, max_bucket=cap))
+        ref = _ref_lsh_pairs(docs, cap)
         # same SET, and no duplicate rows without a doc-level distinct
-        assert set(grouped) == inrow and len(grouped) == len(inrow)
+        assert set(grouped) == ref and len(grouped) == len(ref), cap
     # the cap counts DOCS (Σ cnt), not distinct signatures: 4 identical
     # docs + 1 near-dup in one bucket = 5 docs / ≤3 groups — a cap of 4
-    # must drop that bucket in BOTH strategies
+    # must drop that bucket
     rows5 = [(i, BASE) for i in range(4)] + [(9, BASE + " tail")]
     docs5 = spark.createDataFrame(rows5, ["doc_id", "text"])
-    for strat in ("inrow", "grouped"):
-        got = {
-            (r.doc_a, r.doc_b)
-            for r in dedup.lsh_candidate_pairs(docs5, max_bucket=4, strategy=strat).collect()
-        }
-        assert all(9 not in p for p in got), strat
-    with pytest.raises(ValueError):
-        dedup.lsh_candidate_pairs(docs, strategy="grouped")  # needs max_bucket
+    got = set(_pair_rows(dedup.lsh_candidate_pairs(docs5, max_bucket=4)))
+    assert got == _ref_lsh_pairs(docs5, 4)
+    assert all(9 not in p for p in got)
+    # max_bucket=None takes the band self-join
+    selfjoin = _pair_rows(dedup.lsh_candidate_pairs(docs))
+    ref = _ref_lsh_pairs(docs, None)
+    assert set(selfjoin) == ref and len(selfjoin) == len(ref)
+
+
+def _ref_paragraph_near_dups(
+    docs, threshold=0.8, max_bucket=1000, min_chars=40, split_pattern=r"\n{2,}",
+    unit_key="hash",
+):
+    """The unit-grain chain composed from the public operators: units
+    minted as in ``paragraph_near_dups`` → candidates → exact-Jaccard
+    verify → components; every non-root unit is a loser."""
+    paras = docs.select(
+        "doc_id",
+        F.posexplode(F.split("text", split_pattern)).alias("para_idx", "_ptext"),
+    ).filter(F.length(F.trim("_ptext")) >= min_chars)
+    if unit_key == "encoded":
+        key = F.col("doc_id").cast("bigint") * F.lit(1 << 20).cast("bigint") + F.col(
+            "para_idx"
+        )
+    else:
+        key = F.xxhash64("doc_id", "para_idx")
+    units = paras.withColumn("_unit", key)
+    u = units.select(F.col("_unit").alias("doc_id"), F.col("_ptext").alias("text"))
+    cand = dedup.lsh_candidate_pairs(u, max_bucket=max_bucket)
+    ver = dedup.verify_pairs(cand, u, threshold=threshold)
+    comp = connected_components(ver)
+    losers = comp.filter(F.col("node") != F.col("component")).select(
+        F.col("node").alias("_unit")
+    )
+    return {
+        (r.doc_id, r.para_idx)
+        for r in units.join(losers, "_unit", "leftsemi").collect()
+    }
 
 
 def test_paragraph_near_dups_contracted_matches(spark, sf_dir):
@@ -111,30 +152,18 @@ def test_paragraph_near_dups_contracted_matches(spark, sf_dir):
     for uk in ("encoded", "hash"):
         got = {
             (r.doc_id, r.para_idx)
-            for r in dedup.paragraph_near_dups(
-                docs, max_bucket=100, unit_key=uk, contracted=True
-            ).collect()
+            for r in dedup.paragraph_near_dups(docs, max_bucket=100, unit_key=uk).collect()
         }
-        ref = {
-            (r.doc_id, r.para_idx)
-            for r in dedup.paragraph_near_dups(
-                docs, max_bucket=100, unit_key=uk, contracted=False
-            ).collect()
-        }
+        ref = _ref_paragraph_near_dups(docs, max_bucket=100, unit_key=uk)
         assert got == ref and got, uk
     # exact-dup paragraphs SHORTER than the shingle k have unit-grain
-    # Jaccard 0 (empty shingle sets) and must not form a family on
-    # either path — the contracted form's len >= k guard
+    # Jaccard 0 (empty shingle sets) and must not form a family — the
+    # contracted form's len >= k guard
     short = spark.createDataFrame(
         [(1, "abc\n\nabc"), (2, "abc")], ["doc_id", "text"]
     )
-    for c in (True, False):
-        assert (
-            dedup.paragraph_near_dups(
-                short, max_bucket=100, min_chars=2, contracted=c
-            ).count()
-            == 0
-        ), c
+    assert dedup.paragraph_near_dups(short, max_bucket=100, min_chars=2).count() == 0
+    assert _ref_paragraph_near_dups(short, max_bucket=100, min_chars=2) == set()
     # and on a real corpus with the registered row's parameters
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     kw = dict(
@@ -146,13 +175,15 @@ def test_paragraph_near_dups_contracted_matches(spark, sf_dir):
     )
     got = {
         (r.doc_id, r.para_idx)
-        for r in dedup.paragraph_near_dups(docs, contracted=True, **kw).collect()
+        for r in dedup.paragraph_near_dups(docs, **kw).collect()
     }
-    ref = {
-        (r.doc_id, r.para_idx)
-        for r in dedup.paragraph_near_dups(docs, contracted=False, **kw).collect()
-    }
+    ref = _ref_paragraph_near_dups(docs, **kw)
     assert got == ref and len(got) > 10
+
+
+def _ref_components(docs, max_bucket):
+    pairs = dedup.lsh_candidate_pairs(docs, max_bucket=max_bucket)
+    return {(r.node, r.component) for r in connected_components(pairs).collect()}
 
 
 def test_lsh_components_match_pairs_cc(spark, sf_dir):
@@ -173,13 +204,7 @@ def test_lsh_components_match_pairs_cc(spark, sf_dir):
         (r.node, r.component)
         for r in dedup.lsh_near_dup_components(docs, max_bucket=100).collect()
     }
-    ref = {
-        (r.node, r.component)
-        for r in dedup.lsh_near_dup_components(
-            docs, max_bucket=100, contracted=False
-        ).collect()
-    }
-    assert got == ref and got
+    assert got == _ref_components(docs, 100) and got
     assert (20, 20) in got and (21, 20) in got  # the isolated clique
     assert all(n != 30 for n, _ in got)  # the loner pairs with nothing
     # and on a real corpus: identical (node, component) sets
@@ -188,13 +213,7 @@ def test_lsh_components_match_pairs_cc(spark, sf_dir):
         (r.node, r.component)
         for r in dedup.lsh_near_dup_components(docs, max_bucket=100).collect()
     }
-    ref = {
-        (r.node, r.component)
-        for r in dedup.lsh_near_dup_components(
-            docs, max_bucket=100, contracted=False
-        ).collect()
-    }
-    assert got == ref and len(got) > 50
+    assert got == _ref_components(docs, 100) and len(got) > 50
 
 
 def test_ngram_gram_df_cap(spark):
@@ -329,7 +348,6 @@ def test_verify_then_cluster_pipeline(spark, sf_dir):
     # the full three-stage near-dup pipeline composes: candidates ->
     # exact-Jaccard verify -> connected components; every cluster member
     # must come from a verified pair
-    from rnadam_spark.operators.clustering import connected_components
     from rnadam_spark.operators.dedup import lsh_candidate_pairs, verify_pairs
     from rnadam_spark.sources.tables import load_table
 
@@ -625,7 +643,7 @@ def test_verify_pairs_size_prefilter_exact(spark):
 def test_components_max_bucket_none_raises(spark):
     """r14 (ADVICE fix): contracted components with max_bucket=None
     used to return an EMPTY result (`total <= None` is null) — now it
-    raises like lsh_candidate_pairs' grouped guard."""
+    raises."""
     import pytest
 
     docs = spark.createDataFrame([(1, "abcd" * 10)], ["doc_id", "text"])

@@ -1,3 +1,6 @@
+import itertools
+from collections import defaultdict
+
 from rnadam_spark.operators import multimodal as mm
 
 
@@ -324,10 +327,33 @@ def test_dhash_pairs_full_duckdb_cross_check(spark):
     assert got == want and got
 
 
+def _ref_dhash_pairs(rows, max_distance, max_bucket):
+    """Driver-side pigeonhole reference for ``dhash_hamming_pairs``: the
+    operator's max_distance + 1 disjoint bit bands, buckets of
+    2..max_bucket assets per (band, value), pairs within max_distance
+    by ``bin(a ^ b).count("1")`` over the unsigned 64-bit hashes."""
+    n_bands = max_distance + 1
+    base, extra = divmod(64, n_bands)
+    widths = [base + (1 if i < extra else 0) for i in range(n_bands)]
+    offsets = [sum(widths[:i]) for i in range(n_bands)]
+    unsigned = {aid: h & ((1 << 64) - 1) for aid, h in rows}
+    buckets = defaultdict(set)
+    for aid, h in unsigned.items():
+        for i in range(n_bands):
+            buckets[(i, (h >> offsets[i]) & ((1 << widths[i]) - 1))].add(aid)
+    pairs = set()
+    for ids in buckets.values():
+        if 2 <= len(ids) <= max_bucket:
+            for a, b in itertools.combinations(sorted(ids), 2):
+                d = bin(unsigned[a] ^ unsigned[b]).count("1")
+                if d <= max_distance:
+                    pairs.add((a, b, d))
+    return sorted(pairs)
+
+
 def test_dhash_pairs_strategies_agree(spark):
-    # r13: the in-row posexplode+slice expansion must emit EXACTLY the
-    # self-join's pair set (same ids, same hamming), hot buckets capped
-    # identically on both paths
+    # the group-grain expansion must emit EXACTLY the reference pair set
+    # (same ids, same hamming, no duplicate rows), hot buckets capped
     import random
 
     import pytest
@@ -347,47 +373,20 @@ def test_dhash_pairs_strategies_agree(spark):
                 v ^= 1 << b
             rows.append((aid, as_signed(v)))
             aid += 1
-    # a degenerate all-zeros farm that the cap must drop on BOTH paths
+    # a degenerate all-zeros farm that the cap must drop (Σcnt cap
+    # semantics: 12 identical hashes collapse to one group)
     rows += [(aid + i, 0) for i in range(12)]
     hashes = spark.createDataFrame(rows, "asset_id BIGINT, dhash BIGINT")
-    inrow = sorted(
-        map(tuple, mm.dhash_hamming_pairs(hashes, max_bucket=10).collect())
-    )
-    selfjoin = sorted(
-        map(
-            tuple,
-            mm.dhash_hamming_pairs(hashes, max_bucket=10, strategy="selfjoin").collect(),
-        )
-    )
-    assert inrow == selfjoin and len(inrow) > 20
-    # the grouped default (sorted above) matches both explicit forms —
-    # including intra-group hamming-0 pairs from duplicate hashes and
-    # the Σcnt cap semantics exercised by the all-zeros farm
-    explicit_inrow = sorted(
-        map(
-            tuple,
-            mm.dhash_hamming_pairs(hashes, max_bucket=10, strategy="inrow").collect(),
-        )
-    )
-    assert explicit_inrow == inrow
+    got = sorted(map(tuple, mm.dhash_hamming_pairs(hashes, max_bucket=10).collect()))
+    assert got == _ref_dhash_pairs(rows, 4, 10) and len(got) > 20
     # duplicate hashes below the cap: intra pairs surface at hamming 0
-    dup = spark.createDataFrame(
-        [(0, 7), (1, 7), (2, 7), (3, 6)], "asset_id BIGINT, dhash BIGINT"
-    )
-    for strat in ("grouped", "inrow"):
-        got = sorted(
-            map(
-                tuple,
-                mm.dhash_hamming_pairs(dup, max_bucket=10, strategy=strat).collect(),
-            )
-        )
-        assert got == [(0, 1, 0), (0, 2, 0), (0, 3, 1), (1, 2, 0), (1, 3, 1), (2, 3, 1)], strat
+    dup_rows = [(0, 7), (1, 7), (2, 7), (3, 6)]
+    dup = spark.createDataFrame(dup_rows, "asset_id BIGINT, dhash BIGINT")
+    got = sorted(map(tuple, mm.dhash_hamming_pairs(dup, max_bucket=10).collect()))
+    assert got == [(0, 1, 0), (0, 2, 0), (0, 3, 1), (1, 2, 0), (1, 3, 1), (2, 3, 1)]
+    assert got == _ref_dhash_pairs(dup_rows, 4, 10)
     with pytest.raises(ValueError):
-        mm.dhash_hamming_pairs(hashes, strategy="nope")
-    with pytest.raises(ValueError):
-        mm.dhash_hamming_pairs(hashes, max_bucket=None, strategy="inrow")
-    with pytest.raises(ValueError):
-        mm.dhash_hamming_pairs(hashes, max_bucket=None, strategy="grouped")
+        mm.dhash_hamming_pairs(hashes, max_distance=-1)
 
 
 def _full_bmp(width=16, height=12, seed=5):

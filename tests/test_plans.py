@@ -330,15 +330,10 @@ def test_bucket_cap_guards_no_window(spark, sf_dir):
         [(i, (i * 2654435761) % (1 << 63)) for i in range(20)],
         "asset_id BIGINT, dhash BIGINT",
     )
-    # r13: the grouped DEFAULT's cap rides the group-grain collect
-    # aggregate (sum(cnt) <= max_bucket — no Window and no second
-    # pass); the selfjoin strategy keeps the
-    # aggregate-then-broadcast-anti-join guard
+    # r13: the grouped form's cap rides the group-grain collect
+    # aggregate (sum(cnt) <= max_bucket — no Window and no second pass)
     df = multimodal.dhash_hamming_pairs(hashes, max_bucket=5)
     assert not has_window(df)
-    df = multimodal.dhash_hamming_pairs(hashes, max_bucket=5, strategy="selfjoin")
-    assert not has_window(df)
-    assert has_broadcast_join(df)
 
 
 def test_round7_operators_plan_contracts(spark, sf_dir):

@@ -2,7 +2,6 @@
 reference suite (rice-core/.../QuantifySuite.scala — hand-computed
 expected values, SURVEY.md §5 layer 1)."""
 
-import pytest
 from pyspark.sql import functions as F
 
 from rnadam_spark.algorithms import quantify as Q
@@ -25,10 +24,8 @@ def test_map_kmers_to_classes(spark):
     assert got == {"1": 80, "2": 60, "3": 75}
 
 
-@pytest.mark.parametrize("skew_safe", [False, True])
-def test_initialize_em(spark, skew_safe):
-    # QuantifySuite.scala:63-98; both the window and the skew-safe
-    # groupBy+join formulations must produce the goldens
+def test_initialize_em(spark):
+    # QuantifySuite.scala:63-98
     class_counts = spark.createDataFrame([("1", 45), ("2", 52), ("3", 49)], ["class_id", "cnt"])
     members = (
         [("1", t) for t in "abcde"]
@@ -36,7 +33,7 @@ def test_initialize_em(spark, skew_safe):
         + [("3", t) for t in "abcdefg"]
     )
     class_transcripts = spark.createDataFrame(members, CLASS_TRANSCRIPTS)
-    rows = Q.initialize_em(class_counts, class_transcripts, skew_safe=skew_safe).collect()
+    rows = Q.initialize_em(class_counts, class_transcripts).collect()
     by_class = {}
     for r in rows:
         by_class.setdefault(r.class_id, []).append(r.alpha)
@@ -45,15 +42,14 @@ def test_initialize_em(spark, skew_safe):
     assert len(by_class["3"]) == 7 and all(approx(a, 7.0) for a in by_class["3"])
 
 
-@pytest.mark.parametrize("skew_safe", [False, True])
-def test_e_step(spark, skew_safe):
-    # QuantifySuite.scala:100-241; window and skew-safe paths
+def test_e_step(spark):
+    # QuantifySuite.scala:100-241
     weights = [("a", 2.0, [1, 3, 5, 6]), ("b", 3.0, [2, 4, 5]), ("c", 4.0, [1, 2, 5, 6, 7]), ("d", 5.0, [1, 2, 3])]
     mu = spark.createDataFrame([(t, m) for t, m, _ in weights], ["t_id", "mu"])
     edges = spark.createDataFrame(
         [(str(c), t) for t, _, cs in weights for c in cs], CLASS_TRANSCRIPTS
     )
-    rows = Q.e_step(mu, edges, skew_safe=skew_safe).collect()
+    rows = Q.e_step(mu, edges).collect()
     got = {(r.class_id, r.t_id): r.alpha for r in rows}
     expected = {
         ("1", "a"): 2 / 11, ("1", "c"): 4 / 11, ("1", "d"): 5 / 11,

@@ -135,20 +135,55 @@ def test_quantify_reliable_checkpoint_matches_local(spark, tmp_path):
     assert any(os.scandir(tmp_path / "ckpt"))
 
 
-def test_quantify_skew_safe_matches_window_on_mega_class(spark):
-    # the skew crossover shape: one equivalence class spans EVERY
-    # transcript (the hot key that funnels the window form into one
-    # task at scale) — both E-step formulations must produce the same
-    # abundances to float tolerance
-    t_len = [500, 300, 200, 400]
-    abundances = [0.4, 0.3, 0.1, 0.2]
+def _python_em(class_counts, members, t_len, k, max_iterations):
+    """Driver-side Sailfish EM mirroring the engine's schedule: α₀ =
+    cnt/|s_j|; rel_p_j = cnt_j/Σcnt; M-step µ_i = Σ_j α·rel_p_j /
+    (t_len_i − k + 1); E-step α = µ_i / Σ_{t∈s_j} µ_t; one
+    normalization at the end. Classes without counts drop, as in the
+    engine's edge table."""
+    total = sum(class_counts.values())
+    rel_p = {c: n / total for c, n in class_counts.items()}
+    edges = {c: ts for c, ts in members.items() if c in class_counts}
+
+    def m_step(alpha):
+        sums = {}
+        for (c, t), a in alpha.items():
+            sums[t] = sums.get(t, 0.0) + a * rel_p[c]
+        return {t: x / (t_len[t] - k + 1) for t, x in sums.items()}
+
+    mu = m_step({(c, t): class_counts[c] / len(ts) for c, ts in edges.items() for t in ts})
+    for _ in range(max_iterations):
+        alpha = {}
+        for c, ts in edges.items():
+            class_sum = sum(mu[t] for t in ts)
+            for t in ts:
+                alpha[(c, t)] = mu[t] / class_sum
+        mu = m_step(alpha)
+    z = sum(mu.values())
+    return {t: x / z for t, x in mu.items()}
+
+
+def test_quantify_mega_class_matches_python_em(spark):
+    # the skew shape: one equivalence class spans EVERY one of 600
+    # transcripts (the hot key the class_id window places in one task),
+    # next to singleton classes, so the E-step really redistributes;
+    # the window-form EM must match a driver-side EM to 1e-9
+    import random
+
+    from rnadam_spark.algorithms.quantify import count_read_kmers, map_kmers_to_classes
+
+    rng = random.Random(23)
+    n = 600
+    t_len = [rng.randrange(100, 300) for _ in range(n)]
+    weights = [rng.random() + 0.1 for _ in range(n)]
+    abundances = [w / sum(weights) for w in weights]
     transcripts, names, kmer_map, class_map = gen.generate_independent_transcripts(
         20, t_len, seed=21
     )
-    reads = gen.generate_reads(transcripts, abundances, 3000, 75, seed=22)
-    # collapse most k-mers into one mega-class spanning every
-    # transcript + keep singleton classes so group sizes are skewed
-    # (class ids are strings, matching the engine's content-hash ids)
+    reads = gen.generate_reads(transcripts, abundances, 6000, 75, seed=22)
+    # collapse a third of the transcripts' k-mers into the mega-class
+    # and keep the rest as singleton classes (class ids are strings,
+    # matching the engine's content-hash ids)
     mega_kmer_map = {
         km: "mega" if int(cls) % 3 == 0 else cls for km, cls in kmer_map.items()
     }
@@ -159,16 +194,28 @@ def test_quantify_skew_safe_matches_window_on_mega_class(spark):
     reads_df, kmer_df, class_df, t_df = _dataframes(
         spark, transcripts, names, mega_kmer_map, mega_class_map, reads
     )
-    kwargs = dict(
-        k=20, max_iterations=5, calibrate_kmer_bias=False, calibrate_length_bias=False
+    max_iterations = 10
+    result = quantify(
+        reads_df, kmer_df, class_df, t_df, k=20, max_iterations=max_iterations,
+        calibrate_kmer_bias=False, calibrate_length_bias=False,
     )
-    window = quantify(reads_df, kmer_df, class_df, t_df, skew_safe=False, **kwargs)
-    safe = quantify(reads_df, kmer_df, class_df, t_df, skew_safe=True, **kwargs)
-    got_w = {r.t_id: r.abundance for r in window.select("t_id", "abundance").collect()}
-    got_s = {r.t_id: r.abundance for r in safe.select("t_id", "abundance").collect()}
-    assert set(got_w) == set(got_s) and got_w
-    for t in got_w:
-        assert abs(got_w[t] - got_s[t]) < 1e-9, (t, got_w[t], got_s[t])
+    got = {r.t_id: r.abundance for r in result.select("t_id", "abundance").collect()}
+
+    class_counts = {
+        r.class_id: r.cnt
+        for r in map_kmers_to_classes(count_read_kmers(reads_df, 20), kmer_df).collect()
+    }
+    assert "mega" in class_counts
+    want = _python_em(
+        class_counts,
+        mega_class_map,
+        {names[i]: len(transcripts[i]) for i in range(n)},
+        20,
+        max_iterations,
+    )
+    assert set(got) == set(want) and len(got) == n
+    for t in want:
+        assert abs(got[t] - want[t]) < 1e-9, (t, got[t], want[t])
 
 
 def test_quantify_bit_identical_across_timers_and_edge_layout(spark, monkeypatch):
