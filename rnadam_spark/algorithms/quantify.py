@@ -29,6 +29,13 @@ loop truncates µ's lineage every ``CHECKPOINT_EVERY`` iterations; after
 it, µ is materialized once as a single partition sorted by t_id, so the
 normalization and length-calibration sums add in the same order
 whatever the plan shape or edge layout.
+
+The loop stops at its exact fixed point (:func:`em_iterations`): when
+no class has more than one edge row — every index the reference's
+(transcript, multiplicity) class key builds — the E-step's α is
+µ_i / µ_i = 1.0 exactly from iteration 1 on, so iteration 1 already
+yields the µ every later iteration would recompute, and the loop runs
+one iteration instead of ``max_iterations``.
 """
 
 from __future__ import annotations
@@ -58,6 +65,27 @@ def edge_partitions(n_rows: int) -> int:
     every EM iteration from paying dozens of near-empty tasks per stage
     on small inputs."""
     return max(1, -(-n_rows // EDGE_ROWS_PER_PART))
+
+
+def em_iterations(edges: DataFrame, max_iterations: int) -> int:
+    """How many EM iterations ``em_loop`` runs over ``edges``: one when
+    no class has more than one edge row, ``max_iterations`` otherwise
+    (and never more than ``max_iterations``).
+
+    Exact, not approximate: for a one-member class the E-step divides a
+    finite non-zero µ_i by a window sum of that one value, and
+    ``x / x == 1.0`` in IEEE arithmetic, so every iteration's M-step
+    sums the same ``1.0 · rel_p`` terms through the same plan over the
+    same cached partitioning and reproduces iteration 1's µ. One
+    iteration still runs — α₀ is ``cnt / |class|``, not 1, so µ₁ ≠ µ₀,
+    and a zero µ must still raise ``DIVIDE_BY_ZERO`` in that E-step.
+    Duplicate (class_id, t_id) rows count as members, as they do in the
+    α₀ window. The probe is one aggregate over the class_id-partitioned
+    edge cache, skipped when ``max_iterations`` ≤ 1."""
+    if max_iterations <= 1:
+        return max_iterations
+    largest = edges.groupBy("class_id").count().agg(F.max("count")).first()[0]
+    return 1 if largest is None or largest <= 1 else max_iterations
 
 
 def count_read_kmers(reads: DataFrame, k: int) -> DataFrame:
@@ -309,7 +337,16 @@ def em_loop(
     wall time in the generic state build, not this loop) hand their
     state straight to the same iterations, so the gate's one-iteration
     twin (``em_two_steps``, via quantify) still certifies the exact
-    code path the flagship runs for 5.
+    code path the flagship runs.
+
+    The loop runs :func:`em_iterations` iterations: ``max_iterations``
+    when some class has two or more edge rows, and ONE when every class
+    has a single member. Such an EM sits at its fixed point after
+    iteration 1 — the E-step's α is µ_i / µ_i = 1.0 exactly, so each
+    later iteration sums the same terms in the same plan and returns
+    the same µ bit for bit — and iterations 2..N would only re-run it.
+    The price on multi-member input is the probe: one more aggregate
+    job before the loop.
 
     ``class_counts`` is (class_id, cnt); ``edges`` is the ENRICHED
     membership table (class_id, t_id, rel_p, t_len, ...), pre-partitioned
@@ -326,7 +363,7 @@ def em_loop(
     mu = m_step(alpha, None, k, None, normalize=False)
     mu = ins.timed(timers, ins.INIT_EM, mu)
 
-    for i in range(max_iterations):
+    for i in range(em_iterations(edges, max_iterations)):
         # mu is n_transcripts rows: truncating the whole EM lineage here
         # is near-free (the reference never truncated — its plan depth
         # grew linearly with iterations). Cadence is a measured trade:

@@ -510,24 +510,25 @@ def em_quantify(spark: SparkSession, sf_dir: str) -> DataFrame:
     driven over the documents table — each document doubles as a
     "transcript" (its text is the reference sequence) and as its own
     "read", the class structure is derived with the Index semantics
-    (equal-count signatures, content-hash IDs), and 5 EM iterations
-    redistribute class counts into per-document abundances. State is
-    built by :func:`em_state` (fused two-scan construction — see its
-    docstring for the r11 attribution and design rationale) and the
-    iterations run in :func:`algorithms.quantify.em_loop`, the exact
-    loop the one-iteration gate twin (``em_two_steps``) certifies.
+    (equal-count signatures, content-hash IDs), and up to 5 EM
+    iterations redistribute class counts into per-document abundances.
+    State is built by :func:`em_state` (fused two-scan construction —
+    see its docstring for the r11 attribution and design rationale) and
+    the iterations run in :func:`algorithms.quantify.em_loop`, the loop
+    the one-iteration gate twin (``em_two_steps``) certifies.
 
-    Oracle (new round 6 — previously rows-only): with this dataset
-    mapping every class is keyed by md5(doc_id:cnt), so each class has
-    exactly ONE member transcript; the E-step fraction-of-group is
-    therefore identically 1 from iteration 1 on, and iterations 2..5
-    all sit at the closed-form fixed point
+    Oracle: with this dataset mapping every class is keyed by
+    md5(doc_id:cnt), so each class has exactly ONE member transcript;
+    the E-step fraction-of-group is therefore exactly 1 from iteration
+    1 on, and the EM sits at the closed-form fixed point
     µ_t ∝ (Σ_{{classes of t}} rel_p) / (len_t − k + 1), which IS
-    DuckDB-expressible. The oracle verifies the exact 5-iteration
-    driver output (bit-equal at 8dp at sf0.001 and sf0.01, checked
-    before registering); the genuinely multi-member EM dynamics — where
-    the window E-step does real redistribution — stay hash-verified by
-    ``em_two_steps``, whose class construction spans documents.
+    DuckDB-expressible. ``em_loop`` detects that every class has one
+    member (:func:`algorithms.quantify.em_iterations`) and stops there,
+    after one iteration instead of 5: iterations 2..5 would reproduce
+    the same µ bit for bit. The oracle checks that fixed point at 8dp;
+    the genuinely multi-member EM dynamics — where the window E-step
+    does real redistribution — stay hash-verified by ``em_two_steps``,
+    whose class construction spans documents.
     """
     from rnadam_spark.algorithms.quantify import em_loop
 

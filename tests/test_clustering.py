@@ -80,6 +80,19 @@ def test_connected_components_reliable_checkpoint(spark, tmp_path):
     import os
 
     assert any(os.scandir(tmp_path / "cc_ckpt"))
+    # a 64-node chain needs several star rounds, each reliably
+    # checkpointed in turn; the labels must be the localCheckpoint run's
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(100, 163)], "doc_a BIGINT, doc_b BIGINT"
+    )
+    local = sorted(tuple(r) for r in connected_components(chain).collect())
+    reliable = sorted(
+        tuple(r)
+        for r in connected_components(
+            chain, checkpoint_dir=str(tmp_path / "cc_chain_ckpt")
+        ).collect()
+    )
+    assert reliable == local == [(i, 100) for i in range(100, 164)]
 
 
 def test_random_graph_matches_union_find(spark):

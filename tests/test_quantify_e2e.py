@@ -5,6 +5,7 @@ abundances within tolerance — ported from QuantifySuite.scala:383-424
 
 import pytest
 
+from rnadam_spark import instrument as ins
 from rnadam_spark.algorithms import generators as gen
 from rnadam_spark.algorithms.quantify import quantify
 from rnadam_spark.schemas import CLASS_TRANSCRIPTS, KMER_TO_CLASS, READS, TRANSCRIPTS
@@ -163,14 +164,83 @@ def _python_em(class_counts, members, t_len, k, max_iterations):
     return {t: x / z for t, x in mu.items()}
 
 
+def _stage_counter():
+    """A ``StageTimers`` that also counts how often each stage is
+    entered (the EM loop enters ``EM_ITER`` once per iteration)."""
+    from collections import Counter
+    from contextlib import contextmanager
+
+    class CountingTimers(ins.StageTimers):
+        def __init__(self):
+            super().__init__()
+            self.entries = Counter()
+
+        @contextmanager
+        def stage(self, name):
+            self.entries[name] += 1
+            with super().stage(name):
+                yield
+
+    return CountingTimers()
+
+
+def _em_case(spark, transcripts, names, kmer_map, class_map, reads):
+    """DataFrames plus the inputs ``_python_em`` needs: the engine's own
+    class counts and the transcript lengths."""
+    from rnadam_spark.algorithms.quantify import count_read_kmers, map_kmers_to_classes
+
+    dfs = _dataframes(spark, transcripts, names, kmer_map, class_map, reads)
+    class_counts = {
+        r.class_id: r.cnt
+        for r in map_kmers_to_classes(count_read_kmers(dfs[0], 20), dfs[1]).collect()
+    }
+    t_len = {names[i]: len(transcripts[i]) for i in range(len(names))}
+    return dfs, class_counts, t_len
+
+
+def _independent_case():
+    # one class per transcript: every class has exactly one member
+    t_len = [500, 300, 420, 260]
+    transcripts, names, kmer_map, class_map = gen.generate_independent_transcripts(
+        20, t_len, seed=91
+    )
+    reads = gen.generate_reads(transcripts, [0.4, 0.3, 0.2, 0.1], 2000, 75, seed=92)
+    return transcripts, names, kmer_map, class_map, reads
+
+
+def _shared_case():
+    # several classes span two transcripts, next to one-member classes
+    class_size = [300, 200, 250, 150, 200, 100, 120]
+    class_mult = [1, 1, 1, 1, 2, 2, 3]
+    membership = [{0}, {1, 2}, {1, 3}, {1, 4}, {2, 5}, {2, 6}, {3, 6}, {6}, {0, 5}, {4, 6}]
+    abundances = [0.05, 0.1, 0.2, 0.1, 0.05, 0.05, 0.05, 0.2, 0.1, 0.1]
+    transcripts, names, kmer_map, class_map = gen.generate_transcripts(
+        20, class_size, class_mult, membership, seed=31
+    )
+    reads = gen.generate_reads(transcripts, abundances, 3000, 75, seed=32)
+    return transcripts, names, kmer_map, class_map, reads
+
+
+def _run_em(dfs, max_iterations, timers=None):
+    out = quantify(
+        *dfs, k=20, max_iterations=max_iterations,
+        calibrate_kmer_bias=False, calibrate_length_bias=False, timers=timers,
+    )
+    return {r.t_id: r.abundance for r in out.select("t_id", "abundance").collect()}
+
+
+def _assert_close(got, want, tol=1e-12):
+    assert set(got) == set(want)
+    for t in want:
+        assert abs(got[t] - want[t]) < tol, (t, got[t], want[t])
+
+
 def test_quantify_mega_class_matches_python_em(spark):
     # the skew shape: one equivalence class spans EVERY one of 600
     # transcripts (the hot key the class_id window places in one task),
     # next to singleton classes, so the E-step really redistributes;
     # the window-form EM must match a driver-side EM to 1e-9
     import random
-
-    from rnadam_spark.algorithms.quantify import count_read_kmers, map_kmers_to_classes
 
     rng = random.Random(23)
     n = 600
@@ -191,31 +261,14 @@ def test_quantify_mega_class_matches_python_em(spark):
     for c, ts in class_map.items():
         if int(c) % 3 != 0:
             mega_class_map[c] = ts
-    reads_df, kmer_df, class_df, t_df = _dataframes(
+    dfs, class_counts, t_lens = _em_case(
         spark, transcripts, names, mega_kmer_map, mega_class_map, reads
     )
-    max_iterations = 10
-    result = quantify(
-        reads_df, kmer_df, class_df, t_df, k=20, max_iterations=max_iterations,
-        calibrate_kmer_bias=False, calibrate_length_bias=False,
-    )
-    got = {r.t_id: r.abundance for r in result.select("t_id", "abundance").collect()}
-
-    class_counts = {
-        r.class_id: r.cnt
-        for r in map_kmers_to_classes(count_read_kmers(reads_df, 20), kmer_df).collect()
-    }
     assert "mega" in class_counts
-    want = _python_em(
-        class_counts,
-        mega_class_map,
-        {names[i]: len(transcripts[i]) for i in range(n)},
-        20,
-        max_iterations,
-    )
-    assert set(got) == set(want) and len(got) == n
-    for t in want:
-        assert abs(got[t] - want[t]) < 1e-9, (t, got[t], want[t])
+    got = _run_em(dfs, 10)
+    want = _python_em(class_counts, mega_class_map, t_lens, 20, 10)
+    assert len(got) == n
+    _assert_close(got, want, 1e-9)
 
 
 def test_quantify_bit_identical_across_timers_and_edge_layout(spark, monkeypatch):
@@ -224,17 +277,9 @@ def test_quantify_bit_identical_across_timers_and_edge_layout(spark, monkeypatch
     # table in one partition or in several, must give the same
     # abundances bit for bit — the µ tail's sums may not depend on
     # plan shape or layout
-    from rnadam_spark import instrument as ins
     from rnadam_spark.algorithms import quantify as q
 
-    class_size = [300, 200, 250, 150, 200, 100, 120]
-    class_mult = [1, 1, 1, 1, 2, 2, 3]
-    membership = [{0}, {1, 2}, {1, 3}, {1, 4}, {2, 5}, {2, 6}, {3, 6}, {6}, {0, 5}, {4, 6}]
-    abundances = [0.05, 0.1, 0.2, 0.1, 0.05, 0.05, 0.05, 0.2, 0.1, 0.1]
-    transcripts, names, kmer_map, class_map = gen.generate_transcripts(
-        20, class_size, class_mult, membership, seed=31
-    )
-    reads = gen.generate_reads(transcripts, abundances, 3000, 75, seed=32)
+    transcripts, names, kmer_map, class_map, reads = _shared_case()
     reads_df, kmer_df, class_df, t_df = _dataframes(
         spark, transcripts, names, kmer_map, class_map, reads
     )
@@ -252,6 +297,70 @@ def test_quantify_bit_identical_across_timers_and_edge_layout(spark, monkeypatch
     assert len(want) == len(names)
     for rows_per_part, timers in ((one, ins.StageTimers()), (several, None), (several, ins.StageTimers())):
         assert run(rows_per_part, timers) == want, (rows_per_part, timers)
+
+
+def test_em_one_member_classes_stop_at_fixed_point(spark):
+    # every class has one member, so iteration 1 already sits at the
+    # EM's fixed point: the loop runs ONE iteration of the 50 asked for,
+    # and the result is the 50-iteration driver-side EM's
+    case = _independent_case()
+    dfs, class_counts, t_len = _em_case(spark, *case)
+    timers = _stage_counter()
+    got = _run_em(dfs, 50, timers)
+    assert timers.entries[ins.EM_ITER] == 1
+    _assert_close(got, _python_em(class_counts, case[3], t_len, 20, 50))
+
+
+def test_em_multi_member_classes_run_every_iteration(spark):
+    # classes with two members: the fixed-point exit must not fire
+    case = _shared_case()
+    dfs, class_counts, t_len = _em_case(spark, *case)
+    timers = _stage_counter()
+    got = _run_em(dfs, 7, timers)
+    assert timers.entries[ins.EM_ITER] == 7
+    _assert_close(got, _python_em(class_counts, case[3], t_len, 20, 7))
+
+
+def test_em_zero_iterations_returns_initial_mu(spark):
+    # max_iterations=0 still returns µ₀ (the M-step over α₀ = cnt/|class|)
+    for case in (_independent_case(), _shared_case()):
+        dfs, class_counts, t_len = _em_case(spark, *case)
+        timers = _stage_counter()
+        got = _run_em(dfs, 0, timers)
+        assert timers.entries[ins.EM_ITER] == 0
+        _assert_close(got, _python_em(class_counts, case[3], t_len, 20, 0))
+
+
+def test_em_duplicate_membership_rows_keep_full_loop(spark):
+    # a (class_id, t_id) membership row listed twice makes that class
+    # two edge rows — the α₀ window already splits its count in two —
+    # so the loop runs every iteration. The halves add back up, so the
+    # abundances are the deduplicated membership's.
+    case = _independent_case()
+    (reads_df, kmer_df, class_df, t_df), class_counts, t_len = _em_case(spark, *case)
+    dup = class_df.union(spark.createDataFrame([("1", "1")], CLASS_TRANSCRIPTS))
+    timers = _stage_counter()
+    got = _run_em((reads_df, kmer_df, dup, t_df), 3, timers)
+    assert timers.entries[ins.EM_ITER] == 3
+    _assert_close(got, _python_em(class_counts, case[3], t_len, 20, 3))
+
+
+def test_em_fixed_point_job_count(spark):
+    # the saving pinned without a clock: a 50-iteration quantify over
+    # one-member classes runs 25 Spark jobs in its job group, where the
+    # loop that ran all 50 iterations took 101 (both measured with this
+    # input on 4 cpus, local mode; broadcast exchanges run their jobs
+    # outside the caller's group, so both counts leave those out)
+    sc = spark.sparkContext
+    dfs = _dataframes(spark, *_independent_case())
+    group = "em-fixed-point-job-count"
+    sc.setJobGroup(group, "quantify over one-member classes")
+    try:
+        _run_em(dfs, 50)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 40, len(jobs)
 
 
 def test_em_state_fused_pandas_twin_value_equal(spark, sf_dir):

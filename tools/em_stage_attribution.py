@@ -6,9 +6,10 @@ VERDICT r10 #1: the flagship's sf10→sf100 slope rose to 5.2×/decade
 DISPROVEN (741s — no better). This tool answers "where do the seconds
 go" with PRODUCTION semantics: it mirrors the exact construction of
 ``queries/genomics_q.em_quantify`` + ``algorithms/quantify.em_loop``
-(same functions, same caches, same per-iteration localCheckpoint) but
-forces each phase at its natural materialization boundary and records
-the marginal wall time. The r10 run of this tool (against the
+(same functions, same caches, same per-iteration localCheckpoint, and
+the iteration count ``em_iterations`` gives production: 1 here, since
+every class has one member) but forces each phase at its natural
+materialization boundary and records the marginal wall time. The r10 run of this tool (against the
 since-retired generic-state construction) produced the attribution
 that drove the r11 restructure: with_class_cache 376.6s /
 class_counts_cache 245.9s / edges_cache 120.1s / EM loop 49s at sf100
@@ -42,6 +43,7 @@ from pyspark.sql import functions as F
 
 from rnadam_spark.algorithms.quantify import (
     e_step,
+    em_iterations,
     initialize_em,
     m_step,
     normalize_mu,
@@ -100,7 +102,10 @@ def main() -> None:
     # lands inside iter_1's first checkpoint, so force it here instead
     mu = phase("init_em", lambda: truncate_lineage(mu))
 
-    iters = 5
+    # production's iteration count: the flagship's 5, or 1 when every
+    # class has one member and iteration 1 already sits at the fixed
+    # point (quantify.em_iterations)
+    iters = phase("fixed_point_probe", lambda: em_iterations(edges, 5))
     for i in range(1, iters + 1):
         def one_iter(mu=mu):
             a = e_step(mu, edges)
