@@ -76,7 +76,6 @@ def calibrate_kmers(kmer_counts: DataFrame) -> DataFrame:
     (Tare.scala:112-116) are an aggregation here — accumulators are not
     exactly-once under task retries (SURVEY.md A12).
     """
-    from pyspark.ml.feature import VectorAssembler
     from pyspark.ml.functions import array_to_vector, vector_to_array
     from pyspark.ml.regression import LinearRegression
 

@@ -566,18 +566,19 @@ def _read_blocklist(spark, path: str):
 
 
 def _run_curate(spark, args) -> None:
-    """The composite curation pipeline as ONE lazy plan: normalize →
-    PII scrub → [corpus line dedup] → quality + [repetition] +
+    """The composite curation pipeline: normalize → PII scrub →
+    [corpus line dedup] → quality, materialized once → [repetition] +
     [LM perplexity] + [classifier] thresholds → exact-dedup canonical
     selection → [mixture resampling] → optional token-budget chunking →
-    partitioned sink. Everything up to the dedup groupBy is a
-    projection (normalization runs first so docs differing only in
-    whitespace collide downstream); the dedup join is doc_id-equi on
+    partitioned sink. Everything up to quality is a projection
+    (normalization runs first so docs differing only in whitespace
+    collide downstream); the dedup join is doc_id-equi on
     the canonical ids (broadcastable when the survivor set is small);
     the model stages join broadcast model tables (the LM trains on a
     deterministic hash sample of the scrubbed corpus itself)."""
     from pyspark.sql import functions as F
 
+    from rnadam_spark.lineage import truncate_lineage
     from rnadam_spark.operators import dedup, repetition, text
     from rnadam_spark.sources.sink import write_partitioned
 
@@ -601,14 +602,19 @@ def _run_curate(spark, args) -> None:
         docs = _tx.nfkc_normalize(docs).drop("n_changed")
     # the stateless prefix (normalize → C4 → Gopher → PII scrub →
     # quality) runs as CHAINED PROJECTIONS — no shuffle, no join;
-    # narrow projections ride the scan in one stage. Each rewrite
-    # materializes its text once before the next stage reads it:
-    # fully fused into one projection, the Gopher/quality builders'
-    # interpreted higher-order lambdas re-evaluate the whole
-    # normalize+C4 rewrite per token-array reference (CollapseProject
-    # keeps the staged form because the aliases are non-cheap and
-    # multiply referenced — see text.gopher_prelude). Stage semantics
-    # and order are identical (each builder is the same expression its
+    # narrow projections ride the scan in one stage. Each rewrite gets
+    # its own projection so the next stage reads its text once:
+    # fully fused, the Gopher/quality builders' interpreted
+    # higher-order lambdas would re-evaluate the whole normalize+C4
+    # rewrite per token-array reference. The staging survives
+    # CollapseProject (the aliases are non-cheap and multiply
+    # referenced — see text.gopher_prelude) but NOT filter pushdown: a
+    # Filter over these projections is pushed below them with every
+    # alias substituted back into its condition, rewrite chain and
+    # all. So the quality threshold waits for the stage boundary after
+    # `quality` below (the `-c4`/`-gopher` `_keep` filter still runs
+    # before it, and is pushed down the same way). Stage semantics and
+    # order are identical (each builder is the same expression its
     # standalone operator selects, pinned by the stream-vs-batch
     # agreement tests).
     passthrough = [c for c in docs.columns if c != "text"]
@@ -654,20 +660,19 @@ def _run_curate(spark, args) -> None:
         .withColumn("quality", text.quality_columns("text", toks=F.col("__qt"))["quality"])
         .drop("__qt")
     )
-    if (
-        args.max_perplexity is not None
-        or args.classifier_weights is not None
-        or args.excise_ppl_tail is not None
-    ):
-        from rnadam_spark.lineage import truncate_lineage
-
-        # stage boundary (same rationale as the pre-near-dedup one): the
-        # model stages traverse the scrubbed corpus several times — the
-        # LM trains on a hash sample of it, scoring re-reads it, and the
-        # threshold chain joins back into it — so without materializing
-        # here each traversal re-executes the whole normalize/c4/redact/
-        # line-dedup plan (measured 179s → seconds on the probe corpus)
-        scrubbed = truncate_lineage(scrubbed)
+    # stage boundary: the scored corpus is materialized once, so every
+    # text rewrite runs once per document. Left lazy, the quality Filter
+    # is pushed below the staged projections (see above), and every
+    # consumer re-derives the prefix per traversal: exact dedup's
+    # exact_dup_groups(kept) and kept.join(canon), and the model
+    # stages' LM sample, scoring and join-back (measured 179s → seconds
+    # on their probe corpus). The first plan `curate -near_dedup`
+    # materialized scanned the input twice and held 17 copies of the
+    # 9-deep regexp_replace chain; now it scans once and holds none
+    # (test_cli_curate_prefix_evaluated_once). perfbench
+    # curate_near_dup, 4 cpus, 10 interleaved pairs: pipeline_s median
+    # 30.3 s → 22.2 s.
+    scrubbed = truncate_lineage(scrubbed)
     kept = scrubbed.filter(F.col("quality") >= args.quality_min)
     if args.max_dup_5gram is not None:
         # in-row stat: threshold as a fused projection filter, no join
@@ -733,7 +738,6 @@ def _run_curate(spark, args) -> None:
         ]
         print(json.dumps({"funnel": funnel_rows}))
     if args.excise_ppl_tail is not None:
-        from rnadam_spark.lineage import truncate_lineage
         from rnadam_spark.operators import lm
         from rnadam_spark.operators.sampling import hash_sample
 
@@ -770,8 +774,6 @@ def _run_curate(spark, args) -> None:
         # instead of orphaning it in the session (r12 ADVICE)
         model.unpersist()
     if args.bad_phrases is not None or args.decontaminate is not None:
-        from rnadam_spark.lineage import truncate_lineage
-
         # stage boundary: the phrase filter scans the corpus once per
         # distinct phrase length and decontamination traverses it for
         # the gram join plus the threshold join-back — materialize so
@@ -817,8 +819,6 @@ def _run_curate(spark, args) -> None:
         or args.cap_per_domain is not None
         or args.para_near_dedup is not None
     ):
-        from rnadam_spark.lineage import truncate_lineage
-
         # stage boundary: every chained filter stage re-attaches the
         # passthrough columns with a doc_id self-join, so the lazy plan
         # tree roughly DOUBLES per enabled stage — and the near-dup
@@ -859,7 +859,6 @@ def _run_curate(spark, args) -> None:
             .join(curated.drop("text"), "doc_id")
         )
     if args.para_near_dedup is not None:
-        from rnadam_spark.lineage import truncate_lineage
         from rnadam_spark.operators.dedup import paragraph_near_dups
 
         # fuzzy paragraph dedup after the document-level passes: the
@@ -872,7 +871,6 @@ def _run_curate(spark, args) -> None:
             .filter(F.length("text") > 0)
         )
     if args.cap_per_domain is not None:
-        from rnadam_spark.lineage import truncate_lineage
         from rnadam_spark.operators.sampling import cap_per_group
 
         # quota AFTER dedup (a domain shouldn't fill its quota with

@@ -323,13 +323,16 @@ def redact_pii(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
 def redaction_columns(text_col: str | Column = "text") -> tuple[Column, Column]:
     """(redacted text, redaction count) as Columns — the
     :func:`redact_pii` expressions, exposed for fused single-projection
-    pipelines."""
+    pipelines. The count is a plain ``+`` of the per-pattern counts, not
+    a higher-order ``aggregate`` lambda, so the projection is whole-stage
+    codegen'd and subexpression elimination shares the partial rewrites
+    between the count and the cleaned text."""
     cleaned = F.col(text_col) if isinstance(text_col, str) else text_col
     counts = []
     for name, pat in PII_PATTERNS:
         counts.append(F.regexp_count(cleaned, F.lit(pat)))
         cleaned = F.regexp_replace(cleaned, pat, f"<{name}>")
-    n_red = F.aggregate(F.array(*counts), F.lit(0), lambda acc, x: acc + x)
+    n_red = sum(counts[1:], start=counts[0])
     return cleaned, n_red.cast("bigint")
 
 

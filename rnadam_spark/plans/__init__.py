@@ -1,5 +1,7 @@
 from rnadam_spark.plans.checks import (  # noqa: F401
+    count_parquet_scans,
     count_shuffles,
+    filter_conditions,
     has_broadcast_join,
     has_pushed_filters,
     has_window,

@@ -31,6 +31,42 @@ def has_pushed_filters(df: DataFrame, fragment: str) -> bool:
     return False
 
 
+def _operator_details(df: DataFrame, operator: str) -> list[str]:
+    """The formatted plan's detail block of every ``operator`` node
+    (``(3) Filter [codegen id : 1]`` plus its field lines)."""
+    return re.findall(
+        rf"^\(\d+\) {operator}\b.*?(?=\n\n|\Z)", plan_string(df), re.M | re.S
+    )
+
+
+def count_parquet_scans(df: DataFrame, path_fragment: str) -> int:
+    """Number of parquet scan operators whose location mentions
+    ``path_fragment`` — a frame consumed by two branches of one plan (a
+    self-join, an aggregate joined back) scans its source once per
+    branch unless something materialized it first."""
+    return sum(
+        any(
+            path_fragment in line
+            for line in block.splitlines()
+            if line.startswith("Location: ")
+        )
+        for block in _operator_details(df, "Scan parquet")
+    )
+
+
+def filter_conditions(df: DataFrame) -> list[str]:
+    """The condition of every Filter operator, as the plan prints it —
+    predicate pushdown substitutes a projection's aliases into a Filter
+    it moves below that projection, so this is where an expression the
+    caller staged once can reappear."""
+    return [
+        line.removeprefix("Condition : ")
+        for block in _operator_details(df, "Filter")
+        for line in block.splitlines()
+        if line.startswith("Condition : ")
+    ]
+
+
 def read_schema_columns(df: DataFrame, table_fragment: str) -> set[str]:
     """Columns actually read from scans whose location matches
     ``table_fragment`` (checks column pruning)."""

@@ -378,6 +378,58 @@ def test_cli_curate_near_dedup_and_decontaminate(spark, tmp_path):
     assert 4 in kept          # distinct doc survives
 
 
+def test_cli_curate_prefix_evaluated_once(spark, tmp_path, monkeypatch):
+    """The text prefix (normalize → PII scrub → quality) runs once per
+    document: every plan `curate -near_dedup` materializes or writes
+    scans the input at most once, and no Filter carries a rewrite — a
+    Filter over the staged projections is pushed below them with the
+    regexp_replace chain substituted into its condition."""
+    from rnadam_spark import lineage
+    from rnadam_spark.plans import count_parquet_scans, filter_conditions
+    from rnadam_spark.sources import sink
+
+    base = ("The quick brown fox jumps over the lazy dog near the river bank today. "
+            "It was a sunny afternoon and everyone enjoyed the warm weather outside. "
+            "Children played games while adults talked about their plans for the week.")
+    distinct = ("Entirely different content about cooking pasta with fresh tomatoes "
+                "and basil from the garden. Write to chef@example.com for the recipe, "
+                "simmered slowly in olive oil until the sauce thickens nicely.")
+    rows = [
+        (1, base, "en", "web", len(base)),
+        (2, base.replace(" ", "   ") + "  \r\n", "en", "web", len(base)),  # exact dup once normalized
+        (3, distinct, "en", "web", len(distinct)),
+    ]
+    src = str(tmp_path / "docs")
+    spark.createDataFrame(
+        rows, "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT"
+    ).write.parquet(src)
+
+    plans = []
+
+    def capturing(fn):
+        def wrapped(df, *args, **kwargs):
+            plans.append((fn.__name__, count_parquet_scans(df, src), filter_conditions(df)))
+            return fn(df, *args, **kwargs)
+
+        return wrapped
+
+    monkeypatch.setattr(lineage, "truncate_lineage", capturing(lineage.truncate_lineage))
+    monkeypatch.setattr(sink, "write_partitioned", capturing(sink.write_partitioned))
+    out = str(tmp_path / "out")
+    cli.main(["curate", src, out, "-near_dedup"])
+
+    assert plans[0][0] == "truncate_lineage"
+    assert plans[-1][0] == "write_partitioned"
+    assert plans[0][1] == 1  # the scored corpus is read from the input once
+    for name, n_scans, conditions in plans:
+        assert n_scans <= 1, name
+        assert not [c for c in conditions if "regexp_replace" in c], name
+    got = {r.doc_id: r for r in spark.read.parquet(out).collect()}
+    assert set(got) == {1, 3}
+    assert got[1].n_dups == 2
+    assert got[3].n_redactions == 1 and "<EMAIL>" in got[3].text
+
+
 def test_cli_dedup_index_and_ingest(spark, tmp_path):
     base = ("The quick brown fox jumps over the lazy dog near the river bank today "
             "while children played games and adults talked about their weekly plans.")

@@ -2,6 +2,8 @@
 and shuffle counts are part of each operator's contract (the 100 TB
 design), not an accident of the current optimizer mood."""
 
+import re
+
 import pytest
 
 from rnadam_spark.plans import (
@@ -9,6 +11,7 @@ from rnadam_spark.plans import (
     has_broadcast_join,
     has_pushed_filters,
     has_window,
+    plan_string,
     read_schema_columns,
 )
 from rnadam_spark.queries.genomics_q import (
@@ -202,6 +205,19 @@ def test_curation_projection_ops_zero_shuffle(spark, sf_dir):
         "doc_id",
         "text",
     }
+
+
+def test_redact_pii_projection_codegend(spark, sf_dir):
+    # the redaction count is a plain sum of the per-pattern counts: an
+    # `aggregate` lambda would be interpreted (CodegenFallback), pull the
+    # whole Project out of whole-stage codegen, and keep subexpression
+    # elimination from sharing the partial rewrites
+    from rnadam_spark.operators import text
+    from rnadam_spark.sources.tables import load_table
+
+    plan = plan_string(text.redact_pii(load_table(spark, sf_dir, "documents")), "simple")
+    assert "aggregate(" not in plan
+    assert re.search(r"^\*\(\d+\) Project \[.*AS n_redactions", plan, re.M)
 
 
 def test_dedup_lines_no_window(spark, sf_dir):
