@@ -10,7 +10,7 @@ of the measurements. The ``stages`` blocks time the index build and the
 EM flagship stage-by-stage under the reference's Timers.scala names
 (BASELINE.md: per-stage timings so regressions are attributable).
 
-Since round 6 every headline and A/B timing is the MINIMUM of
+Since round 6 every headline timing is the MINIMUM of
 ``$SPARK_GRAFT_BENCH_REPEATS`` (default 3) cache-cleared runs: the
 shared host shows multi-second noise spikes (the same query measured
 0.7s and 12.4s minutes apart), and min-of-k is the standard estimator
@@ -151,737 +151,6 @@ def _stage_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
     )
     force(result.select("t_id", "abundance"))
     return {"index": idx_timers.as_dict(), "quantify": q_timers.as_dict()}
-
-
-def _ab_blocks(spark, sf_dir: str) -> dict[str, dict[str, float]]:
-    """Per-round A/B timings of plan-strategy alternatives (VERDICT r2
-    #7/#8): each variant forced through the noop sink after a cache
-    clear, so the numbers are comparable run-to-run and the measured
-    winner — not a stale commit-message claim — justifies the default.
-    """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    from rnadam_spark.functions.rounding import hround
-    from rnadam_spark.lineage import truncate_lineage
-    from rnadam_spark.operators import dedup, repetition, similarity, text
-    from rnadam_spark.operators import multimodal as mmod_ab
-    from rnadam_spark.operators import search as search_ab
-    from rnadam_spark.operators import spans as spans_ab
-    from rnadam_spark.queries.genomics_q import kmer_count as kmer_count_q
-    from rnadam_spark.queries.pipeline_q import _BENCH_MOD, DECONTAM_N
-    from rnadam_spark.queries.relational import pricing_summary
-    from rnadam_spark.sources.tables import load_table
-
-    def timed(make_df) -> float:
-        return _min_of_repeats(
-            spark, lambda: make_df().write.format("noop").mode("overwrite").save()
-        )
-
-    import shutil
-    import tempfile
-
-    from rnadam_spark.sources import sink as sink_mod
-
-    docs = load_table(spark, sf_dir, "documents", widen=True)
-
-    # clustered-sink A/B: z-order write (sketch pass + range exchange on
-    # the Morton code) vs the lexicographic strawman (range exchange on
-    # the leading column only) — the delta is what multi-column data
-    # skipping costs at WRITE time; the read-side benefit is pinned by
-    # tests/test_sink.py's footer-stats skip counts
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    _tmp = tempfile.mkdtemp(prefix="bench_zorder_")
-    try:
-        zorder_write = _min_of_repeats(
-            spark,
-            lambda: sink_mod.write_clustered(
-                li, _tmp + "/z", ["l_orderkey", "l_partkey"], bits=6
-            ),
-        )
-        linear_write = _min_of_repeats(
-            spark,
-            lambda: (
-                li.repartitionByRange("l_orderkey")
-                .sortWithinPartitions("l_orderkey")
-                .write.mode("overwrite")
-                .parquet(_tmp + "/linear")
-            ),
-        )
-    finally:
-        shutil.rmtree(_tmp, ignore_errors=True)
-
-    # ADC table-delivery A/B: codes materialized once so both variants
-    # time the SCORING pass, not the shared encode
-    emb = load_table(spark, sf_dir, "embeddings")
-    pq_books = similarity.train_pq(emb, m=8, nbits=4, max_iterations=3)
-    pq_codes = truncate_lineage(similarity.pq_encode(emb, pq_books))
-    pq_query = [v for sub in range(len(pq_books)) for v in pq_books[sub][0]]
-
-    def dedup_lines_window(d):
-        # the row_number() twin of repetition.dedup_lines — identical
-        # outputs, but the per-line window funnels each hot boilerplate
-        # line through ONE task (the docstring's scale argument; this
-        # A/B keeps the claim measurement-backed at sf0.1)
-        exploded = d.select(
-            F.col("doc_id"),
-            F.posexplode(
-                F.split(F.coalesce(F.col("text"), F.lit("")), "\n")
-            ).alias("line_no", "line"),
-        )
-        participating = F.length(F.trim(F.col("line"))) >= 8
-        w = Window.partitionBy("line").orderBy("doc_id", "line_no")
-        flagged = exploded.withColumn(
-            "keep", ~participating | (F.row_number().over(w) == 1)
-        )
-        kept = F.array_sort(
-            F.collect_list(
-                F.when(F.col("keep"), F.struct(F.col("line_no").alias("p"), F.col("line").alias("l")))
-            )
-        )
-        return flagged.groupBy("doc_id").agg(
-            F.array_join(F.transform(kept, lambda x: x["l"]), "\n").alias("text"),
-            F.sum(F.col("keep").cast("bigint")).alias("n_lines_kept"),
-            F.sum((~F.col("keep")).cast("bigint")).alias("n_lines_dropped"),
-        )
-
-    def pricing_double_drift():
-        # the pre-round-9 double-sum twin of pricing_summary: ~4x
-        # faster, but its 4dp-rounded sums drift with summation order
-        # past ~6M rows (SURVEY sf1 block) — the A/B prices what the
-        # order-independent decimal accumulation costs at sf0.1
-        li = load_table(spark, sf_dir, "lineitem")
-        disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        return (
-            li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                hround(F.sum("l_quantity"), 4).alias("sum_qty"),
-                hround(F.sum("l_extendedprice"), 4).alias("sum_base_price"),
-                hround(F.sum(disc), 4).alias("sum_disc_price"),
-                hround(F.sum(disc * (1 + F.col("l_tax"))), 4).alias("sum_charge"),
-                hround(F.avg("l_quantity"), 4).alias("avg_qty"),
-                hround(F.avg("l_extendedprice"), 4).alias("avg_price"),
-                hround(F.avg("l_discount"), 4).alias("avg_disc"),
-                F.count("*").alias("count_order"),
-            )
-        )
-
-    return {
-        "clustered_write": {
-            "zorder": zorder_write,
-            "linear_sort": linear_write,
-        },
-        # round-9/10: scale-exact money sums vs the double twin — the
-        # measured price of value-exactness at any data volume. Round 10
-        # replaced the per-row DECIMAL(38,10) casts with quantized-long
-        # hi/lo sums recombined per GROUP in decimal (functions/
-        # rounding.py) — same exactness, ~2x cheaper (1.83s -> 1.04s).
-        "pricing_summary_money_sum": {
-            "split_long_exact": timed(lambda: pricing_summary(spark, sf_dir)),
-            "double_drift": timed(pricing_double_drift),
-        },
-        # VERDICT r6 #5: plan-literal ADC vs broadcast-join ADC over the
-        # same persisted codes (m=8, nbits=4 → 128 table entries;
-        # auto-switch flips to join above PQ_LITERAL_MAX)
-        "pq_topk_on_codes": {
-            "literal_table": timed(
-                lambda: similarity.pq_topk_on_codes(pq_codes, pq_query, pq_books)
-            ),
-            "broadcast_join_table": timed(
-                lambda: similarity.pq_topk_on_codes(
-                    pq_codes, pq_query, pq_books, strategy="join"
-                )
-            ),
-        },
-        # VERDICT r6 #8: the dedup_lines aggregate-then-join form vs its
-        # window twin
-        "dedup_lines": {
-            "aggregate_join": timed(lambda: repetition.dedup_lines(docs)),
-            "window_rownum": timed(lambda: dedup_lines_window(docs)),
-        },
-        # VERDICT r10 #6: the engine's heaviest interpreted-HOF kernel
-        # vs its Arrow-batched pandas twin (value-equal, pinned by
-        # tests). Measured r11: pandas wins 5.3x at sf10 (18.5s vs
-        # 3.5s) — interpreted per-row HOF evaluation costs more than
-        # the Arrow transfer + Counter work — so the REGISTERED row
-        # defaults to the pandas form; this A/B keeps the trade
-        # re-measured every round.
-        "repetition_stats": {
-            "interpreted_hof": timed(lambda: repetition.repetition_stats(docs)),
-            "pandas_arrow": timed(
-                lambda: repetition.repetition_stats_pandas(docs)
-            ),
-        },
-        # same trade for the Gopher page rules (pandas won 2.2x at sf10
-        # in r11; registered default follows the measurement)
-        "gopher_quality": {
-            "staged_hof": timed(lambda: text.gopher_quality(docs)),
-            "pandas_arrow": timed(lambda: text.gopher_quality_pandas(docs)),
-        },
-        # r13 twin: the numpy minhash kernel (per-doc grain straight
-        # out of the scan, zero shuffle) vs the explode+partial-agg JVM
-        # form — integer-exact, pinned value-equal by
-        # tests/test_dedup.py; the default follows the measurement
-        # (0.35 vs 0.81s at sf0.1, 4.9 vs 12.1s at sf10 in the r13
-        # adoption runs)
-        "minhash": {
-            "pandas_numpy": timed(lambda: dedup.minhash_signatures(docs)),
-            "jvm_explode_agg": timed(
-                lambda: dedup.minhash_signatures(docs, kernel="jvm")
-            ),
-        },
-        # r13 twin, same discipline: numpy simhash (distinct-token
-        # matrix + np.add.reduceat bit sums) vs the explode + 16-sum
-        # JVM aggregate — integer-exact, parity incl. tokenization
-        # corners pinned by tests/test_dedup.py
-        "simhash": {
-            "pandas_numpy": timed(lambda: dedup.simhash16(docs)),
-            "jvm_explode_agg": timed(lambda: dedup.simhash16(docs, kernel="jvm")),
-        },
-        # r13 twin: the equivalence-class grain via the Arrow/Counter
-        # kernel vs the in-row run-length JVM form (md5 ids pinned
-        # value-equal by tests/test_index.py; 5.0 vs 19.6s at sf10 in
-        # the adoption runs)
-        "classes": {
-            "pandas_counter": timed(lambda: _classes_q(spark, sf_dir, "pandas")),
-            "jvm_runlength": timed(lambda: _classes_q(spark, sf_dir, "jvm")),
-        },
-        # r13 twin: the registered kmer_count row on the Counter-partial
-        # kernel (em_global_counts' form) vs the codegen explode+hashagg
-        # — sf0.1 is a coin flip, sf10 is 2.3 vs 7.1s; the default
-        # follows the sf10 measurement (contamination's crossover shape)
-        "kmer_count": {
-            "pandas_counter": timed(lambda: kmer_count_q(spark, sf_dir, kernel="pandas")),
-            "jvm_explode_agg": timed(lambda: kmer_count_q(spark, sf_dir, kernel="jvm")),
-            # r14 (VERDICT r13 #5): the decade where the Counter default
-            # wins, published next to the sf0.1 row it loses
-            **(
-                {
-                    "pandas_counter_sf1": _timed_once(
-                        lambda: kmer_count_q(spark, _sf1_dir(), kernel="pandas")
-                    ),
-                    "jvm_explode_agg_sf1": _timed_once(
-                        lambda: kmer_count_q(spark, _sf1_dir(), kernel="jvm")
-                    ),
-                }
-                if _sf1_dir() is not None
-                else {}
-            ),
-        },
-        # r13 twin: the registered bm25 row on the numpy scoring
-        # kernel (exact float sequence; 8.7 vs 2.1s at sf10, tie at
-        # sf0.1) vs the per-term interpreted filter() HOF form
-        "bm25_topk": {
-            "pandas_counter": timed(
-                lambda: search_ab.bm25_topk(docs, "the data system and network", k=10)
-            ),
-            "jvm_filter_hof": timed(
-                lambda: search_ab.bm25_topk(
-                    docs, "the data system and network", k=10, kernel="jvm"
-                )
-            ),
-            # r14 (VERDICT r13 #5): crossover decade
-            **_strategy_sf1_ab(
-                spark,
-                {
-                    "pandas_counter_sf1": lambda d1: search_ab.bm25_topk(
-                        d1, "the data system and network", k=10
-                    ),
-                    "jvm_filter_hof_sf1": lambda d1: search_ab.bm25_topk(
-                        d1, "the data system and network", k=10, kernel="jvm"
-                    ),
-                },
-            ),
-        },
-        # r13 twin: duplicated-span detection with the vectorized
-        # spec-XXH64 window builder vs the interpreted
-        # array_join(slice) + xxhash64 expression — row-identical
-        # windows (bit-exact XXH64 parity pinned by tests/test_spans.py;
-        # 22.2 vs 7.8s at sf10 in the adoption runs)
-        "duplicated_spans": {
-            "pandas_xxh64": timed(
-                lambda: spans_ab.duplicated_spans(docs, min_tokens=13)
-            ),
-            "jvm_expr": timed(
-                lambda: spans_ab.duplicated_spans(docs, min_tokens=13, kernel="jvm")
-            ),
-            # r14 (VERDICT r13 #5): crossover decade
-            **_strategy_sf1_ab(
-                spark,
-                {
-                    "pandas_xxh64_sf1": lambda d1: spans_ab.duplicated_spans(
-                        d1, min_tokens=13
-                    ),
-                    "jvm_expr_sf1": lambda d1: spans_ab.duplicated_spans(
-                        d1, min_tokens=13, kernel="jvm"
-                    ),
-                },
-            ),
-        },
-        # r13 twins: the multimodal fingerprint passes on the batched
-        # fake-path kernels (bit-identical, parity pinned by
-        # tests/test_multimodal.py)
-        "dhash": {
-            "batch_kernel": timed(
-                lambda: mmod_ab.dhash_assets(mmod_ab.assets_from_documents(docs))
-            ),
-            "scalar_kernel": timed(
-                lambda: mmod_ab.dhash_assets(
-                    mmod_ab.assets_from_documents(docs), kernel="scalar"
-                )
-            ),
-        },
-        "audio_fp": {
-            "batch_kernel": timed(
-                lambda: mmod_ab.audio_fingerprint(mmod_ab.assets_from_documents(docs))
-            ),
-            "scalar_kernel": timed(
-                lambda: mmod_ab.audio_fingerprint(
-                    mmod_ab.assets_from_documents(docs), kernel="scalar"
-                )
-            ),
-        },
-        # r13 twins: the embedding-family per-row projections on the
-        # exact-order numpy kernels vs the interpreted literal-HOF
-        # forms — integer outputs bit-identical (parity pinned by
-        # tests/test_similarity.py); sf10 adoption runs measured
-        # pq_encode 38.2 → 2.4s (16x, the encode-once pass PQ exists
-        # to amortize) and ivf_cells 5.0 → 1.3s
-        "pq_encode": {
-            "pandas_numpy": timed(lambda: similarity.pq_encode(emb, pq_books)),
-            "jvm_literal_hof": timed(
-                lambda: similarity.pq_encode(emb, pq_books, kernel="jvm")
-            ),
-        },
-        "ivf_cells": {
-            "pandas_numpy": timed(lambda: similarity.ivf_cells(emb)),
-            "jvm_literal_hof": timed(
-                lambda: similarity.ivf_cells(emb, kernel="jvm")
-            ),
-        },
-        # r13 twin (second session): the sign-random-projection
-        # bucketing on the exact-order numpy kernel vs the folded-
-        # literal HOF form — same §12 shape (16 planes × 64 dims =
-        # 1024 interpreted lambda evals/row on the JVM side); buckets
-        # bit-identical (tests/test_similarity.py::
-        # test_lsh_buckets_scaled_kernels_equal)
-        "lsh_buckets_scaled": {
-            "pandas_numpy": timed(lambda: similarity.lsh_buckets_scaled(emb)),
-            "jvm_literal_hof": timed(
-                lambda: similarity.lsh_buckets_scaled(emb, kernel="jvm")
-            ),
-        },
-        # r13 twin: quality_scores on the curation parity kit vs the
-        # staged-HOF form (0.37 vs 0.62s at sf0.1, 3.6 vs 4.8s at sf10
-        # in the adoption runs; parity by tests/test_text_curation.py).
-        # Measured over the UNWIDENED table — the shape every quality
-        # call site actually reads (pipeline_q loads documents without
-        # widen here): over a WIDENED handle the comparison inverts
-        # (jvm 0.29 vs pandas 0.43 at sf0.1 — the 32-way exchange that
-        # parallelizes the interpreted HOFs costs the pandas form more
-        # than its single Arrow boundary saves), so A/B-ing the widened
-        # frame would publish a crossover no caller ever sees.
-        "quality_scores": {
-            "pandas_arrow": timed(
-                lambda: text.quality_scores(load_table(spark, sf_dir, "documents"))
-            ),
-            "jvm_staged_hof": timed(
-                lambda: text.quality_scores(
-                    load_table(spark, sf_dir, "documents"), kernel="jvm"
-                )
-            ),
-        },
-        # r13 twin: the loop-static PageRank edge cache (materialized
-        # once, key-partitioned by a data-derived count) vs the lazy
-        # form that re-executes the edge subtree every iteration. The
-        # REGISTERED row defaults to lazy by measurement (over its
-        # cheap projected edges the node-sized ranks broadcast, so the
-        # edge side never shuffles and the cache only saves re-scans:
-        # sf10 lazy 4.03-4.36s vs cache 4.17-5.65s); ranks identical
-        # (tests/test_graph.py), re-measured here every round
-        "pagerank": {
-            "edge_cache": timed(lambda: _pagerank_q(spark, sf_dir, True)),
-            "lazy_edges": timed(lambda: _pagerank_q(spark, sf_dir, False)),
-            # r14 (VERDICT r13 #7): the documented opt-in case measured
-            # on the shape it was built for — edges EXTRACTED FROM
-            # DOCUMENT TEXT (web.domain_edges: a regex URL scan of the
-            # corpus per edge read), where (iterations − 1) saved
-            # corpus passes are the cache's theory of victory
-            "text_edges_cache": timed(
-                lambda: _pagerank_text_edges(spark, sf_dir, True)
-            ),
-            "text_edges_lazy": timed(
-                lambda: _pagerank_text_edges(spark, sf_dir, False)
-            ),
-        },
-        # decontamination join strategy: broadcast the benchmark grams
-        # (default — eval suites are tiny next to the corpus) vs the
-        # sort-merge plan a corpus-vs-corpus overlap would need
-        "contamination_scores": {
-            "broadcast_bench": timed(
-                lambda: text.contamination_scores(
-                    docs, docs.filter(F.col("doc_id") % _BENCH_MOD == 0), n=DECONTAM_N
-                )
-            ),
-            "sortmerge_bench": timed(
-                lambda: text.contamination_scores(
-                    docs,
-                    docs.filter(F.col("doc_id") % _BENCH_MOD == 0),
-                    n=DECONTAM_N,
-                    broadcast_benchmark=False,
-                )
-            ),
-            # the r11 twin series' biggest win: 21.8x at sf10 (4.8s vs
-            # 105s) — the registered row defaults to the pandas form
-            "pandas_arrow": timed(
-                lambda: text.contamination_scores_pandas(
-                    docs, docs.filter(F.col("doc_id") % _BENCH_MOD == 0), n=DECONTAM_N
-                )
-            ),
-            # break-even decade (r11 VERDICT "what's wrong" #1: the
-            # pandas default LOSES at sf0.1 — 1.03 vs 0.69s — and wins
-            # 21.8x at sf10, so the crossover must be a published
-            # number, not an interpolation): the same two forms timed
-            # one decade up when the deterministic sf1 corpus exists
-            **_contamination_sf1_ab(spark, text, F, _BENCH_MOD, DECONTAM_N),
-        },
-        # r12 twin series: LM scorers and the vocabulary kernel — each
-        # registered default follows the sf10 measurement, these rows
-        # re-check the trade at sf0.1 every round
-        **_lm_vocab_ab(spark, timed, docs),
-        # r12 fused-pandas DSIR (Counter histograms + fused scorer) vs
-        # the explode+join form — default follows sf10 (11.4 vs 17.7s)
-        "dsir_weights": _dsir_ab(spark, timed, docs),
-        # r12 fused curation scores vs the two-projection form whose
-        # pushed-down filters evaluate each kernel TWICE (36.5 vs ~13s
-        # at sf10) — the composite's default follows the fused form
-        "curated": _curated_ab(spark, timed, sf_dir),
-        # r12 fused-pandas EM state build vs the r11 kernel+join form —
-        # the flagship's default follows the sf10/sf100 measurement
-        # (5.9 vs 20.7s / 53.8 vs 329.9s); this row re-checks at sf0.1
-        "em_state": {
-            "fused_pandas": _timed_em_state(spark, docs, True),
-            "hof_join": _timed_em_state(spark, docs, False),
-        },
-    }
-
-
-def _classes_q(spark, sf_dir: str, kernel: str):
-    from rnadam_spark.queries.genomics_q import _classes
-
-    return _classes(spark, sf_dir, kernel=kernel)
-
-
-def _pagerank_q(spark, sf_dir: str, cache_edges: bool):
-    from rnadam_spark.queries.web_q import pagerank
-
-    return pagerank(spark, sf_dir, cache_edges=cache_edges)
-
-
-def _pagerank_text_edges(spark, sf_dir: str, cache_edges: bool):
-    """PageRank over edges extracted from document TEXT (regex URL
-    scan per edge read) — the expensive-edge-subtree shape the
-    ``cache_edges`` opt-in was built for (r14, VERDICT r13 #7).
-    Synthetic URLs are injected into the text the same way the
-    blocklist gate row does, so the corpus has a real link graph."""
-    from pyspark.sql import functions as F
-
-    from rnadam_spark.operators import graph, web
-    from rnadam_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents", widen=True)
-    linked = docs.select(
-        "doc_id",
-        "source",
-        F.concat(
-            F.col("text"),
-            F.lit(" see http://a.src"),
-            (F.col("doc_id") % 11).cast("string"),
-            F.lit(".org/x and http://mirror"),
-            (F.col("doc_id") % 7).cast("string"),
-            F.lit(".io/y"),
-        ).alias("text"),
-    )
-    edges = web.domain_edges(linked)
-    return graph.pagerank(edges, iterations=5, cache_edges=cache_edges)
-
-
-def _curated_ab(spark, timed, sf_dir: str) -> dict[str, float]:
-    """A/B the curated_documents composite: fused Arrow scores vs the
-    two-JVM-projection form (whose filters push into the scans and
-    re-evaluate both kernels)."""
-    from pyspark.sql import functions as F
-
-    from rnadam_spark.operators import dedup, text
-    from rnadam_spark.queries.pipeline_q import curated_documents
-    from rnadam_spark.sources.tables import load_table
-
-    def two_projection():
-        docs = load_table(spark, sf_dir, "documents")
-        q = text.quality_scores(docs).select("doc_id", "quality")
-        lng = text.lang_scores(docs).select("doc_id", "predicted_lang")
-        canon = dedup.exact_dup_groups(docs).select(
-            F.col("canonical_id").alias("doc_id"), "n_dups"
-        )
-        return (
-            q.join(lng, "doc_id")
-            .join(canon, "doc_id")
-            .filter((F.col("quality") >= 0.9) & (F.col("predicted_lang") == "en"))
-            .select("doc_id", "quality", "predicted_lang", "n_dups")
-        )
-
-    return {
-        "fused_pandas": timed(lambda: curated_documents(spark, sf_dir)),
-        "two_projection_jvm": timed(two_projection),
-    }
-
-
-def _dsir_ab(spark, timed, docs) -> dict[str, float]:
-    """A/B the full dsir gate-row pipeline (two histograms + scorer)
-    in both forms."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from rnadam_spark.operators import dsir, sampling
-    from rnadam_spark.queries.pipeline_q import DSIR_BUCKETS, _DSIR_SEED, _DSIR_TARGET_FRAC
-
-    def run(pandas_form: bool):
-        target = sampling.hash_sample(docs, "doc_id", _DSIR_TARGET_FRAC, seed=_DSIR_SEED)
-        bcount = dsir.bucket_counts_pandas if pandas_form else dsir.bucket_counts
-        score = dsir.dsir_log_weights_pandas if pandas_form else dsir.dsir_log_weights
-        return score(docs, bcount(target, DSIR_BUCKETS), bcount(docs, DSIR_BUCKETS), DSIR_BUCKETS)
-
-    def run_self():
-        # r13 default: one corpus pass histograms raw+target together
-        return dsir.dsir_log_weights_self_pandas(
-            docs,
-            sampling.sample_predicate(
-                F.col("doc_id"), _DSIR_TARGET_FRAC, seed=_DSIR_SEED
-            ),
-            DSIR_BUCKETS,
-        )
-
-    out = {
-        "one_pass_self": timed(run_self),
-        "fused_pandas": timed(lambda: run(True)),
-        "explode_join": timed(lambda: run(False)),
-    }
-    # r13 (VERDICT r12 #6): the dsir default follows the sf10/sf100
-    # wins while sf0.1 is a coin-flip — publish the crossover decade
-    # like contamination's, single timed run per form at sf1
-    docs1 = _sf1_corpus(spark)
-    if docs1 is not None:
-        import time as _time
-
-        def run1(pandas_form: bool):
-            target = sampling.hash_sample(
-                docs1, "doc_id", _DSIR_TARGET_FRAC, seed=_DSIR_SEED
-            )
-            bcount = dsir.bucket_counts_pandas if pandas_form else dsir.bucket_counts
-            score = dsir.dsir_log_weights_pandas if pandas_form else dsir.dsir_log_weights
-            return score(
-                docs1, bcount(target, DSIR_BUCKETS), bcount(docs1, DSIR_BUCKETS), DSIR_BUCKETS
-            )
-
-        for key, form in (("fused_pandas_sf1", True), ("explode_join_sf1", False)):
-            t0 = _time.time()
-            run1(form).write.format("noop").mode("overwrite").save()
-            out[key] = round(_time.time() - t0, 3)
-    return out
-
-
-def _sf1_dir() -> str | None:
-    """The validated sf1 directory for crossover rows, or None. Refuse
-    to publish some other scale under _sf1 keys if the env override
-    reorders the dir list (r12 review)."""
-    sf1_dir = (
-        os.environ.get("SPARK_GRAFT_BENCH_SF10_DIRS", "/tmp/sf1,/tmp/sf10")
-        .split(",")[0]
-        .strip()
-    )
-    if not os.path.isdir(sf1_dir) or _sf_from_dir(sf1_dir) != 1.0:
-        return None
-    return sf1_dir
-
-
-def _sf1_corpus(spark):
-    """The validated sf1 documents table for crossover rows, or None."""
-    from rnadam_spark.sources.tables import load_table
-
-    d = _sf1_dir()
-    return None if d is None else load_table(spark, d, "documents", widen=True)
-
-
-def _strategy_sf1_ab(spark, forms: dict) -> dict[str, float]:
-    """Single-shot sf1 rows for a dict of ``key -> (docs1 -> DataFrame)``
-    builders — the r14 crossover-decade protocol (VERDICT r13 #5: every
-    sf0.1-losing default publishes the decade where it wins in the SAME
-    artifact PERF reads). Empty when the deterministic sf1 corpus is
-    absent."""
-    docs1 = _sf1_corpus(spark)
-    if docs1 is None:
-        return {}
-    return {key: _timed_once(lambda: make(docs1)) for key, make in forms.items()}
-
-
-def _timed_once(make_df) -> float:
-    """One cache-cleared timed run through the noop sink — the _sf1
-    crossover-row protocol (min-of-k at sf1 would triple rows that are
-    already multi-second; the decade, not the third decimal, is the
-    published fact)."""
-    import time as _time
-
-    df = make_df()
-    df.sparkSession.catalog.clearCache()
-    t0 = _time.time()
-    df.write.format("noop").mode("overwrite").save()
-    return round(_time.time() - t0, 3)
-
-
-def _timed_em_state(spark, docs, pandas_kernel: bool) -> float:
-    """Time one full EM state build (gc collect + cc force), releasing
-    the cc cache between repeats so each run pays the real cost."""
-    from rnadam_spark.queries.genomics_q import em_state
-
-    def run():
-        state = em_state(docs, pandas_kernel=pandas_kernel)
-        try:
-            state["cc"].write.format("noop").mode("overwrite").save()
-        finally:
-            state["cc"].unpersist()
-            state["edges"].unpersist()  # lazy cache marker, never forced here
-
-    return _min_of_repeats(spark, run)
-
-
-def _lm_vocab_ab(spark, timed, docs) -> dict[str, dict[str, float]]:
-    """A/B blocks for the r12 pandas twins: doc-level LM scoring,
-    paragraph-level LM scoring (the excise row's unit, split on the
-    corpus's ' table ' paragraph convention), and the vocabulary
-    kernel. The model trains once on a 10% deterministic sample and is
-    released after — both scorer variants time SCORING, not training.
-    The trained model is parked in a temp PARQUET, not the session
-    cache: _min_of_repeats clears the cache before every repeat, so a
-    cached model would silently re-train INSIDE the timed window — and
-    asymmetrically (the JVM scorer materializes the uncached training
-    subtree once per broadcast exchange, the pandas scorer once per
-    collect), biasing the very A/B that picks the default (r12
-    review). A bounded-row parquet scan survives clearCache and costs
-    the same few ms for both variants."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from rnadam_spark.operators import lm as lmod
-    from rnadam_spark.operators import text as tmod
-    from rnadam_spark.queries.pipeline_q import _PARA_SPLIT
-
-    _tmp = tempfile.mkdtemp(prefix="bench_lm_model_")
-    trained = lmod.train_char_lm(docs.filter(F.col("doc_id") % 10 == 0), cache=False)
-    trained.write.mode("overwrite").parquet(_tmp)
-    model = docs.sparkSession.read.parquet(_tmp)
-    try:
-        out = {
-            "lm_scoring": {
-                "hof_join": timed(lambda: lmod.lm_perplexity(docs, model)),
-                "pandas_arrow": timed(lambda: lmod.lm_perplexity_pandas(docs, model)),
-            },
-            "paragraph_ppl": {
-                "hof_join": timed(
-                    lambda: lmod.paragraph_perplexity(docs, model, split_pattern=_PARA_SPLIT)
-                ),
-                "pandas_arrow": timed(
-                    lambda: lmod.paragraph_perplexity_pandas(
-                        docs, model, split_pattern=_PARA_SPLIT
-                    )
-                ),
-            },
-            "vocabulary": {
-                "runlength_hof": timed(lambda: tmod.vocabulary(docs)),
-                "pandas_arrow": timed(lambda: tmod.vocabulary_pandas(docs)),
-            },
-            # r13: the training pass itself — Counter-partial kernel
-            # (em_global_counts' form; the exchange moves
-            # vocabulary-bounded partials) vs the explode + codegen
-            # hash aggregate. Integer-exact either way (pinned by
-            # tests/test_lm.py::test_train_char_lm_kernels_equal);
-            # default follows the sf10 measurement (2.2 vs 8.0s)
-            "lm_train": {
-                "pandas_counter": timed(
-                    lambda: lmod.train_char_lm(
-                        docs.filter(F.col("doc_id") % 10 == 0), cache=False
-                    )
-                ),
-                "jvm_explode_agg": timed(
-                    lambda: lmod.train_char_lm(
-                        docs.filter(F.col("doc_id") % 10 == 0),
-                        cache=False,
-                        kernel="jvm",
-                    )
-                ),
-                # r14 (VERDICT r13 #5): crossover decade
-                **_strategy_sf1_ab(
-                    spark,
-                    {
-                        "pandas_counter_sf1": lambda d1: lmod.train_char_lm(
-                            d1.filter(F.col("doc_id") % 10 == 0), cache=False
-                        ),
-                        "jvm_explode_agg_sf1": lambda d1: lmod.train_char_lm(
-                            d1.filter(F.col("doc_id") % 10 == 0),
-                            cache=False,
-                            kernel="jvm",
-                        ),
-                    },
-                ),
-            },
-        }
-        # r13 (VERDICT r12 #6): vocabulary's sf0.1 trade is a
-        # coin-flip held by the sf10 win — publish the crossover
-        # decade, single timed run per form at sf1
-        docs1 = _sf1_corpus(spark)
-        if docs1 is not None:
-            import time as _time
-
-            for key, make in (
-                ("runlength_hof_sf1", lambda: tmod.vocabulary(docs1)),
-                ("pandas_arrow_sf1", lambda: tmod.vocabulary_pandas(docs1)),
-            ):
-                t0 = _time.time()
-                make().write.format("noop").mode("overwrite").save()
-                out["vocabulary"][key] = round(_time.time() - t0, 3)
-    finally:
-        shutil.rmtree(_tmp, ignore_errors=True)
-    return out
-
-
-def _contamination_sf1_ab(spark, text, F, bench_mod: int, n: int) -> dict[str, float]:
-    """sf1 points for the contamination pandas-vs-JVM trade (keys
-    suffixed _sf1 inside ab.contamination_scores). Single timed run per
-    form — the JVM side is ~10s at sf1; min-of-k would triple it."""
-    import time as _time
-
-    from rnadam_spark.sources.tables import load_table
-
-    sf1_dir = os.environ.get("SPARK_GRAFT_BENCH_SF10_DIRS", "/tmp/sf1,/tmp/sf10").split(",")[0].strip()
-    # the row's whole point is pinning the crossover DECADE — refuse to
-    # publish some other scale under the _sf1 keys if the env override
-    # reorders or truncates the dir list (r12 review)
-    if not os.path.isdir(sf1_dir) or _sf_from_dir(sf1_dir) != 1.0:
-        return {}
-    docs1 = load_table(spark, sf1_dir, "documents", widen=True)
-    bench1 = docs1.filter(F.col("doc_id") % bench_mod == 0)
-    out: dict[str, float] = {}
-    for key, make in (
-        ("pandas_arrow_sf1", lambda: text.contamination_scores_pandas(docs1, bench1, n=n)),
-        ("jvm_broadcast_sf1", lambda: text.contamination_scores(docs1, bench1, n=n)),
-    ):
-        t0 = _time.time()
-        make().write.format("noop").mode("overwrite").save()
-        out[key] = round(_time.time() - t0, 3)
-    return out
 
 
 def _extras_block(spark, sf_dir: str) -> dict[str, float]:
@@ -1076,7 +345,7 @@ def _quality_block(spark, sf_dir: str) -> dict:
     the quality number that belongs NEXT TO the speed numbers (an index
     that probes too few cells is fast and useless; publishing both makes
     the approximation trade measurable, the same discipline as the
-    timing A/Bs).
+    timed rows).
 
     Reading the numbers: the driver's embeddings are random vectors —
     the ANN WORST case (no cluster structure, pairwise cosines
@@ -1210,6 +479,26 @@ def _scaling_block(spark, sf_dir: str, queries: dict, timings: dict[str, float])
     return out
 
 
+# _sf10_scaling_block rows, cheap -> expensive, so a tight budget still
+# yields several rows.
+# r14 adds dedup_clusters (probe-fused star rounds) so the driver's
+# artifact carries its cross-decade evidence. paragraph_near_dups
+# was TRIED here and removed after one run: its single-shot row
+# read 156s at the end of the bench session while interleaved
+# min-of-3 on the same tree reads 52s — the same deep-session
+# variance signature as r13's lsh row — AND its cost blew the
+# budget; its sf10 evidence lives in OPTIMIZATION_r14.md's
+# equality-swept interleaved measurements instead of a number this
+# block cannot measure honestly.
+SF10_QUERIES = (
+    "kmer_count",
+    "lsh_candidate_pairs",
+    "lm_perplexity",
+    "dedup_clusters",
+    "em_quantify",
+)
+
+
 def _sf10_scaling_block(spark, queries: dict) -> dict:
     """Cross-decade slopes sf1→sf10 for representative headline rows —
     the numbers behind the 100 TB extrapolation, living in the artifact
@@ -1240,23 +529,6 @@ def _sf10_scaling_block(spark, queries: dict) -> dict:
     # carry-forward (r10 VERDICT #3); 240 admits it while the
     # max-carries cap above bounds staleness if it outgrows even that
     budget = float(os.environ.get("SPARK_GRAFT_BENCH_SF10_BUDGET", "240"))
-    # cheap -> expensive, so a tight budget still yields several rows.
-    # r14 adds dedup_clusters (probe-fused star rounds) so the driver's
-    # artifact carries its cross-decade evidence. paragraph_near_dups
-    # was TRIED here and removed after one run: its single-shot row
-    # read 156s at the end of the bench session while interleaved
-    # min-of-3 on the same tree reads 52s — the same deep-session
-    # variance signature as r13's lsh row — AND its cost blew the
-    # budget; its sf10 evidence lives in OPTIMIZATION_r14.md's
-    # equality-swept interleaved measurements instead of a number this
-    # block cannot measure honestly.
-    names = [
-        "kmer_count",
-        "lsh_candidate_pairs",
-        "lm_perplexity",
-        "dedup_clusters",
-        "em_quantify",
-    ]
     out: dict = {"sf1_dir": sf1_dir, "sf10_dir": sf10_dir, "rows": {}, "skipped": []}
     # the block gates STARTS, so without an estimate one 3-minute query
     # admitted at budget-1s busts the driver's unattended wall clock;
@@ -1287,7 +559,7 @@ def _sf10_scaling_block(spark, queries: dict) -> dict:
             best = dt if best is None else min(best, dt)
         return round(best, 2)
 
-    for name in names:
+    for name in SF10_QUERIES:
         if name not in queries:
             continue
         reps = repeats.get(name, 1)
@@ -1462,7 +734,6 @@ def main() -> None:
             lambda: fn(spark, sf_dir).write.format("noop").mode("overwrite").save(),
         )
 
-    ab = _ab_blocks(spark, sf_dir)
     extras = _extras_block(spark, sf_dir)
     scaling = _scaling_block(spark, sf_dir, queries, timings)
     sf10_scaling = _sf10_scaling_block(spark, queries)
@@ -1478,7 +749,6 @@ def main() -> None:
         "metric": "headline_detail",
         "quality": quality,
         "stages": stages,
-        "ab": ab,
         "extras": extras,
         "scaling": scaling,
         "sf10_scaling": sf10_scaling,

@@ -101,8 +101,8 @@ def skew_report(
       task, a sensible shuffle-partition payload; pass your own.
 
     This is the measurement half of the engine's skew discipline: the
-    guards (``operators.guards``) CAP hot buckets, the skew-safe A/B
-    variants avoid per-group windows — this reports WHICH keys are hot
+    guards (``operators.guards``) CAP hot buckets, the grouped forms
+    avoid per-group windows — this reports WHICH keys are hot
     and how hot, so those knobs are set from data, not folklore."""
     import math
 

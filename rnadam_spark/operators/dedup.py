@@ -5,11 +5,9 @@ is itself a group-by-signature dedup; these operators generalize it to
 the document domain (SURVEY.md §2.7, §7 step 7):
 
 - exact dedup: content-hash groupBy (one shuffle on the hash);
-- MinHash: shingle codes hashed once via explode, then the 16 affine
-  variants reduced by a map-side partial aggregate — the shuffle
-  carries one row per document after combine (see ``shingle_codes``
-  for why the explode beats a pure-projection variant ~20×);
-- SimHash: the same explode + partial-aggregate shape over token codes;
+- MinHash / SimHash: one Arrow-batched numpy pass per document — the
+  signature is a function of one row, so nothing is exploded or
+  shuffled;
 - LSH candidates (``lsh_candidate_pairs``): banded MinHash buckets.
   With a bucket cap, docs with identical signatures collapse to one
   group first and pairs expand from the group grain; uncapped, a band
@@ -45,8 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rnadam_spark.functions.hashing import MOD, hash_family, poly_hash_col, poly_hash_sql
-from rnadam_spark.functions.shingles import char_shingles, token_ngrams, tokens
+from rnadam_spark.functions.hashing import MOD, hash_family, poly_hash_sql
+from rnadam_spark.functions.shingles import char_shingles, token_ngrams
 
 SHINGLE_K = 4
 N_HASHES = 16
@@ -62,79 +60,30 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc
     )
 
 
-def shingle_codes(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = SHINGLE_K
-) -> DataFrame:
-    """(doc_id, code): polynomial code of every k-shingle, exploded.
-
-    The expensive part (char extraction + rolling hash) runs exactly
-    once per shingle; the n_hashes affine variants downstream are cheap
-    integer ops on ``code``. (A pure-projection variant — 16×
-    array_min(transform(...)) — looks shuffle-free but CollapseProject
-    re-inlines the shingle hashing into every hash column, multiplying
-    the hot work 16×; explode + partial aggregate is ~20× faster and
-    its shuffle carries only one row per document after map-side
-    combine.)"""
-    return docs.filter(F.length(text_col) >= k).select(
-        F.col(id_col),
-        F.explode(
-            F.transform(char_shingles(text_col, k), lambda x: poly_hash_col(x, k))
-        ).alias("code"),
-    )
-
-
 def minhash_signatures(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    kernel: str = "pandas",
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, h0..h15): h_j = min over shingles of
     (a_j·code + b_j) mod P. Documents shorter than the shingle width
     are dropped (they have no shingles to hash).
 
-    ``kernel`` picks the execution form (r13 optimization round; both
-    forms produce IDENTICAL signatures — every operation is exact
-    BIGINT arithmetic, pinned by
-    tests/test_dedup.py::test_minhash_pandas_kernel_matches_jvm):
+    One Arrow-batched numpy pass emits the final per-document grain
+    directly — the signature is a function of one row, so nothing
+    corpus-sized is exploded or shuffled at all. Each batch's texts
+    concatenate into one codepoint array (``utf-32-le`` → exact
+    ``ascii()`` codepoints), the rolling polynomial codes vectorize
+    over it, and the 16 affine minima reduce per-document with
+    ``np.minimum.reduceat``. It beat the explode + partial-aggregate
+    form 4.9 vs 12.1s at sf10 (OPTIMIZATION_r13.md); that form is the
+    parity oracle in tests/test_dedup.py.
 
-    - "pandas" (default): one Arrow-batched numpy pass emits the final
-      per-document grain directly — the signature is a function of one
-      row, so nothing corpus-sized is exploded or shuffled at all. Each
-      batch's texts concatenate into one codepoint array
-      (``utf-32-le`` → exact ``ascii()`` codepoints), the rolling
-      polynomial codes vectorize over it, and the 16 affine minima
-      reduce per-document with ``np.minimum.reduceat``. Measured
-      min-of-2 warm: 0.35s vs 0.81s at sf0.1 and 4.9s vs 12.1s at sf10
-      against the JVM form (the shingle transform + 1B-row explode is
-      ~70% of the whole LSH chain's sf10 wall time; bench
-      ``ab.minhash`` re-measures each round).
-    - "jvm": the explode + partial-aggregate form — shingle codes
-      hashed once via explode, the 16 affine variants reduced by a
-      map-side partial aggregate (the shuffle carries one row per
-      document per task after combine)."""
-    if kernel == "jvm":
-        codes = shingle_codes(docs, text_col, id_col)
-        aggs = [
-            F.min((F.col("code") * a + b) % MOD).alias(f"h{j}")
-            for j, (a, b) in enumerate(hash_family(N_HASHES, 42))
-        ]
-        return codes.groupBy(id_col).agg(*aggs)
-    if kernel != "pandas":
-        raise ValueError(f"unknown minhash kernel: {kernel!r}")
-    return _minhash_signatures_pandas(docs, text_col, id_col)
-
-
-def _minhash_signatures_pandas(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = SHINGLE_K
-) -> DataFrame:
-    """The Arrow/numpy kernel behind ``minhash_signatures`` (see its
-    docstring). Exactness argument: ``utf-32-le`` decoding yields the
-    same per-character codepoints as Spark's ``ascii(substr(i, 1))``,
-    the rolling ``(acc·31 + c) % MOD`` chain is the same int64
-    arithmetic as ``poly_hash_col`` (every intermediate < 32·MOD + 255,
-    far inside int64), and the affine minima are exact integer ops —
-    no float enters anywhere."""
+    Exactness: ``utf-32-le`` decoding yields the same per-character
+    codepoints as Spark's ``ascii(substr(i, 1))``, the rolling
+    ``(acc·31 + c) % MOD`` chain is the same int64 arithmetic as
+    ``poly_hash_col`` (every intermediate < 32·MOD + 255, far inside
+    int64), and the affine minima are exact integer ops — no float
+    enters anywhere."""
+    k = SHINGLE_K
     fam = hash_family(N_HASHES, 42)
     id_type = docs.schema[id_col].dataType.simpleString()
 
@@ -500,62 +449,24 @@ def incremental_near_dups(
 
 
 def simhash16(
-    docs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 7,
-    kernel: str = "pandas",
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id", seed: int = 7
 ) -> DataFrame:
     """(doc_id, simhash): 16-bit SimHash over distinct tokens.
 
     Token code = polynomial hash of the token right-padded to 8 chars;
     bit_j = sign of Σ_tokens (2·(affine_j(code) mod 2) − 1).
 
-    ``kernel`` picks the execution form (r13, same integer-exact twin
-    discipline as ``minhash_signatures`` — parity pinned incl.
-    tokenization corners by tests/test_dedup.py):
-
-    - "pandas" (default): the numpy kernel — ``re.split(r'\\s+', ...,
-      flags=re.ASCII)`` reproduces Java's default (non-unicode) ``\\s``
-      class exactly, distinct tokens pad/truncate to the 8-char hash
-      window, codes vectorize as an (n_tokens, 8) codepoint matrix,
-      and the 16 signed bit-sums reduce per document with
-      ``np.add.reduceat``. Measured min-of-2 warm: 0.44 vs 1.50s at
-      sf0.1, 1.6 vs 2.4s at sf10 (bench ``ab.simhash`` re-measures).
-    - "jvm": explode + 16-sum partial aggregate (shuffle carries one
-      row per doc per task after map-side combine)."""
-    if kernel == "jvm":
-        token_codes = docs.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    F.array_distinct(tokens(text_col)),
-                    lambda t: poly_hash_col(F.rpad(t, 8, "_"), 8),
-                )
-            ).alias("code"),
-        )
-        bit_sums = [
-            F.sum(((F.col("code") * a + b) % MOD % 2) * 2 - 1).alias(f"s{j}")
-            for j, (a, b) in enumerate(hash_family(16, seed))
-        ]
-        sums = token_codes.groupBy(id_col).agg(*bit_sums)
-        simhash = F.lit(0)
-        for j in range(16):
-            simhash = simhash + (F.col(f"s{j}") >= 0).cast("int") * (2**j)
-        return sums.select(F.col(id_col), simhash.cast("bigint").alias("simhash"))
-    if kernel != "pandas":
-        raise ValueError(f"unknown simhash kernel: {kernel!r}")
-    return _simhash16_pandas(docs, text_col, id_col, seed)
-
-
-def _simhash16_pandas(
-    docs: DataFrame, text_col: str, id_col: str, seed: int
-) -> DataFrame:
-    """The Arrow/numpy kernel behind ``simhash16`` (see its docstring).
-    Exactness: distinctness is over FULL tokens (two long tokens
-    sharing their first 8 chars both contribute, as in the JVM form's
-    array_distinct-before-hash order); every arithmetic step is int64,
-    bit-equal to the JVM chain."""
+    One numpy pass per Arrow batch: ``re.split(r'\\s+', ...,
+    flags=re.ASCII)`` reproduces Java's default (non-unicode) ``\\s``
+    class exactly, distinct tokens pad/truncate to the 8-char hash
+    window, codes vectorize as an (n_tokens, 8) codepoint matrix, and
+    the 16 signed bit-sums reduce per document with ``np.add.reduceat``.
+    It beat the explode + 16-sum aggregate 1.6 vs 2.4s at sf10
+    (OPTIMIZATION_r13.md); that form is the parity oracle in
+    tests/test_dedup.py. Exactness: distinctness is over FULL tokens
+    (two long tokens sharing their first 8 chars both contribute, as
+    with array_distinct before hashing); every arithmetic step is
+    int64."""
     fam = hash_family(16, seed)
     id_type = docs.schema[id_col].dataType.simpleString()
 
@@ -787,7 +698,6 @@ def verify_pairs(
     threshold: float = 0.8,
     text_col: str = "text",
     id_col: str = "doc_id",
-    kernel: str = "packed",
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard): the verify stage of the LSH pipeline —
     exact k-shingle Jaccard computed ONLY for candidate pairs, keeping
@@ -826,21 +736,18 @@ def verify_pairs(
     strictly below ``threshold``. With ``threshold == 0`` the ratio
     test (≥ 0) keeps every pair, degenerating to the old plan.
 
-    ``kernel`` (r14): the verify stage measured COMPUTE-bound, not
-    shuffle-bound, at sf10 — the pairs⋈arrays⋈arrays double join runs
-    in 5.7s warm with a trivial projection but 84.2s with the
-    ``array_intersect`` jaccard over 4-char STRING elements (15.7M
-    pairs × ~300 string hash/compares each). "packed" (default)
-    intersects each pair's shingle sets as packed int64 codes instead
+    Packed shingles (r14): the verify stage measured COMPUTE-bound,
+    not shuffle-bound, at sf10 — the pairs⋈arrays⋈arrays double join
+    runs in 5.7s warm with a trivial projection but 84.2s with the
+    ``array_intersect`` jaccard over 4-char STRING elements. So each
+    pair's shingle sets intersect as packed int64 codes instead
     (:func:`_packed_shingle_rows`: injective on BMP⁴, astral-containing
     shingles ride a separate — normally empty — string array, and the
     intersection distributes exactly over that disjoint partition —
-    null/short texts emit empty arrays exactly as char_shingles does),
-    so the same integers flow through Spark's long-specialized hash
-    set: measured 84.2 → 33.96s on the same barriered inputs,
-    verified-pair count identical (14,649,366 at sf10). "jvm" keeps
-    the string form; k·16 > 64 bits auto-falls back to it (codes no
-    longer fit an int64)."""
+    null/short texts emit empty arrays exactly as char_shingles does):
+    84.2 → 33.96s, verified-pair count identical (14,649,366 at sf10,
+    OPTIMIZATION_r14.md). When k·16 > 64 bits the codes no longer fit
+    an int64, and the string form runs."""
     from rnadam_spark.functions.rounding import hround
     from rnadam_spark.lineage import truncate_lineage
 
@@ -855,9 +762,7 @@ def verify_pairs(
     # straight from lsh_candidate_pairs — and it now has three
     # consumers (two id projections + the final join), so it
     # materializes first (16 bytes/row, bounded by candidate count)
-    if kernel not in ("packed", "jvm"):
-        raise ValueError(f"unknown verify_pairs kernel: {kernel!r}")
-    use_packed = kernel == "packed" and k * 16 <= 64
+    use_packed = k * 16 <= 64
     pairs = truncate_lineage(pairs.select("doc_a", "doc_b"))
     ids = (
         pairs.select(F.col("doc_a").alias(id_col))

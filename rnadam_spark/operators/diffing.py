@@ -72,9 +72,9 @@ def vocabulary_shift(
     from rnadam_spark.operators.text import vocabulary_pandas
 
     def probs(df: DataFrame, name: str) -> DataFrame:
-        # r12 twin default: the Arrow-batched vocabulary kernel (bench
-        # ab.vocabulary re-measures per round; pinned tf/df-exact-equal
-        # to the run-length HOF form by tests/test_text_curation)
+        # the Arrow-batched vocabulary kernel (r12; pinned
+        # tf/df-exact-equal to the run-length HOF form by
+        # tests/test_text_curation)
         v = vocabulary_pandas(df, text_col=text_col).select("token", "tf")
         tot = v.agg(F.sum("tf").alias("_tot"))
         return v.crossJoin(F.broadcast(tot)).select(

@@ -141,7 +141,7 @@ def bucket_counts_pandas(
     rows per batch), then one bounded groupBy. All-integer counts, so
     the pin (tests/test_dsir.py) is exact equality. Measured with the
     fused scorer below: 17.7 → 11.4s at sf10 for the full dsir gate
-    row (bench ``ab.dsir_weights``) — the gram-string construction
+    row (r12) — the gram-string construction
     under interpreted slice+array_join is the contamination shape."""
 
     def batches(it):
@@ -487,7 +487,6 @@ def dsir(
     seed: int = 29,
     text_col: str = "text",
     id_col: str = "doc_id",
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(doc_id, n_features, log_weight): the ~``fraction`` of
     ``raw_docs`` whose hashed-n-gram profile best matches
@@ -495,28 +494,16 @@ def dsir(
     Gumbel-top-k resample. Join the result back to the corpus on
     ``doc_id`` to materialize the selected text.
 
-    ``kernel`` (r13): "pandas" (default) composes the Arrow twins the
-    registered dsir_log_weights row already defaults to
+    Composes the Arrow twins the registered dsir_log_weights row uses
     (:func:`bucket_counts_pandas` ×2 + the fused
-    :func:`dsir_log_weights_pandas` scorer) — value-equal by the same
-    twin pins, measured 23.6 → 12.2s at sf10 end-to-end. "jvm" keeps
-    the explode + broadcast-join composition. Both are eager at
+    :func:`dsir_log_weights_pandas` scorer) — value-equal to the
+    explode + broadcast-join composition by the same twin pins, and
+    23.6 → 12.2s at sf10 end-to-end (OPTIMIZATION_r13.md). Eager at
     construction (the log-ratio collect). Callers whose target is a
     row-local predicate of ``raw_docs`` itself should prefer
     :func:`dsir_log_weights_self_pandas` + :func:`dsir_select` — one
     histogram pass instead of two."""
-    if kernel == "pandas":
-        tc = bucket_counts_pandas(target_docs, n_buckets, ns, text_col)
-        rc = bucket_counts_pandas(raw_docs, n_buckets, ns, text_col)
-        w = dsir_log_weights_pandas(
-            raw_docs, tc, rc, n_buckets, alpha, ns, text_col, id_col
-        )
-    elif kernel == "jvm":
-        tc = bucket_counts(target_docs, n_buckets, ns, text_col)
-        rc = bucket_counts(raw_docs, n_buckets, ns, text_col)
-        w = dsir_log_weights(
-            raw_docs, tc, rc, n_buckets, alpha, ns, text_col, id_col
-        )
-    else:
-        raise ValueError(f"unknown dsir kernel: {kernel!r}")
+    tc = bucket_counts_pandas(target_docs, n_buckets, ns, text_col)
+    rc = bucket_counts_pandas(raw_docs, n_buckets, ns, text_col)
+    w = dsir_log_weights_pandas(raw_docs, tc, rc, n_buckets, alpha, ns, text_col, id_col)
     return dsir_select(w, fraction, seed, "log_weight", id_col)

@@ -25,22 +25,10 @@ Scale shape, mirroring the engine's other driver-loop algorithms (EM
 
 from __future__ import annotations
 
-import math
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rnadam_spark.lineage import truncate_lineage
-
-#: target edge rows per partition for the opt-in loop-static edge
-#: cache — scale-adaptive (sf0.1 → 1 partition, ~10^9 edges →
-#: thousands), the same data-derived sizing as the EM edge cache
-#: (``algorithms.quantify.edge_partitions``, r13 §7). 62.5k measured better
-#: than 250k at sf10 (4.17 vs 5.65s); override per cluster.
-_EDGE_ROWS_PER_PART = int(
-    os.environ.get("SPARK_GRAFT_PR_EDGE_ROWS_PER_PART", "62500")
-)
 
 
 def pagerank(
@@ -50,7 +38,6 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     checkpoint_dir: str | None = None,
-    cache_edges: bool = False,
 ) -> DataFrame:
     """(node, rank): PageRank after ``iterations`` power steps with
     uniform teleport and uniform dangling-mass redistribution; ranks
@@ -58,20 +45,14 @@ def pagerank(
     parallel edges (weight by multiplicity); self-loops participate
     like any edge.
 
-    ``cache_edges`` (r13): materialize the loop-static edge table once,
-    hash-partitioned on the join key with a data-derived partition
-    count, so iterations stop re-executing the edge subtree. Default
-    FALSE by measurement, not theory: over the registered row's cheap
-    projected edges the lazy form ties or wins at every measurable
-    decade (sf10 interleaved min-of-3: lazy 4.03–4.36s vs cache 4.17s
-    at 62.5k rows/part, 5.65s at 250k — ranks are node-sized so the
-    per-iteration join BROADCASTS them and never shuffles the edge
-    side; the cache only saves the re-scan, and its materialization +
-    reduced scan parallelism cost more than those re-scans here). Opt
-    IN when the edge subtree is expensive to recompute — e.g. edges
-    extracted from document text — where (iterations − 1) saved
-    corpus passes dominate; ``ab.pagerank`` re-measures the trade
-    every round. Ranks identical either way (tests/test_graph.py)."""
+    The loop-static edge table stays lazy: over projected edges it tied
+    or beat a materialized, hash-partitioned edge cache at every
+    measured decade (sf10 interleaved min-of-3: 4.03–4.36 vs 4.17s,
+    OPTIMIZATION_r13.md). Ranks are node-sized, so the per-iteration
+    join broadcasts them and never shuffles the edge side; a cache
+    would only save the re-scan. Callers whose edges are expensive to
+    recompute (e.g. extracted from document text) should materialize
+    them before the call."""
     nodes = (
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
@@ -88,22 +69,6 @@ def pagerank(
     base = truncate_lineage(nodes.join(out_deg, "node", "left"), checkpoint_dir)
     ranks = base.select("node", F.lit(1.0 / n).alias("rank"), "_deg")
     e = edges.select(F.col(src).alias("node"), F.col(dst).alias("_dst"))
-    # r13 (guide §2.4/§5): the edge table is loop-STATIC but was left
-    # lazy, so every iteration re-executed its whole upstream subtree
-    # (scan + transforms) AND re-shuffled it into the join. Materialize
-    # it ONCE, hash-partitioned on the join key with a data-derived
-    # partition count (truncate_lineage preserves the partitioning, so
-    # each iteration's join exchanges only the node-sized ranks table).
-    # Edge count comes free off the already-materialized degree table —
-    # Σ out-degree — a 1-row aggregate, not a corpus pass.
-    if cache_edges:
-        n_edges = int(
-            base.agg(F.coalesce(F.sum("_deg"), F.lit(0)).alias("m")).collect()[0]["m"]
-        )
-        e = truncate_lineage(
-            e.repartition(max(1, math.ceil(n_edges / _EDGE_ROWS_PER_PART)), "node"),
-            checkpoint_dir,
-        )
     for _ in range(iterations):
         # dangling mass as a broadcast 1-row aggregate over the PREVIOUS
         # (materialized) ranks — never a driver collect, and the whole

@@ -51,11 +51,10 @@ def train_char_lm(
     n: int = 3,
     text_col: str = "text",
     cache: bool = True,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(gram, gram_cnt): character ``n``-gram counts of a reference
-    corpus — the model table for :func:`lm_perplexity`. One explode +
-    one groupBy; the result is bounded by ``alphabet**n`` distinct rows
+    corpus — the model table for :func:`lm_perplexity`. One Arrow pass
+    + one groupBy; the result is bounded by ``alphabet**n`` distinct rows
     (not corpus size), so it broadcasts at any scale. Prefix counts are
     NOT materialized here: the scorer derives them from the gram table
     (``prefix_cnt = sum(gram_cnt) group by first n−1 chars``), which
@@ -79,26 +78,14 @@ def train_char_lm(
     fire-once model where the caller would rather pay the one extra
     training pass than own a handle.
 
-    ``kernel`` (r13 optimization round): "pandas" (default) is the
-    ``em_global_counts`` Counter form — ONE Counter per Arrow batch (a
-    map-side combine in Python) emits one partial row per distinct gram
-    per batch, so the exchange moves vocabulary-bounded partials
-    instead of the per-position gram explosion (guide §2.3 "aggregate
-    before you shuffle"). Counts are integer-exact either way, so the
-    model table is EXACTLY equal to the JVM form (pinned by
-    tests/test_lm.py::test_train_char_lm_kernels_equal); measured
-    training pass 8.0 → 2.2s at sf10, lm_perplexity end-to-end
-    10.9 → 5.0s. "jvm" keeps the explode + codegen hash aggregate one
-    flag away; ``ab.lm_train`` re-measures the trade each round."""
-    if kernel == "jvm":
-        model = (
-            corpus.select(F.explode(char_shingles(text_col, n)).alias("gram"))
-            .groupBy("gram")
-            .agg(F.count("*").cast("bigint").alias("gram_cnt"))
-        )
-        return model.cache() if cache else model
-    if kernel != "pandas":
-        raise ValueError(f"unknown train_char_lm kernel: {kernel!r}")
+    Training is the ``em_global_counts`` Counter form — ONE Counter per
+    Arrow batch (a map-side combine in Python) emits one partial row
+    per distinct gram per batch, so the exchange moves
+    vocabulary-bounded partials instead of the per-position gram
+    explosion (guide §2.3 "aggregate before you shuffle"). Counts are
+    integer-exact, so the model table EXACTLY equals the explode +
+    hash-aggregate form it replaced (pinned by tests/test_lm.py);
+    training 8.0 → 2.2s at sf10 (OPTIMIZATION_r13.md)."""
 
     def batches(it):
         from collections import Counter
@@ -345,7 +332,7 @@ def lm_perplexity_pandas(
     where Python scores a document with two dict lookups per position
     against the collected (alphabet**n-bounded) model — measured
     2.8x at sf10 / 3.9x at sf100 for the registered corpus-self-train
-    row (bench ``ab.lm_scoring``, re-measured per round).
+    row (r12).
 
     Parity contract with the JVM twin, mirrored here exactly:
     documents shorter than ``n`` (and NULL text, via explode_outer)
@@ -478,7 +465,7 @@ def paragraph_perplexity_pandas(
 ) -> DataFrame:
     """Arrow-batched pandas twin of :func:`paragraph_perplexity` —
     same five rounded columns, pinned value-equal by tests/test_lm.py;
-    measured 3.1x at sf10 (bench ``ab.paragraph_ppl``). One Python
+    measured 3.1x at sf10 (r12). One Python
     pass does split + numbering + scoring against the collected model,
     replacing posexplode + a second corpus-sized gram explode + two
     join probes per char position.

@@ -350,7 +350,7 @@ def _fake_envelope(payload: bytes):
     return np.frombuffer(payload, dtype=np.uint8)[::stride][:65].astype("float64")
 
 
-def audio_fingerprint(assets: DataFrame, kernel: str = "batch") -> DataFrame:
+def audio_fingerprint(assets: DataFrame) -> DataFrame:
     """(asset_id, afp, is_wav): 64-bit perceptual audio fingerprint —
     the audio-modality twin of :func:`dhash_assets`. Real PCM decode
     for plain WAV (stdlib chunk walk + numpy), marked deterministic
@@ -363,17 +363,13 @@ def audio_fingerprint(assets: DataFrame, kernel: str = "batch") -> DataFrame:
     :func:`audio_near_pairs` is :func:`dhash_hamming_pairs` over the
     ``afp`` column.
 
-    ``kernel`` (r13, the dhash twin's discipline): "batch" (default)
-    vectorizes the FAKE-path envelopes across the Arrow batch — for a
+    The FAKE-path envelopes vectorize across the Arrow batch — for a
     65-value fake envelope :func:`_envelope_bits`'s 65 segment splits
     are single-element identities, so the whole batch reduces to one
-    delta-sign compare + one packbits (measured 7.3 → 2.6s per
-    500k-asset pass at sf10). Real WAV decodes, short (<65 byte)
-    payloads and nulls keep the per-asset path — every fingerprint
-    bit unchanged (tests/test_multimodal.py::test_audio_kernels_equal)."""
-    if kernel not in ("batch", "scalar"):
-        raise ValueError(f"unknown audio_fingerprint kernel: {kernel!r}")
-    batch_fake = kernel == "batch"
+    delta-sign compare + one packbits (7.3 → 2.6s per 500k-asset pass
+    at sf10, OPTIMIZATION_r13.md). Real WAV decodes, short (<65 byte)
+    payloads and nulls take the per-asset path; every fingerprint bit
+    equals the per-asset helpers' (tests/test_multimodal.py)."""
 
     def fp(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -385,16 +381,6 @@ def audio_fingerprint(assets: DataFrame, kernel: str = "batch") -> DataFrame:
             return _envelope_bits(samples), True
 
         for pdf in batches:
-            if not batch_fake:
-                pairs = pdf["data"].map(one)
-                yield pd.DataFrame(
-                    {
-                        "asset_id": pdf["asset_id"],
-                        "afp": pairs.map(lambda t: t[0]).astype("int64"),
-                        "is_wav": pairs.map(lambda t: t[1]),
-                    }
-                )
-                continue
             payloads = list(pdf["data"])
             afp = np.zeros(len(payloads), dtype=np.int64)
             is_wav = np.zeros(len(payloads), dtype=bool)
@@ -422,7 +408,7 @@ def audio_fingerprint(assets: DataFrame, kernel: str = "batch") -> DataFrame:
                     afp[i] = _envelope_bits(v)
             if fake_idx:
                 # fake envelopes are non-negative bytes, so the
-                # scalar kernel's np.abs is an identity here
+                # per-asset path's np.abs is an identity here
                 afp[fake_idx] = _pack_delta_bits(np.stack(fake_rows))
             yield pd.DataFrame(
                 {"asset_id": pdf["asset_id"], "afp": afp, "is_wav": is_wav}
@@ -599,7 +585,7 @@ def _pack_delta_bits(mat):
     return packed.view(">i8").ravel().astype(np.int64)
 
 
-def dhash_assets(assets: DataFrame, hash_size: int = 8, kernel: str = "batch") -> DataFrame:
+def dhash_assets(assets: DataFrame, hash_size: int = 8) -> DataFrame:
     """(asset_id, dhash): 64-bit perceptual difference hash per image —
     the image-modality twin of the text SimHash. Near-identical images
     (re-encodes, small crops/brightness shifts) land within a few bits;
@@ -610,17 +596,13 @@ def dhash_assets(assets: DataFrame, hash_size: int = 8, kernel: str = "batch") -
     the hash is 8 bytes per image, so the output table is negligible
     next to the binary payloads it summarizes.
 
-    ``kernel`` (r13): "batch" (default) vectorizes the FAKE-path
-    assets across the whole Arrow batch — the scalar path spent ~100
-    tiny numpy calls per asset on block-splits that are single-element
-    identities for the fake 8×9 grid (measured 10.7s → 2.7s per
-    500k-asset hash pass at sf10). Real BMP/PIL decodes and null
-    payloads keep the per-asset path, so the layering and every hash
-    bit are unchanged (pinned by
-    tests/test_multimodal.py::test_dhash_kernels_equal)."""
-    if kernel not in ("batch", "scalar"):
-        raise ValueError(f"unknown dhash kernel: {kernel!r}")
-    batch_fake = kernel == "batch"
+    At ``hash_size`` 8 the FAKE-path assets vectorize across the whole
+    Arrow batch — the per-asset path spent ~100 tiny numpy calls per
+    asset on block-splits that are single-element identities for the
+    fake 8×9 grid (10.7s → 2.7s per 500k-asset hash pass at sf10,
+    OPTIMIZATION_r13.md). Real BMP/PIL decodes, null payloads and other
+    hash sizes take the per-asset path; every hash bit equals the
+    per-asset helpers' (tests/test_multimodal.py)."""
 
     def hasher(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import numpy as np
@@ -634,7 +616,7 @@ def dhash_assets(assets: DataFrame, hash_size: int = 8, kernel: str = "batch") -
             return _dhash_bits(gray, hash_size)
 
         for pdf in batches:
-            if not batch_fake or hash_size != 8:
+            if hash_size != 8:
                 yield pd.DataFrame(
                     {"asset_id": pdf["asset_id"], "dhash": pdf["data"].map(one).astype("int64")}
                 )

@@ -170,12 +170,12 @@ def repetition_stats_pandas(
     """The vectorized-Python twin of :func:`repetition_stats` — an
     Arrow-batched ``mapInPandas`` computing the IDENTICAL seven columns
     (pinned value-equal by tests/test_repetition.py on real corpus rows
-    plus null/empty/whitespace edges), kept as the measured A/B
-    alternative for the engine's heaviest interpreted-HOF kernel
-    (bench.py ``ab`` block). The JVM side pays interpreted higher-order
-    evaluation per row; this side pays one Arrow batch transfer plus
-    Python ``Counter`` work per document — which one wins is a
-    measurement, not a principle, and the default follows the bench.
+    plus null/empty/whitespace edges), the measured alternative for the
+    engine's heaviest interpreted-HOF kernel. The JVM side pays
+    interpreted higher-order evaluation per row; this side pays one
+    Arrow batch transfer plus Python ``Counter`` work per document —
+    5.3x faster at sf10 in the r11 measurement, which the registered
+    ``repetition_stats`` row follows.
 
     Semantics mirrored exactly: tokens split on Java's ``\\s`` class
     (``[ \\t\\n\\x0B\\f\\r]`` — NOT Python's unicode-aware ``\\s``),
@@ -277,14 +277,13 @@ def dedup_lines(
     exactly the input character volume. Three exchanges total, none of
     which collects a hot key into a single task's sort buffer.
 
-    Measured honestly (bench.py ``ab.dedup_lines``): at sf0.1 the
+    Measured honestly: at sf0.1 the
     ``row_number()`` window twin is FASTER (~0.6s vs ~1.0s — one fewer
     exchange, and no line is hot at that scale). The aggregate form
     stays the default because its advantage is a worst-case bound, not
     a mean: a 100 TB web corpus guarantees boilerplate lines with 10⁸
     occurrences, and the window form funnels each one through a single
-    task's sort buffer while this form partial-aggregates it away. The
-    per-round A/B exists to keep both numbers visible.
+    task's sort buffer while this form partial-aggregates it away.
 
     Granularity is a parameter: ``split_pattern`` is a regex, so
     ``split_pattern=r"\\n{2,}", join_sep="\\n\\n"`` gives

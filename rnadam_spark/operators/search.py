@@ -11,14 +11,13 @@ Sparck Jones; the Okapi formulation) over the documents table:
 
 Scale shape — two jobs, no explode, no per-term shuffle:
 
-1. **Corpus statistics pass**: one aggregate computes N, avgdl, and
-   df(t) for every query term as conditional-sum columns (|query| tiny
-   integers to the driver — never a corpus-keyed groupBy; a term-keyed
-   df table would shuffle every token occurrence for terms nobody
-   queried).
-2. **Scoring pass**: idf values inline as literals; per-document tf is
-   an in-row count over the token array; the whole score is a
-   zero-shuffle projection + TakeOrdered top-k.
+1. **Corpus statistics pass**: one Arrow pass + aggregate computes N,
+   avgdl, and df(t) for every query term (|query| tiny integers to the
+   driver — never a corpus-keyed groupBy; a term-keyed df table would
+   shuffle every token occurrence for terms nobody queried).
+2. **Scoring pass**: idf values ride the closure; per-document tf is
+   a Counter over the document's tokens; the whole score is a
+   zero-shuffle Arrow projection + TakeOrdered top-k.
 
 Tokenization is the engine-portable ``[a-z0-9]+`` lowercase extraction
 (same as C4 bad-word matching and the DuckDB cross-check).
@@ -28,48 +27,24 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rnadam_spark.functions.rounding import hround
-
-
-def _terms_of(text_col: str | Column) -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    return F.regexp_extract_all(F.lower(c), F.lit("[a-z0-9]+"), 0)
 
 
 def corpus_stats(
     docs: DataFrame,
     query_terms: list[str],
     text_col: str = "text",
-    kernel: str = "pandas",
 ) -> tuple[int, float, dict[str, int]]:
-    """(N, avgdl, {term: df}) in ONE corpus aggregate: document
-    frequency per query term is a conditional sum over an in-row
-    membership test, so the pass costs |query| boolean columns — no
-    token explode, no shuffle beyond the final scalar reduction.
-
-    ``kernel`` (r13): "pandas" (default) computes the SAME integers
-    per Arrow batch (a Counter-style map-side combine) — every
-    aggregate here is integer-exact (Spark's avg over an int column
-    sums as bigint and divides once), so avgdl is the identical
-    double: ``float(total_dl)/float(n_nonnull)``. "jvm" keeps the
-    conditional-sum aggregate."""
-    if kernel == "jvm":
-        toks = _terms_of(text_col)
-        aggs = [
-            F.count("*").alias("_n"),
-            F.avg(F.size(toks)).alias("_avgdl"),
-        ] + [
-            F.sum(F.array_contains(toks, t).cast("bigint")).alias(f"_df_{i}")
-            for i, t in enumerate(query_terms)
-        ]
-        row = docs.agg(*aggs).collect()[0]
-        dfs = {t: int(row[f"_df_{i}"] or 0) for i, t in enumerate(query_terms)}
-        return int(row["_n"]), float(row["_avgdl"] or 0.0), dfs
-    if kernel != "pandas":
-        raise ValueError(f"unknown corpus_stats kernel: {kernel!r}")
+    """(N, avgdl, {term: df}) in ONE corpus aggregate: each Arrow batch
+    emits its partial counts (a Counter-style map-side combine), so
+    there is no token explode and no shuffle beyond the final scalar
+    reduction. Every aggregate is integer-exact, and avgdl is the
+    double Spark's avg over an int column gives (bigint sum divided
+    once): ``float(total_dl)/float(n_nonnull)`` — pinned against the
+    conditional-sum aggregate it replaced by tests/test_search.py."""
     terms = list(query_terms)
 
     def batches(it):
@@ -130,7 +105,6 @@ def bm25_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     stats: tuple[int, float, dict[str, int]] | None = None,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(doc_id, score): top-k documents by Okapi BM25 for a free-text
     ``query``. Pass ``stats`` (from :func:`corpus_stats`, possibly
@@ -138,88 +112,60 @@ def bm25_topk(
     pass — the production pattern where N/avgdl/df come from a
     maintained statistics table.
 
-    ``kernel`` (r13): "pandas" (default) scores each Arrow batch in
-    numpy with the JVM expression's EXACT float sequence — integer tf
+    Each Arrow batch scores in numpy with the JVM expression's EXACT float sequence — integer tf
     from a per-doc Counter, then per term
     ``((idf·tf)·(k1+1)) / (tf + k1·((1−b) + (b·dl)/avgdl))``
     accumulated left-to-right in sorted-term order, all float64 — so
     the 6dp-rounded scores (rounding/filter/top-k stay in the JVM,
-    unchanged) are bit-identical to the interpreted form, which ran
-    one ``filter(toks, x == t)`` HOF traversal per query term per doc
-    (measured: the scoring pass was 7.5s of bm25's 8.7s sf10 wall,
-    tokenization itself 0.65s). Tokenization parity
+    unchanged) are bit-identical to the interpreted form it replaced,
+    which ran one ``filter(toks, x == t)`` HOF traversal per query term
+    per doc (the scoring pass was 7.5s of bm25's 8.7s sf10 wall,
+    OPTIMIZATION_r13.md). Tokenization parity
     (``str.lower``+``re.findall`` ≡ ``lower``+``regexp_extract_all``)
-    is pinned incl. İ/K(Kelvin)/ß/Σ/titlecase/fullwidth corners by
-    tests/test_search.py. "jvm" keeps the expression form; the
-    registered gate row re-verifies against the DuckDB oracle either
-    way."""
+    is pinned incl. İ/K(Kelvin)/ß/Σ/titlecase/fullwidth corners against
+    that form by tests/test_search.py."""
     terms = sorted(set(_py_terms(query)))
     if not terms:
         raise ValueError("query contains no indexable terms")
-    n, avgdl, dfs = stats if stats is not None else corpus_stats(
-        docs, terms, text_col, kernel=kernel
-    )
+    n, avgdl, dfs = stats if stats is not None else corpus_stats(docs, terms, text_col)
     idfs = [math.log((n - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0) for t in terms]
-    if kernel == "pandas":
-        avg_floor = max(avgdl, 1e-9)
-        id_type = docs.schema[id_col].dataType.simpleString()
+    avg_floor = max(avgdl, 1e-9)
+    id_type = docs.schema[id_col].dataType.simpleString()
 
-        def batches(it):
-            import re
-            from collections import Counter
+    def batches(it):
+        import re
+        from collections import Counter
 
-            import numpy as np
-            import pandas as pd
+        import numpy as np
+        import pandas as pd
 
-            pat = re.compile(r"[a-z0-9]+")
-            for pdf in it:
-                ids, dls = [], []
-                tf_cols: list[list[int]] = [[] for _ in terms]
-                for did, text in zip(pdf[id_col], pdf["_t"]):
-                    if text is None:
-                        continue  # null text scores null → filtered
-                    c = Counter(pat.findall(text.lower()))
-                    ids.append(did)
-                    dls.append(sum(c.values()))
-                    for j, t in enumerate(terms):
-                        tf_cols[j].append(c.get(t, 0))
-                if not ids:
-                    continue
-                dl = np.array(dls, dtype=np.float64)
-                dn = (1.0 - b) + (b * dl) / avg_floor
-                s = np.zeros(len(ids))
+        pat = re.compile(r"[a-z0-9]+")
+        for pdf in it:
+            ids, dls = [], []
+            tf_cols: list[list[int]] = [[] for _ in terms]
+            for did, text in zip(pdf[id_col], pdf["_t"]):
+                if text is None:
+                    continue  # null text scores null → filtered
+                c = Counter(pat.findall(text.lower()))
+                ids.append(did)
+                dls.append(sum(c.values()))
                 for j, t in enumerate(terms):
-                    tf = np.array(tf_cols[j], dtype=np.float64)
-                    s = s + ((idfs[j] * tf) * (k1 + 1.0)) / (tf + k1 * dn)
-                yield pd.DataFrame({id_col: ids, "_score": s})
+                    tf_cols[j].append(c.get(t, 0))
+            if not ids:
+                continue
+            dl = np.array(dls, dtype=np.float64)
+            dn = (1.0 - b) + (b * dl) / avg_floor
+            s = np.zeros(len(ids))
+            for j, t in enumerate(terms):
+                tf = np.array(tf_cols[j], dtype=np.float64)
+                s = s + ((idfs[j] * tf) * (k1 + 1.0)) / (tf + k1 * dn)
+            yield pd.DataFrame({id_col: ids, "_score": s})
 
-        scored = docs.select(
-            F.col(id_col), F.col(text_col).alias("_t")
-        ).mapInPandas(batches, f"{id_col} {id_type}, _score double")
-        return (
-            scored.select(F.col(id_col), hround(F.col("_score"), 6).alias("score"))
-            .filter(F.col("score") > 0.0)
-            .orderBy(F.col("score").desc(), id_col)
-            .limit(k)
-        )
-    if kernel != "jvm":
-        raise ValueError(f"unknown bm25 kernel: {kernel!r}")
-    toks = _terms_of(text_col)
-    dl = F.size(toks).cast("double")
-    denom_norm = 1.0 - b + b * dl / F.lit(max(avgdl, 1e-9))
-    def term_tf(term: str) -> Column:
-        # closure helper, NOT a two-arg lambda default: filter() feeds a
-        # second lambda parameter the element INDEX (the trimStr-class
-        # gotcha documented at repetition.lines_of), so `lambda x, t=t`
-        # would compare tokens against positions
-        return F.size(F.filter(toks, lambda x: x == F.lit(term))).cast("double")
-
-    score: Column = F.lit(0.0)
-    for t, idf in zip(terms, idfs):
-        tf = term_tf(t)
-        score = score + F.lit(idf) * tf * (k1 + 1.0) / (tf + k1 * denom_norm)
+    scored = docs.select(
+        F.col(id_col), F.col(text_col).alias("_t")
+    ).mapInPandas(batches, f"{id_col} {id_type}, _score double")
     return (
-        docs.select(F.col(id_col), hround(score, 6).alias("score"))
+        scored.select(F.col(id_col), hround(F.col("_score"), 6).alias("score"))
         .filter(F.col("score") > 0.0)
         .orderBy(F.col("score").desc(), id_col)
         .limit(k)

@@ -100,37 +100,11 @@ def brute_force_topk(
     )
 
 
-def _bucket_bits(emb: Column, planes: list[list[int]], p: Column | None = None) -> Column:
-    """``Σ_{j<p} (v·hⱼ ≥ 0)·2ʲ`` as ONE transform over the folded plane
-    literal + ONE aggregate — the :func:`_lit_vectors` restructure
-    (r13). The previous per-plane unrolled form built ``n_planes``
-    independent zip_with+aggregate trees whose analysis cost dominated
-    bucketing wall time (measured 1.69s → 1.01s min-of-3 at sf0.1 for
-    ``lsh_buckets_scaled`` over 2k vectors; a flat element_at sum was
-    also tried and REJECTED — 1024 codegen terms blow the JVM method
-    limit and fall back to a 6.4s interpreted tree). Per-plane dot
-    order is unchanged (same left fold), so buckets are bit-identical
-    — verified 0 mismatches against the unrolled form at sf0.1.
-    ``p`` masks to the first p planes (None = use all)."""
-    scores = F.transform(_lit_vectors(planes), lambda c: dot(emb, c))
-    powers = F.array(*[F.lit(2**j).cast("bigint") for j in range(len(planes))])
-
-    def term(s: Column, j: Column) -> Column:
-        keep = (s >= 0) if p is None else ((j.cast("bigint") < p) & (s >= 0))
-        return F.when(keep, F.element_at(powers, j + F.lit(1))).otherwise(
-            F.lit(0).cast("bigint")
-        )
-
-    return F.aggregate(
-        F.transform(scores, term), F.lit(0).cast("bigint"), lambda acc, x: acc + x
-    )
-
-
 def _np_bucket_bits(mat, planes: list[list[float]], p):
-    """Per-row bucket ints replaying :func:`_bucket_bits`' EXACT float
-    sequence (the §12 discipline): per plane one elementwise product
-    rounding then one left-fold add rounding in array order, all
-    float64 — the sign test (and so the integer bucket) is
+    """Per-row bucket ints replaying the interpreted sign-projection
+    expression's EXACT float sequence (the §12 discipline): per plane
+    one elementwise product rounding then one left-fold add rounding in
+    array order, all float64 — the sign test (and so the integer bucket) is
     bit-identical to the JVM interpreted-HOF evaluation. ``p`` is an
     int64 array masking each row to its first p planes (None = all).
     NaN scores SET the bit: Spark's nan-safe comparison orders NaN
@@ -155,7 +129,7 @@ def _np_bucket_bits(mat, planes: list[list[float]], p):
 
 
 def _py_bucket_bits(e, planes: list[list[float]], p: int | None) -> int:
-    """Pure-Python mirror of :func:`_bucket_bits` for misshapen rows
+    """Pure-Python mirror of the bucket expression for misshapen rows
     (null / wrong-length embeddings): zip_with null-padding nulls the
     fold, a null score contributes no bit (``when`` otherwise-0); a NaN
     score sets the bit (Spark's nan-safe ``>= 0`` passes for NaN — same
@@ -226,23 +200,16 @@ def lsh_buckets(
     seed: int = 99,
     dim: int = DIM,
     n_planes: int = N_PLANES,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(vec_id, bucket): bucket = bit pattern of sign(v · hᵢ). ``dim``
     must match the embedding width (zip_with null-pads otherwise);
     ``n_planes`` must be sized for the corpus — see ``planes_for``.
 
-    ``kernel`` (r13): "pandas" (default) runs the plane dots in numpy
-    with the exact float sequence of the interpreted ``_bucket_bits``
-    expression — buckets bit-identical (pinned by
-    tests/test_similarity.py::test_lsh_buckets_kernels_equal);
-    ``kernel="jvm"`` keeps the folded-literal HOF projection."""
+    The plane dots run in numpy with the exact float sequence of the
+    interpreted folded-literal HOF projection it replaced
+    (OPTIMIZATION_r13.md) — buckets bit-identical, pinned against that
+    form by tests/test_similarity.py."""
     planes = hyperplanes(n=n_planes, dim=dim, seed=seed)
-    if kernel == "jvm":
-        bucket = _bucket_bits(_as_double("embedding"), planes)
-        return embeddings.select("vec_id", bucket.cast("bigint").alias("bucket"))
-    if kernel != "pandas":
-        raise ValueError(f"unknown lsh_buckets kernel: {kernel!r}")
     return _bucket_kernel_df(embeddings, planes, dim, None)
 
 
@@ -252,7 +219,6 @@ def lsh_buckets_scaled(
     seed: int = 99,
     dim: int = DIM,
     n_planes_max: int = 16,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(vec_id, bucket): sign-random-projection buckets whose plane
     count adapts to the corpus IN-PLAN — the :func:`planes_for` rule
@@ -281,32 +247,15 @@ def lsh_buckets_scaled(
     power-of-two boundaries (an oracle must reproduce p bit-for-bit;
     one ulp above an integer flips ceil and every bucket with it).
 
-    ``kernel`` (r13): "pandas" (default) evaluates the plane dots in
-    numpy replaying the interpreted expression's exact float sequence
-    and the SAME integer-compare p rule from the attached broadcast
-    count — buckets bit-identical (pinned by
-    tests/test_similarity.py::test_lsh_buckets_scaled_kernels_equal);
-    ``kernel="jvm"`` keeps the in-plan HOF form."""
+    The plane dots evaluate in numpy replaying the interpreted HOF
+    form's exact float sequence and the SAME integer-compare p rule
+    from the attached broadcast count (OPTIMIZATION_r13.md) — buckets
+    bit-identical, pinned against that form by
+    tests/test_similarity.py."""
     planes = hyperplanes(n=n_planes_max, dim=dim, seed=seed)
     n = embeddings.agg(F.count("*").alias("__n"))
-    tgt = max(target_bucket, 1)
-    if kernel == "pandas":
-        return _bucket_kernel_df(
-            embeddings.crossJoin(F.broadcast(n)), planes, dim, tgt
-        )
-    if kernel != "jvm":
-        raise ValueError(f"unknown lsh_buckets_scaled kernel: {kernel!r}")
-    p = F.greatest(
-        F.lit(1).cast("bigint"),
-        sum(
-            F.when(F.lit(tgt * 2 ** (j - 1)) < F.col("__n"), 1).otherwise(0)
-            for j in range(1, n_planes_max + 1)
-        ).cast("bigint"),
-    )
-    bucket = _bucket_bits(_as_double("embedding"), planes, p=p)
-    return (
-        embeddings.crossJoin(F.broadcast(n))
-        .select("vec_id", bucket.cast("bigint").alias("bucket"))
+    return _bucket_kernel_df(
+        embeddings.crossJoin(F.broadcast(n)), planes, dim, max(target_bucket, 1)
     )
 
 
@@ -430,7 +379,6 @@ def ivf_cells(
     seed: int = 1234,
     dim: int = DIM,
     centroids: list[list[float]] | None = None,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(vec_id, cell): IVF coarse quantization — assign each vector to
     its nearest centroid. Default centroids are deterministic ±1
@@ -440,18 +388,11 @@ def ivf_cells(
     scan-speed. At scale the corpus is written partitioned/bucketed BY
     cell so a probe reads only its cells' files.
 
-    ``kernel`` (r13): "pandas" (default) runs the dot-argmax in numpy
-    with the exact float sequence of the interpreted
-    ``_centroid_scores`` expression — cells bit-identical (pinned by
-    tests/test_similarity.py::test_ivf_cells_kernels_equal; measured
-    4.3s → well under 1s at 200k vectors). ``kernel="jvm"`` keeps the
-    literal-HOF projection."""
+    The dot-argmax runs in numpy with the exact float sequence of the
+    interpreted ``_centroid_scores`` expression — cells bit-identical,
+    pinned against that expression by tests/test_similarity.py
+    (4.3s → well under 1s at 200k vectors, OPTIMIZATION_r13.md)."""
     cents = centroids if centroids is not None else hyperplanes(n=n_centroids, dim=dim, seed=seed)
-    if kernel == "jvm":
-        cell = F.array_max(_centroid_scores(_as_double("embedding"), cents))["cid"]
-        return embeddings.select("vec_id", cell.cast("bigint").alias("cell"))
-    if kernel != "pandas":
-        raise ValueError(f"unknown ivf_cells kernel: {kernel!r}")
     cents = [[float(v) for v in c] for c in cents]
 
     def batches(it):
@@ -622,7 +563,7 @@ def cell_near_pairs(
     faster than either prior form. The float embeddings re-attach by a
     vec_id join after the guard, so they never evaluate for the guard
     at all. (r13: the assignment itself is :func:`ivf_cells`, whose
-    default numpy kernel produces bit-identical cells — see there.)"""
+    numpy kernel produces bit-identical cells — see there.)"""
     from rnadam_spark.lineage import truncate_lineage
 
     assignment = truncate_lineage(
@@ -764,8 +705,8 @@ def train_pq(
     amortized to noise over a corpus-scale scan). The alternative — a
     broadcast codebook table joined per subspace — trades that constant
     for a per-row join probe and one exchange; it is implemented for
-    the ADC query path (``pq_topk_on_codes(strategy="join")``, chosen
-    automatically above ``PQ_LITERAL_MAX`` table entries) where big-m
+    the ADC query path (:func:`pq_topk_on_codes` switches to it above
+    ``PQ_LITERAL_MAX`` table entries) where big-m
     8-bit configs would otherwise blow the codegen constant pool."""
     k = 2**nbits
     d_sub = dim // m
@@ -811,37 +752,22 @@ def pq_encode(
     embeddings: DataFrame,
     codebooks: list[list[list[float]]],
     dim: int = DIM,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(vec_id, codes): PQ codes — per subspace, the index of the
-    L2-nearest codebook centroid. Zero shuffle either way, and the
+    L2-nearest codebook centroid. Zero shuffle, and the
     output row is m·log2(k) bits of payload instead of dim·32 — the
     representation that makes 100 TB of embeddings greppable (a 1024-d
     float corpus compresses 64× at m=64, nbits=8).
 
-    ``kernel`` (r13 optimization round): "pandas" (default) computes
-    the per-subspace L2-argmax in numpy with the EXACT float sequence
-    of the interpreted ``_l2_scores`` expression (per element one
-    product rounding + one left-fold add rounding in array order,
+    The per-subspace L2-argmax runs in numpy with the EXACT float
+    sequence of the interpreted ``_l2_scores`` expression (per element
+    one product rounding + one left-fold add rounding in array order,
     float64, the same driver-computed ‖c‖² literals), so the integer
-    codes are bit-identical — pinned by
-    tests/test_similarity.py::test_pq_encode_kernels_equal. The
-    interpreted-HOF form (m·k·d_sub lambda evaluations per row —
-    measured 39.2s vs <2s at 200k vectors, the encode-once pass PQ
-    exists to amortize) stays at ``kernel="jvm"``; ``ab.pq_encode``
-    re-measures per round."""
+    codes are bit-identical — pinned against that expression by
+    tests/test_similarity.py. The interpreted-HOF form (m·k·d_sub
+    lambda evaluations per row) measured 38.2 vs 2.4s at sf10
+    (OPTIMIZATION_r14.md)."""
     m = len(codebooks)
-    if kernel == "jvm":
-        emb = _as_double("embedding")
-        codes = F.array(
-            *[
-                F.array_max(_l2_scores(s, codebooks[sub]))["cid"]
-                for sub, s in enumerate(_sub_slices(emb, m=m, dim=dim))
-            ]
-        )
-        return embeddings.select("vec_id", codes.alias("codes"))
-    if kernel != "pandas":
-        raise ValueError(f"unknown pq_encode kernel: {kernel!r}")
     d_sub = dim // m
     norms = [
         [float(sum(v * v for v in c)) for c in book] for book in codebooks
@@ -955,7 +881,6 @@ def pq_topk_on_codes(
     codebooks: list[list[list[float]]],
     k: int = 20,
     dim: int = DIM,
-    strategy: str | None = None,
 ) -> DataFrame:
     """(vec_id, score): ADC top-k over a STORED codes table — the
     encode-once / query-many production shape. :func:`pq_topk`
@@ -964,26 +889,22 @@ def pq_topk_on_codes(
     query scores the code table with a TakeOrdered reduction — no float
     vectors are ever read again.
 
-    ``strategy`` picks how the m·2^nbits query·centroid lookup table
-    reaches the executors (default: "literal" when the table has at
-    most ``PQ_LITERAL_MAX`` entries, else "join"; both produce
-    identical rows — pinned by tests):
+    The size of the m·2^nbits query·centroid lookup table picks how it
+    reaches the executors (both forms produce identical rows — pinned
+    by tests):
 
-    - "literal": the table inlines as plan literals; scoring is m array
+    - at most ``PQ_LITERAL_MAX`` entries: the table inlines as plan literals; scoring is m array
       lookups + a sum per row, ZERO shuffle, TakeOrdered. Catalyst pays
       a constant analysis/codegen cost proportional to the table size —
       the right trade whenever the scan is large and the table small.
-    - "join": the table broadcasts as a (sub, code, qdot) DataFrame;
+    - above it: the table broadcasts as a (sub, code, qdot) DataFrame;
       codes posexplode to (vec_id, sub, code), probe the broadcast, and
       a vec_id groupBy re-sums (map-side partial, one exchange carrying
       ~1 row per vec_id). Plan size stays O(1) in the PQ config — the
       right trade for big-m/8-bit codebooks where the literal plan
       would blow the codegen constant pool."""
     tables = _query_tables(list(query_vec), codebooks, dim)
-    if strategy is None:
-        n_entries = sum(len(t) for t in tables)
-        strategy = "literal" if n_entries <= PQ_LITERAL_MAX else "join"
-    if strategy == "literal":
+    if sum(len(t) for t in tables) <= PQ_LITERAL_MAX:
         score = _adc_score(tables)
         return (
             codes.select(
@@ -992,8 +913,6 @@ def pq_topk_on_codes(
             .orderBy(F.col("score").desc(), "vec_id")
             .limit(k)
         )
-    if strategy != "join":
-        raise ValueError(f"unknown ADC strategy: {strategy!r}")
     tbl = codes.sparkSession.createDataFrame(
         [(sub, code, float(v)) for sub, t in enumerate(tables) for code, v in enumerate(t)],
         "sub INT, code INT, qdot DOUBLE",
@@ -1268,8 +1187,7 @@ def ann_recall(
     """One row (k, n_hits, recall): recall@k of an ANN result against
     the exact top-k — the QUALITY number every approximate index must
     publish next to its speed number (an IVF that probes too few cells
-    is fast and useless; this makes the trade measurable, the same
-    discipline as the bench A/B rows). Both inputs are tiny top-k
+    is fast and useless; this makes the trade measurable). Both inputs are tiny top-k
     tables, so the overlap is one collect + a filtered aggregate;
     recall = |approx ∩ exact| / |exact| rounded half-up to 6dp.
 

@@ -15,8 +15,9 @@ window inside it is duplicated, so detecting duplicated WINDOWS and
 merging overlapping hits per document reconstructs exactly the maximal
 duplicated spans, with only bulk-synchronous primitives:
 
-1. every document's length-``min_tokens`` token windows hash in-row
-   (``xxhash64`` over the window's joined tokens — JVM, no Python);
+1. every document's length-``min_tokens`` token windows hash in one
+   Arrow-batched pass (spec ``xxhash64`` over the window's joined
+   tokens, :func:`_window_hash_rows`);
 2. one groupBy(window_hash) marks hashes occurring >= 2 times in the
    corpus (map-side partial counts; the count cap means the aggregate
    state per key is one BIGINT no matter how hot a boilerplate gram is);
@@ -46,12 +47,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from rnadam_spark.functions.shingles import token_ngrams, tokens
-
-
-def _window_hashes(text_col: str, min_tokens: int) -> Column:
-    """In-row BIGINT hashes of every ``min_tokens``-token window."""
-    return F.transform(token_ngrams(text_col, min_tokens), lambda g: F.xxhash64(g))
+from rnadam_spark.functions.shingles import tokens
 
 
 def _window_hash_rows(
@@ -59,7 +55,9 @@ def _window_hash_rows(
 ) -> DataFrame:
     """(doc_id, pos, wh): the posexploded window-hash table via an
     Arrow/numpy kernel — row-identical to the JVM
-    ``posexplode(_window_hashes(...))`` form (r13, guide §4.2).
+    ``posexplode(transform(token_ngrams(...), xxhash64))`` form it
+    replaced (r13, guide §4.2; that form is the oracle in
+    tests/test_spans.py).
 
     Exactness: tokenization is the simhash kernel's pinned
     ``re.split(r"\\s+", ..., re.ASCII)`` ≡ Java ``\\s`` parity; the
@@ -126,7 +124,6 @@ def duplicated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     checkpoint_dir: str | None = None,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(doc_id, span_start, span_end, span_tokens): maximal token spans
     (0-based, inclusive token indices) whose every ``min_tokens`` window
@@ -144,28 +141,18 @@ def duplicated_spans(
     scan → tokenize → window-hash → posexplode subtree, the dominant
     cost of the whole pass, once per consumer.
 
-    ``kernel`` (r13): "pandas" (default) builds the windows table via
-    :func:`_window_hash_rows` — the interpreted per-window
-    ``array_join(slice(...))`` string construction (measured 11.3s of
-    the 21.3s sf10 detection pass) becomes one separator scan + a
-    vectorized spec-XXH64 over byte ranges, ROW-IDENTICAL to the JVM
-    form (tests/test_spans.py pins the window table and the spans
-    end-to-end). "jvm" keeps the expression form.
+    The windows table comes from :func:`_window_hash_rows` — the
+    interpreted per-window ``array_join(slice(...))`` string
+    construction it replaced measured 11.3s of the 21.3s sf10 detection
+    pass (OPTIMIZATION_r13.md).
     """
     if min_tokens < 1:
         raise ValueError("min_tokens must be >= 1")
     from rnadam_spark.lineage import truncate_lineage
 
-    if kernel == "pandas":
-        raw_windows = _window_hash_rows(docs, min_tokens, text_col, id_col)
-    elif kernel == "jvm":
-        raw_windows = docs.select(
-            F.col(id_col),
-            F.posexplode(_window_hashes(text_col, min_tokens)).alias("pos", "wh"),
-        )
-    else:
-        raise ValueError(f"unknown duplicated_spans kernel: {kernel!r}")
-    windows = truncate_lineage(raw_windows, checkpoint_dir)
+    windows = truncate_lineage(
+        _window_hash_rows(docs, min_tokens, text_col, id_col), checkpoint_dir
+    )
     dup = (
         windows.groupBy("wh")
         .agg(F.count("*").alias("_cnt"))
@@ -238,8 +225,6 @@ def contaminated_spans(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    broadcast_benchmark: bool = True,
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(doc_id, span_start, span_end, span_tokens): maximal corpus
     spans whose every ``min_tokens`` window appears anywhere in the
@@ -252,48 +237,23 @@ def contaminated_spans(
     Same shape as :func:`duplicated_spans` with the duplicated-window
     set swapped for the benchmark's window set: eval suites are tiny
     next to a 100 TB corpus, so the distinct benchmark hashes broadcast
-    (``broadcast_benchmark=False`` for corpus-vs-corpus overlap) and
-    the corpus-side scan never shuffles until the per-doc re-group.
+    and the corpus-side scan never shuffles until the per-doc re-group.
 
-    ``kernel`` (r13): the CORPUS-side window table shares
-    :func:`duplicated_spans`' choice — "pandas" (default) builds it via
-    the vectorized spec-XXH64 kernel (:func:`_window_hash_rows`,
-    row-identical to the JVM form, parity pinned by tests/
-    test_spans.py), "jvm" keeps the interpreted
-    ``posexplode(array_join(slice(...)))`` expression. Since r14 the
-    BENCHMARK side follows the same choice (VERDICT r13 #6 — the last
-    interpreted window-build site outside documented-bounded paths):
-    its window multiset is identical by the same pinned parity, and
-    only the distinct hash set survives into the join, so the swap
-    cannot change results. Eval suites are bounded, so the win is
-    small; the point is one kernel, not two."""
-    if kernel == "pandas":
-        windows = _window_hash_rows(docs, min_tokens, text_col, id_col)
-        bench = (
-            _window_hash_rows(
-                benchmark.select(
-                    F.lit(0).cast("bigint").alias("_bid"), F.col(bench_text_col)
-                ),
-                min_tokens,
-                bench_text_col,
-                "_bid",
-            )
-            .select("wh")
-            .distinct()
+    Both window tables come from :func:`_window_hash_rows`, the kernel
+    :func:`duplicated_spans` uses; only the distinct benchmark hash set
+    survives into the join."""
+    windows = _window_hash_rows(docs, min_tokens, text_col, id_col)
+    bench = (
+        _window_hash_rows(
+            benchmark.select(F.lit(0).cast("bigint").alias("_bid"), F.col(bench_text_col)),
+            min_tokens,
+            bench_text_col,
+            "_bid",
         )
-    elif kernel == "jvm":
-        windows = docs.select(
-            F.col(id_col),
-            F.posexplode(_window_hashes(text_col, min_tokens)).alias("pos", "wh"),
-        )
-        bench = benchmark.select(
-            F.explode(_window_hashes(bench_text_col, min_tokens)).alias("wh")
-        ).distinct()
-    else:
-        raise ValueError(f"unknown contaminated_spans kernel: {kernel!r}")
-    if broadcast_benchmark:
-        bench = F.broadcast(bench)
-    hits = windows.join(bench, "wh").groupBy(id_col).agg(
+        .select("wh")
+        .distinct()
+    )
+    hits = windows.join(F.broadcast(bench), "wh").groupBy(id_col).agg(
         F.array_sort(F.collect_list("pos")).alias("_hits")
     )
     spans = _merge_hit_positions(F.col("_hits"), min_tokens)

@@ -104,32 +104,17 @@ def quality_scores(
     docs: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    kernel: str = "pandas",
 ) -> DataFrame:
     """(doc_id, stopword_ratio, punct_ratio, digit_ratio, quality):
     length/punct/stopword heuristics — the standard pre-training
     quality filters.
 
-    ``kernel`` (r13): "pandas" (default) is one Arrow pass with the
-    ``curation_scores_pandas`` parity kit (Java's ASCII ``\\w``/``\\s``
-    classes via ``re.ASCII``, each ratio one IEEE division, the
-    NULL-text corner → NULL ratios + quality 0.4 exactly as least()
-    skips nulls) — measured 0.37 vs 0.62s at sf0.1 and 3.6 vs 4.8s at
-    sf10 against the staged-HOF form (parity pinned by
-    tests/test_text_curation.py; bench ``ab.quality_scores``
-    re-measures). "jvm" stages the token array so it materializes once
-    (n_tok, n_stop, and quality's stopword term each reference it; see
-    :func:`gopher_prelude` on why inline copies re-tokenize)."""
-    if kernel == "jvm":
-        staged = docs.select(
-            F.col(id_col), F.col(text_col), tokens(text_col).alias("__qt")
-        )
-        cols = quality_columns(text_col, toks=F.col("__qt"))
-        return staged.select(
-            F.col(id_col), *[c.alias(name) for name, c in cols.items()]
-        )
-    if kernel != "pandas":
-        raise ValueError(f"unknown quality kernel: {kernel!r}")
+    One Arrow pass with the ``curation_scores_pandas`` parity kit
+    (Java's ASCII ``\\w``/``\\s`` classes via ``re.ASCII``, each ratio
+    one IEEE division, the NULL-text corner → NULL ratios + quality 0.4
+    exactly as least() skips nulls) — 3.6 vs 4.8s at sf10 against the
+    staged :func:`quality_columns` form (OPTIMIZATION_r13.md), which
+    tests/test_text_curation.py keeps as its parity oracle."""
     stop = set(STOPWORDS)
     id_type = dict(docs.dtypes)[id_col]
     schema = (
@@ -669,10 +654,9 @@ def gopher_quality_pandas(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """The Arrow-batched pandas twin of :func:`gopher_quality` — same
-    eleven columns, pinned value-equal by tests/test_gopher.py, kept as
-    the measured A/B alternative for the staged-HOF form (bench.py
-    ``ab.gopher_quality``; same discipline as
-    ``repetition.repetition_stats_pandas``). Semantics mirrored
+    eleven columns, pinned value-equal by tests/test_gopher.py; it
+    beat the staged-HOF form 2.5 vs 5.5s at sf10 (r11), the same twin
+    discipline as ``repetition.repetition_stats_pandas``. Semantics mirrored
     exactly: Java ``\\s`` token split, ASCII-space-only trim for lines,
     non-overlapping regex counts, 6dp half-up rounding, first-failing
     drop_reason in the paper's order."""
@@ -920,8 +904,7 @@ def curation_scores_pandas(
     to filter, once to emit the column) — measured 36.5s at sf10 for
     the composite whose parts sum to ~13s. A mapInPandas boundary is
     opaque to predicate pushdown, so the filter runs on the emitted
-    column exactly once — composite 36.5 → ~6s at sf10 (bench
-    ``ab.curated``). Java ``\\w``/``\\s`` are ASCII classes —
+    column exactly once — composite 36.5 → ~6s at sf10. Java ``\\w``/``\\s`` are ASCII classes —
     mirrored with ``re.ASCII``; every ratio is one IEEE division and
     the quality chain is the same left-associated expression."""
     import math
@@ -985,7 +968,7 @@ def vocabulary_pandas(
     in Python, so a task emits one partial row per distinct token in
     the batch (bounded by vocabulary, not corpus size) and the final
     groupBy moves only those partials. Measured 1.8x at sf10 vs the
-    run-length HOF form (bench ``ab.vocabulary``): per-token string
+    run-length HOF form (r12): per-token string
     sorting under interpreted lambdas is exactly the shape the twin
     rule flags, just with a smaller constant than the gram builders.
     Java ``\\s`` tokenization mirrored exactly; NULL text contributes
@@ -1032,7 +1015,6 @@ def contamination_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     bench_text_col: str = "text",
-    broadcast_benchmark: bool = True,
 ) -> DataFrame:
     """(doc_id, n_grams, n_contaminated, contamination): fraction of a
     document's distinct word ``n``-grams that appear anywhere in the
@@ -1041,11 +1023,9 @@ def contamination_scores(
     documents above a threshold before training so eval numbers stay
     meaningful.
 
-    Shape: benchmark grams distinct once, then a left join from the
-    exploded document grams. ``broadcast_benchmark`` (default) pins the
-    join broadcast — eval suites are tiny next to a 100 TB corpus, so
-    the scan side never shuffles; disable it for corpus-vs-corpus
-    overlap, where sort-merge on the gram is the right plan. Documents
+    Shape: benchmark grams distinct once, then a broadcast left join
+    from the exploded document grams — eval suites are tiny next to a
+    100 TB corpus, so the scan side never shuffles. Documents
     shorter than ``n`` tokens score 0 (kept via explode_outer — a doc
     must never silently vanish from an audit)."""
     bench_grams = (
@@ -1053,13 +1033,11 @@ def contamination_scores(
         .distinct()
         .withColumn("_hit", F.lit(1))
     )
-    if broadcast_benchmark:
-        bench_grams = F.broadcast(bench_grams)
     doc_grams = docs.select(
         F.col(id_col),
         F.explode_outer(F.array_distinct(token_ngrams(text_col, n))).alias("gram"),
     )
-    joined = doc_grams.join(bench_grams, "gram", "left")
+    joined = doc_grams.join(F.broadcast(bench_grams), "gram", "left")
     n_grams = F.count("gram")
     n_hit = F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
     return joined.groupBy(id_col).agg(

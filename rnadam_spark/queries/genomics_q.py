@@ -24,11 +24,6 @@ from rnadam_spark.sources.tables import load_table
 K = 5  # shingle width for the documents-table analogs
 
 
-def _kmers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents", widen=True)
-    return docs.select("doc_id", F.explode(char_shingles("text", K)).alias("kmer"))
-
-
 def _doc_kmer_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, kc ARRAY<STRUCT<value,cnt>>) — per-document k-mer counts
     computed inside the row (functions/runlength.py): both reference
@@ -58,33 +53,18 @@ FROM (SELECT doc_id, text, unnest(range(1, greatest(length(text) - {K - 1}, 0) +
     GROUP BY kmer
     """,
 )
-def kmer_count(spark: SparkSession, sf_dir: str, kernel: str = "pandas") -> DataFrame:
+def kmer_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1 (word count over shingles): Quantify.scala:58-60 / adamCountKmers.
 
-    ``kernel`` (r13): "pandas" (default) is the ``em_global_counts``
-    Counter form — ONE Counter per Arrow batch (a map-side combine in
-    Python) emits one partial row per distinct k-mer per batch, so the
-    exchange moves vocabulary-bounded partials and the shingle slicing
-    never materializes 200×-exploded rows. Integer sums — exact; the
-    flagship's scan-1 twin tests (tests/test_quantify_e2e.py) pin the
-    identical kernel, and ``ab.kmer_count`` re-measures per round
-    (adoption runs: 0.79 vs 0.86s at sf0.1 — a coin flip — and 2.3 vs
-    7.1s at sf10, the same crossover shape as contamination's).
-
-    "jvm": explode(shingles) → groupBy → count, deliberately NOT the
-    per-row run-length path used by the per-document queries: the
-    global key space is bounded (distinct k-mers ≤ alphabet^k), so
-    Catalyst's map-side partial HashAggregate already collapses the
-    shuffle to one row per distinct k-mer per task, and the whole
-    stage is codegen'd. Run-length wins only where the grouping key
-    contains the container (see kmer_doc_counts).
+    The ``em_global_counts`` Counter form — ONE Counter per Arrow batch
+    (a map-side combine in Python) emits one partial row per distinct
+    k-mer per batch, so the exchange moves vocabulary-bounded partials
+    and the shingle slicing never materializes 200×-exploded rows.
+    Integer sums — exact. It beat explode → groupBy → count 2.3 vs 7.1s
+    at sf10 (OPTIMIZATION_r13.md).
     """
-    if kernel == "jvm":
-        return _kmers(spark, sf_dir).groupBy("kmer").agg(F.count("*").alias("cnt"))
-    if kernel != "pandas":
-        raise ValueError(f"unknown kmer_count kernel: {kernel!r}")
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    counts = em_global_counts(docs, pandas_kernel=True)
+    counts = em_global_counts(docs)
     return counts.select("kmer", F.col("g_cnt").alias("cnt"))
 
 
@@ -117,29 +97,19 @@ GROUP BY doc_id, cnt
 """
 
 
-def _classes(spark: SparkSession, sf_dir: str, kernel: str = "pandas") -> DataFrame:
+def _classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cnt, class_id, n_kmers) — the equivalence-class grain.
 
-    ``kernel`` (r13 optimization round, the minhash/simhash twin
-    discipline): "pandas" (default) emits the class grain straight from
-    one Arrow-batched pass — per doc a Counter of shingles, members
-    grouped by multiplicity in sorted-kmer order, md5 of the
-    '|'-joined members — no interpreted run-length kernel, no explode.
+    Emits the class grain straight from one Arrow-batched pass — per
+    doc a Counter of shingles, members grouped by multiplicity in
+    sorted-kmer order, md5 of the '|'-joined members — no interpreted
+    run-length kernel, no explode.
     Exactness: counts are ints, Python ``sorted`` on str equals Spark's
     UTF8-binary ``sort_array`` (UTF-8 byte order is codepoint order),
     and ``hashlib.md5`` of the identical utf-8 bytes equals Spark's
-    ``md5``; parity pinned by tests/test_index.py. Measured min-of-2
-    warm: 0.44 vs 0.66s at sf0.1 and 5.0 vs 19.6s at sf10 (bench
-    ``ab.classes`` re-measures each round). "jvm" is the in-row
-    run-length + count_classes higher-order-function form."""
-    if kernel == "jvm":
-        kc = _doc_kmer_counts(spark, sf_dir)
-        return (
-            kc.select("doc_id", F.explode(count_classes(F.col("kc"))).alias("cl"))
-            .select("doc_id", "cl.cnt", "cl.class_id", "cl.n_kmers")
-        )
-    if kernel != "pandas":
-        raise ValueError(f"unknown classes kernel: {kernel!r}")
+    ``md5``; parity pinned by tests/test_index.py against the in-row
+    run-length + count_classes form it replaced (5.0 vs 19.6s at sf10,
+    OPTIMIZATION_r13.md)."""
     docs = load_table(spark, sf_dir, "documents", widen=True)
     k = K
 
@@ -279,22 +249,16 @@ SELECT t_id, floor(mu * 100000000.0 + 0.5) / 100000000.0 AS abundance FROM muf
 """
 
 
-def em_global_counts(docs: DataFrame, pandas_kernel: bool = True) -> DataFrame:
+def em_global_counts(docs: DataFrame) -> DataFrame:
     """(kmer, g_cnt): corpus-wide k-mer counts — em_state's scan 1,
     bounded by vocabulary (distinct k-mers ≤ alphabet^k) so the result
-    broadcasts/collects at any corpus size. Default is the Arrow form:
-    ONE Counter per Arrow batch (a map-side combine in Python) emits
-    one partial row per distinct k-mer per batch, so the exchange moves
-    vocabulary-bounded partials — measured 4.8s vs 10.7s at sf10 /
-    23s vs 114s at sf100 against the explode + codegen hash aggregate
-    (kept one flag away; both forms pinned value-equal by
-    tests/test_quantify_e2e.py — integer counts, exact)."""
-    if not pandas_kernel:
-        return (
-            docs.select(F.explode(char_shingles("text", K)).alias("kmer"))
-            .groupBy("kmer")
-            .agg(F.count("*").alias("g_cnt"))
-        )
+    broadcasts/collects at any corpus size. ONE Counter per Arrow batch
+    (a map-side combine in Python) emits one partial row per distinct
+    k-mer per batch, so the exchange moves vocabulary-bounded partials
+    — 4.8 vs 10.7s at sf10 / 23 vs 114s at sf100 against the explode +
+    codegen hash aggregate (OPTIMIZATION_r13.md), which
+    tests/test_quantify_e2e.py keeps as its oracle (integer counts,
+    exact)."""
     k = K
 
     def batches(it):
@@ -314,9 +278,7 @@ def em_global_counts(docs: DataFrame, pandas_kernel: bool = True) -> DataFrame:
     return part.groupBy("kmer").agg(F.sum("g_p").alias("g_cnt"))
 
 
-def em_state(
-    docs: DataFrame, pandas_kernel: bool = True, max_vocab: int = 2_000_000
-) -> dict[str, DataFrame]:
+def em_state(docs: DataFrame, max_vocab: int = 2_000_000) -> dict[str, DataFrame]:
     """The em_quantify flagship's state construction, shared verbatim
     with ``tools/em_stage_attribution.py`` (extracted r11 so the
     attribution tool cannot silently desynchronize from the plan the
@@ -334,8 +296,8 @@ def em_state(
     explode, the 1B broadcast-join probes, the partial aggregate, AND
     the 1B-row Arrow back-transfer (output is ~6 rows/doc, not ~200) —
     measured 5.9s vs 20.7s at sf10 and 53.8s vs 329.9s (6.1x) at sf100
-    for the whole state build (gc + cc; bench ``ab.em_state``
-    re-measures each round; the r11 JVM form is kept one flag away and
+    for the whole state build (gc + cc, OPTIMIZATION_r13.md; the r11
+    JVM form survives only as the over-``max_vocab`` fallback below,
     pinned value-equal by tests/test_quantify_e2e.py — integer sums,
     exact).
 
@@ -376,26 +338,15 @@ def em_state(
     production materialization boundary: ``global_counts``, ``cc``
     (cached), ``class_counts``, ``edges`` (class_id-partitioned,
     cached), ``transcripts``."""
-    global_counts = em_global_counts(docs, pandas_kernel=pandas_kernel)
-    broadcast_gc = True
-    if pandas_kernel:
-        # the vocabulary guard: count distinct kmers BEFORE collecting
-        # them to the driver. Persist so the guard count and whichever
-        # branch wins (collect / join) share one materialization
-        # instead of re-scanning the corpus (the max_bench_grams
-        # pattern); the handle is unpersisted as soon as the winning
-        # branch has consumed it.
-        from pyspark import StorageLevel
+    # the vocabulary guard: count distinct kmers BEFORE collecting them
+    # to the driver. Persist so the guard count and whichever branch
+    # wins (collect / join) share one materialization instead of
+    # re-scanning the corpus (the max_bench_grams pattern); the handle
+    # is unpersisted as soon as the winning branch has consumed it.
+    from pyspark import StorageLevel
 
-        global_counts = global_counts.persist(StorageLevel.MEMORY_AND_DISK)
-        if global_counts.count() > max_vocab:
-            # over-cap: the driver dict would be multi-GB — fall back
-            # to the JVM join form, and with the broadcast hint OFF:
-            # a table past the collect cap is past the broadcast cap
-            # for the same reason, so let AQE pick the join strategy.
-            pandas_kernel = False
-            broadcast_gc = False
-    if pandas_kernel:
+    global_counts = em_global_counts(docs).persist(StorageLevel.MEMORY_AND_DISK)
+    if global_counts.count() <= max_vocab:
         k = K
         gcd = {r["kmer"]: r["g_cnt"] for r in global_counts.collect()}
         global_counts.unpersist()
@@ -429,8 +380,11 @@ def em_state(
             batches, "doc_id bigint, n_chars bigint, kcnt bigint, class_cnt bigint"
         ).cache()
     else:
-        # the r11 JVM form: run-length kernel → explode → broadcast
-        # join → partial agg. Viable only because the engine session
+        # over-cap: the driver dict would be multi-GB — fall back to
+        # the r11 JVM form (run-length kernel → explode → join →
+        # partial agg) with NO broadcast hint: a table past the collect
+        # cap is past the broadcast cap for the same reason, so AQE
+        # picks the join strategy. Viable only because the engine session
         # EXCLUDES Spark's InferFiltersFromGenerate rule (session.py):
         # it infers ``size(kc) > 0`` from the explode and pushes it
         # below the widen exchange, re-evaluating the whole interpreted
@@ -445,20 +399,18 @@ def em_state(
                 "doc_id", "n_chars", F.col("x.value").alias("kmer"), F.col("x.cnt").alias("kcnt")
             )
         )
-        gc_side = F.broadcast(global_counts) if broadcast_gc else global_counts
         cc = (
-            kexp.join(gc_side, "kmer")
+            kexp.join(global_counts, "kmer")
             .groupBy("doc_id", "n_chars", "kcnt")
             .agg(F.sum("g_cnt").alias("class_cnt"))
             .cache()
         )
-        if not broadcast_gc:
-            # the over-cap fallback: the guard's count() already made
-            # this path eager, so force cc now and release the (large —
-            # that is why we are here) persisted histogram instead of
-            # leaving it as dead weight on executor disk
-            cc.count()
-            global_counts.unpersist()
+        # the guard's count() already made this path eager, so force cc
+        # now and release the (large — that is why we are here)
+        # persisted histogram instead of leaving it as dead weight on
+        # executor disk
+        cc.count()
+        global_counts.unpersist()
     class_key = F.md5(F.concat_ws(":", F.col("doc_id"), F.col("kcnt")))
     class_counts = cc.select(class_key.alias("class_id"), F.col("class_cnt").alias("cnt"))
     total = cc.agg(F.sum("class_cnt").alias("_total"))

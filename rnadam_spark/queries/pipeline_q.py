@@ -685,7 +685,7 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 6dp-rounded stats hash-compare across engines.
 
     Default implementation is the Arrow-batched pandas twin — the r11
-    A/B (bench ``ab.gopher_quality``, re-run per round) has it 2.2x
+    measurement has it 2.2x
     faster than the staged-HOF form at sf10 (2.5s vs 5.5s); the two are
     pinned value-equal by tests/test_gopher.py, so the gate hash is
     implementation-independent. The HOF column expressions remain the
@@ -755,8 +755,8 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     let Catalyst push the two filters into the scans' DataFilters,
     evaluating the full interpreted kernels TWICE per document (36.5s
     at sf10 where the parts sum to ~13s); a mapInPandas boundary is
-    opaque to pushdown, so each kernel runs once (bench ``ab.curated``;
-    twin pinned value-equal incl. NULL corners)."""
+    opaque to pushdown, so each kernel runs once (twin pinned
+    value-equal incl. NULL corners)."""
     docs = load_table(spark, sf_dir, "documents")
     scores = text.curation_scores_pandas(docs)
     canon = dedup.exact_dup_groups(docs).select(
@@ -1173,8 +1173,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lexicographically-largest gram.
 
     Default implementation is the Arrow-batched pandas twin: the
-    measured r11 A/B (bench ``ab.repetition_stats``, re-run per round)
-    has it 5.3x faster than the interpreted-HOF form at sf10 (3.5s vs
+    r11 measurement has it 5.3x faster than the interpreted-HOF form at sf10 (3.5s vs
     18.5s) — this kernel does enough per-row array work that
     interpreted higher-order evaluation costs more than the Arrow
     transfer + Python Counter pass. The two forms are pinned
@@ -1262,8 +1261,7 @@ def contamination_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     than 13 tokens score 0, never dropped.
 
     Default implementation is the Arrow-batched pandas twin — the
-    biggest win of the r11 twin series (bench ``ab.contamination``,
-    re-run per round): 21.8x at sf10 (4.8s vs 105s). Building a
+    biggest win of the r11 twin series: 21.8x at sf10 (4.8s vs 105s). Building a
     13-token gram string per position through interpreted
     slice+array_join, then array_distinct + explode + join, is exactly
     the shape Python set arithmetic does in microseconds per document;
@@ -1523,9 +1521,8 @@ def lm_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collect and accumulate across bench loops / repeated gate rows
     # (r12 ADVICE) — one uncached training pass is the same cost
     model = lm.train_char_lm(docs, n=_LM_N, cache=False)
-    # r12 twin default: the Arrow-batched scorer (bench ab.lm_scoring
-    # re-measures per round; pinned value-equal incl. NULL/short docs
-    # by tests/test_lm.py) — the HOF+join form stays one flag away
+    # the Arrow-batched scorer (r12, 2.8x at sf10; pinned value-equal
+    # to the HOF+join form incl. NULL/short docs by tests/test_lm.py)
     return lm.lm_perplexity_pandas(docs, model, n=_LM_N, vocab_size=_LM_V)
 
 
@@ -1598,9 +1595,9 @@ def excise_ppl_tail_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache=False: single immediate pandas-scorer consumer — a cached
     # handle would outlive the collect as an orphan (r12 ADVICE)
     model = lm.train_char_lm(docs, n=_LM_N, cache=False)
-    # r12 twin default: the Arrow-batched paragraph scorer (bench
-    # ab.paragraph_ppl re-measures per round; value-equality pinned by
-    # tests/test_lm.py incl. the trim/blank-segment edges)
+    # the Arrow-batched paragraph scorer (r12, 3.1x at sf10;
+    # value-equality pinned by tests/test_lm.py incl. the
+    # trim/blank-segment edges)
     ppl = lm.paragraph_perplexity_pandas(
         docs, model, n=_LM_N, vocab_size=_LM_V, split_pattern=_PARA_SPLIT
     )
@@ -1670,8 +1667,8 @@ def dsir_log_weights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rnadam_spark.operators import dsir
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    # r12 twin defaults (bench ab.dsir_weights re-measures per round;
-    # both twins pinned value-equal by tests/test_dsir.py), r13: since
+    # r12 twin defaults (both pinned value-equal by tests/test_dsir.py),
+    # r13 (OPTIMIZATION_r13.md §9): since
     # target ⊆ raw by a row-local hash predicate, ONE Arrow pass
     # histograms both corpora (dsir_log_weights_self_pandas) — counts
     # and ratio doubles identical to the two-scan form, 3 → 2 corpus

@@ -150,7 +150,7 @@ def _pagerank_sql() -> str:
 
 
 @query("pagerank", oracle=_pagerank_sql())
-def pagerank(spark: SparkSession, sf_dir: str, cache_edges: bool = False) -> DataFrame:
+def pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-authority PageRank (operators/graph.pagerank) over the
     deterministic two-layer source↔d-node graph: per iteration one
     key-partitioned join + one map-side-partial groupBy, the dangling
@@ -167,9 +167,7 @@ def pagerank(spark: SparkSession, sf_dir: str, cache_edges: bool = False) -> Dat
             F.lower(F.col("source")).alias("dst"),
         )
     )
-    pr = graph.pagerank(
-        edges, iterations=_PR_ITERS, damping=_PR_DAMPING, cache_edges=cache_edges
-    )
+    pr = graph.pagerank(edges, iterations=_PR_ITERS, damping=_PR_DAMPING)
     return pr.select("node", hround("rank", 6).alias("rank"))
 
 

@@ -564,9 +564,57 @@ def test_lsh_candidate_pairs_match_retired_oracle(spark, sf_dir):
     assert got == want and got
 
 
+def _minhash_explode_agg(docs):
+    """The explode + partial-aggregate MinHash form the numpy kernel
+    replaced (OPTIMIZATION_r13.md) — kept here as its independent
+    oracle: shingle codes hashed once via explode, the 16 affine
+    variants reduced by a map-side partial aggregate."""
+    from rnadam_spark.functions.hashing import MOD, hash_family, poly_hash_col
+    from rnadam_spark.functions.shingles import char_shingles
+
+    k = dedup.SHINGLE_K
+    codes = docs.filter(F.length("text") >= k).select(
+        F.col("doc_id"),
+        F.explode(F.transform(char_shingles("text", k), lambda x: poly_hash_col(x, k))).alias(
+            "code"
+        ),
+    )
+    aggs = [
+        F.min((F.col("code") * a + b) % MOD).alias(f"h{j}")
+        for j, (a, b) in enumerate(hash_family(dedup.N_HASHES, 42))
+    ]
+    return codes.groupBy("doc_id").agg(*aggs)
+
+
+def _simhash_explode_agg(docs, seed=7):
+    """The explode + 16-sum aggregate SimHash form the numpy kernel
+    replaced (OPTIMIZATION_r13.md) — kept here as its oracle."""
+    from rnadam_spark.functions.hashing import MOD, hash_family, poly_hash_col
+    from rnadam_spark.functions.shingles import tokens
+
+    token_codes = docs.select(
+        F.col("doc_id"),
+        F.explode(
+            F.transform(
+                F.array_distinct(tokens("text")),
+                lambda t: poly_hash_col(F.rpad(t, 8, "_"), 8),
+            )
+        ).alias("code"),
+    )
+    bit_sums = [
+        F.sum(((F.col("code") * a + b) % MOD % 2) * 2 - 1).alias(f"s{j}")
+        for j, (a, b) in enumerate(hash_family(16, seed))
+    ]
+    sums = token_codes.groupBy("doc_id").agg(*bit_sums)
+    simhash = F.lit(0)
+    for j in range(16):
+        simhash = simhash + (F.col(f"s{j}") >= 0).cast("int") * (2**j)
+    return sums.select(F.col("doc_id"), simhash.cast("bigint").alias("simhash"))
+
+
 def test_minhash_pandas_kernel_matches_jvm(spark):
-    """The r13 numpy kernel must produce IDENTICAL signatures to the
-    explode+aggregate JVM form — including unicode codepoints (utf-32
+    """The numpy kernel must produce IDENTICAL signatures to the
+    explode+aggregate form — including unicode codepoints (utf-32
     decode vs ascii()), exactly-k and shorter-than-k documents, nulls,
     and empty strings (all dropped by both forms)."""
     rows = [
@@ -580,8 +628,8 @@ def test_minhash_pandas_kernel_matches_jvm(spark):
         (7, OTHER),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    jvm = dedup.minhash_signatures(docs, kernel="jvm")
-    pnd = dedup.minhash_signatures(docs, kernel="pandas")
+    jvm = _minhash_explode_agg(docs)
+    pnd = dedup.minhash_signatures(docs)
     assert jvm.columns == pnd.columns
     assert jvm.exceptAll(pnd).count() == 0 and pnd.exceptAll(jvm).count() == 0
     kept = {r.doc_id for r in pnd.collect()}
@@ -589,9 +637,9 @@ def test_minhash_pandas_kernel_matches_jvm(spark):
 
 
 def test_simhash_pandas_kernel_matches_jvm(spark):
-    """The r13 numpy simhash kernel must match the JVM form exactly —
-    including: tokens longer than the 8-char hash window that collide
-    after truncation (distinctness is over FULL tokens, so both
+    """The numpy simhash kernel must match the explode + aggregate form
+    exactly — including: tokens longer than the 8-char hash window that
+    collide after truncation (distinctness is over FULL tokens, so both
     contribute), Java's ASCII-only \\s token split (unicode NBSP is NOT
     a separator), empty/null/whitespace-only docs (dropped), and
     single-token docs."""
@@ -607,8 +655,8 @@ def test_simhash_pandas_kernel_matches_jvm(spark):
         (8, OTHER),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    jvm = dedup.simhash16(docs, kernel="jvm")
-    pnd = dedup.simhash16(docs, kernel="pandas")
+    jvm = _simhash_explode_agg(docs)
+    pnd = dedup.simhash16(docs)
     assert jvm.exceptAll(pnd).count() == 0 and pnd.exceptAll(jvm).count() == 0
     kept = {r.doc_id for r in pnd.collect()}
     assert kept == {0, 1, 2, 3, 7, 8}
@@ -651,11 +699,31 @@ def test_components_max_bucket_none_raises(spark):
         dedup.lsh_near_dup_components(docs, max_bucket=None)
 
 
+def _py_verify(pairs, texts, k, threshold):
+    """Driver-side oracle for verify_pairs: codepoint k-shingle sets,
+    Jaccard as one IEEE division, the same half-up ``hround`` to 6dp."""
+    import math
+
+    def shingles(t):
+        return {t[i : i + k] for i in range(len(t) - k + 1)} if t is not None else set()
+
+    out = {}
+    for a, b in pairs:
+        sa, sb = shingles(texts[a]), shingles(texts[b])
+        inter = len(sa & sb)
+        jac = inter / max(len(sa) + len(sb) - inter, 1)
+        jac = math.floor(jac * 1e6 + 0.5) / 1e6
+        if jac >= threshold:
+            out[(a, b)] = jac
+    return out
+
+
 def test_verify_pairs_kernels_equal(spark):
-    """r14: the packed-int64 verify kernel must match the string form
-    exactly — including astral (non-BMP) codepoints riding the string
-    fallback arrays, null/short texts, and the jaccard VALUES (same
-    integers → same IEEE division → same hround)."""
+    """The verify kernel (packed int64 shingle codes at k=4, the string
+    form at k=5, where codes no longer fit an int64) must match a
+    driver-side Jaccard exactly — including astral (non-BMP) codepoints
+    riding the string fallback arrays, null/short texts, and the
+    jaccard VALUES (same integers → same IEEE division → same hround)."""
     rows = [
         (1, "the quick brown fox jumps over the lazy dog"),
         (2, "the quick brown fox jumps over the lazy dog!"),
@@ -666,23 +734,17 @@ def test_verify_pairs_kernels_equal(spark):
         (7, None),
         (8, "abc"),  # shorter than k
     ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 4), (5, 6), (1, 5), (3, 7), (7, 8), (1, 8)],
-        ["doc_a", "doc_b"],
-    )
-    for thr in (0.8, 0.2, 0.0):
-        got_p = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in dedup.verify_pairs(pairs, docs, threshold=thr).collect()
-        }
-        got_j = {
-            (r.doc_a, r.doc_b): r.jaccard
-            for r in dedup.verify_pairs(
-                pairs, docs, threshold=thr, kernel="jvm"
-            ).collect()
-        }
-        assert got_p == got_j, (thr, got_p, got_j)
+    texts = dict(rows)
+    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
+    pair_list = [(1, 2), (1, 4), (5, 6), (1, 5), (3, 7), (7, 8), (1, 8)]
+    pairs = spark.createDataFrame(pair_list, ["doc_a", "doc_b"])
+    for k in (4, 5):
+        for thr in (0.8, 0.2, 0.0):
+            got = {
+                (r.doc_a, r.doc_b): r.jaccard
+                for r in dedup.verify_pairs(pairs, docs, k=k, threshold=thr).collect()
+            }
+            assert got == _py_verify(pair_list, texts, k, thr), (k, thr)
     # the emoji near-dup pair must verify (astral shingles intersect
     # through the string fallback arrays)
     got = {
@@ -690,11 +752,3 @@ def test_verify_pairs_kernels_equal(spark):
         for r in dedup.verify_pairs(pairs, docs, threshold=0.8).collect()
     }
     assert (5, 6) in got and (1, 4) in got
-    # k > 4 auto-falls back to the string path (codes exceed an int64)
-    wide_p = dedup.verify_pairs(pairs, docs, k=5, threshold=0.2).collect()
-    wide_j = dedup.verify_pairs(pairs, docs, k=5, threshold=0.2, kernel="jvm").collect()
-    assert sorted(map(tuple, wide_p)) == sorted(map(tuple, wide_j))
-    import pytest
-
-    with pytest.raises(ValueError):
-        dedup.verify_pairs(pairs, docs, kernel="nope")

@@ -349,19 +349,17 @@ def test_dsir_self_pandas_equals_two_scan(spark, sf_dir):
 
 
 def test_dsir_kernels_equal(spark, sf_dir):
-    # r13: the end-to-end dsir() composition must yield the identical
-    # selected set under both kernels (the twins are pinned above;
-    # this pins the composition + dsir_select on top of them)
-    import pytest
-
+    # r13: the end-to-end dsir() composition (Arrow twins) must yield
+    # the identical selected set as the explode + broadcast-join twins
+    # composed the same way (the twins are pinned above; this pins the
+    # composition + dsir_select on top of them)
     from rnadam_spark.operators import dsir, sampling
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     target = sampling.hash_sample(docs, "doc_id", 0.2, seed=31)
     a = sorted(map(tuple, dsir.dsir(docs, target, fraction=0.25).collect()))
-    b = sorted(
-        map(tuple, dsir.dsir(docs, target, fraction=0.25, kernel="jvm").collect())
-    )
+    tc = dsir.bucket_counts(target, 10_000)
+    rc = dsir.bucket_counts(docs, 10_000)
+    w = dsir.dsir_log_weights(docs, tc, rc, 10_000)
+    b = sorted(map(tuple, dsir.dsir_select(w, 0.25, 29).collect()))
     assert a == b and len(a) > 50
-    with pytest.raises(ValueError):
-        dsir.dsir(docs, target, fraction=0.25, kernel="nope")

@@ -50,15 +50,19 @@ def test_pagerank_dangling_and_determinism(spark):
 
 
 def test_pagerank_edge_cache_forms_agree(spark):
-    # r13: the loop-static edge cache (opt-in; lazy is the measured
-    # default — see graph.pagerank's docstring) must produce identical
-    # ranks on a graph with hubs, dangling nodes and parallel edges
-    # (duplicate (1,2) counts as two edges both ways).
+    # r13: a caller-materialized, repartitioned edge table (what the
+    # docstring advises for expensive edge subtrees) must give the
+    # lazy form's ranks on a graph with hubs, dangling nodes and
+    # parallel edges (duplicate (1,2) counts as two edges both ways).
+    from rnadam_spark.lineage import truncate_lineage
+
     edges = [(1, 2), (1, 2), (1, 3), (2, 4), (3, 4), (4, 1), (5, 2), (6, 7)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    a = {r.node: r.rank for r in pagerank(df, iterations=8, cache_edges=True).collect()}
-    b = {r.node: r.rank for r in pagerank(df, iterations=8, cache_edges=False).collect()}
-    assert a == b
+    a = {r.node: r.rank for r in pagerank(df, iterations=8).collect()}
+    cached = truncate_lineage(df.repartition(3, "src"))
+    b = {r.node: r.rank for r in pagerank(cached, iterations=8).collect()}
+    assert a.keys() == b.keys()
+    assert all(abs(a[v] - b[v]) < 1e-12 for v in a)
     want = _py_pagerank(edges, iterations=8)
     for v in want:
         assert abs(a[v] - want[v]) < 1e-6

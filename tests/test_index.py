@@ -139,13 +139,19 @@ def test_equivalence_classes_match_retired_oracle(spark, sf_dir):
 
 
 def test_classes_pandas_kernel_matches_jvm(spark, sf_dir):
-    """r13: the Arrow/Counter classes kernel (default) must equal the
-    in-row run-length + count_classes JVM form exactly — md5 ids, cnt
+    """r13: the Arrow/Counter classes kernel must equal the in-row
+    run-length + count_classes JVM form it replaced exactly — md5 ids, cnt
     and n_kmers all pinned (the md5 input is the sorted '|'-joined
     member list, so a sort-order or join-separator drift would flip
     every id)."""
-    from rnadam_spark.queries.genomics_q import _classes
+    from pyspark.sql import functions as F
 
-    jvm = _classes(spark, sf_dir, kernel="jvm")
-    pnd = _classes(spark, sf_dir, kernel="pandas")
+    from rnadam_spark.functions.runlength import count_classes
+    from rnadam_spark.queries.genomics_q import _classes, _doc_kmer_counts
+
+    kc = _doc_kmer_counts(spark, sf_dir)
+    jvm = kc.select("doc_id", F.explode(count_classes(F.col("kc"))).alias("cl")).select(
+        "doc_id", "cl.cnt", "cl.class_id", "cl.n_kmers"
+    )
+    pnd = _classes(spark, sf_dir)
     assert jvm.exceptAll(pnd).count() == 0 and pnd.exceptAll(jvm).count() == 0

@@ -63,23 +63,16 @@ def test_train_char_lm_counts(spark):
 
 def test_train_char_lm_kernels_equal(spark):
     # the r13 Counter-partial training kernel must produce EXACTLY the
-    # JVM explode+hashagg model — integer counts, all corners: null
-    # text, empty text, shorter-than-n text, non-ASCII codepoints
-    # (Python slicing and Spark substr are both codepoint-based)
+    # reference model — integer counts, all corners: null text, empty
+    # text, shorter-than-n text, non-ASCII codepoints (Python slicing
+    # and Spark substr are both codepoint-based)
     rows = TRAIN + [(4, None), (5, ""), (6, "ab"), (7, "naïve café — ok")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     got_p = {
         r.gram: r.gram_cnt for r in lm.train_char_lm(df, cache=False).collect()
     }
-    got_j = {
-        r.gram: r.gram_cnt
-        for r in lm.train_char_lm(df, cache=False, kernel="jvm").collect()
-    }
-    assert got_p == got_j
     want, _ = _py_lm([(d, t) for d, t in rows if t is not None])
     assert got_p == dict(want)
-    with pytest.raises(ValueError):
-        lm.train_char_lm(df, kernel="nope")
 
 
 def test_lm_perplexity_golden(spark):

@@ -404,9 +404,8 @@ def _full_bmp(width=16, height=12, seed=5):
 
 def test_dhash_kernels_equal(spark):
     # r13 batched fake-path kernel: every hash bit must equal the
-    # scalar layering across real-BMP, text, short and empty payloads
-    import pytest
-
+    # per-asset decode layering (BMP → PIL → fake) applied on the
+    # driver, across real-BMP, text, short and empty payloads
     rows = [
         (1, "image", bytearray(_full_bmp()), {}),
         (2, "image", bytearray(_full_bmp(9, -7, seed=8)), {}),
@@ -418,17 +417,22 @@ def test_dhash_kernels_equal(spark):
     ]
     df = spark.createDataFrame(rows, mm.ASSETS)
     got_b = {r.asset_id: r.dhash for r in mm.dhash_assets(df).collect()}
-    got_s = {r.asset_id: r.dhash for r in mm.dhash_assets(df, kernel="scalar").collect()}
-    assert got_b == got_s and len(got_b) == 7
-    with pytest.raises(ValueError):
-        mm.dhash_assets(df, kernel="nope")
+
+    def one(p):
+        gray = mm._bmp_gray(p)
+        if gray is None:
+            gray = mm._pil_gray(p)
+        if gray is None:
+            gray = mm._fake_gray(p)
+        return mm._dhash_bits(gray, 8)
+
+    want = {aid: one(bytes(p)) for aid, _, p, _ in rows}
+    assert got_b == want and len(got_b) == 7
 
 
 def test_audio_kernels_equal(spark):
     import io
     import wave
-
-    import pytest
 
     def tone_wav(width=2, channels=1):
         buf = io.BytesIO()
@@ -449,11 +453,15 @@ def test_audio_kernels_equal(spark):
     ]
     df = spark.createDataFrame(rows, mm.ASSETS)
     got_b = {r.asset_id: (r.afp, r.is_wav) for r in mm.audio_fingerprint(df).collect()}
-    got_s = {
-        r.asset_id: (r.afp, r.is_wav)
-        for r in mm.audio_fingerprint(df, kernel="scalar").collect()
-    }
-    assert got_b == got_s and len(got_b) == 6
+
+    # the per-asset helpers applied on the driver: real PCM decode, or
+    # the marked-fake envelope when the payload is not a plain WAV
+    def one(p):
+        samples = mm._wav_pcm(p)
+        if samples is None:
+            return mm._envelope_bits(mm._fake_envelope(p)), False
+        return mm._envelope_bits(samples), True
+
+    want = {aid: one(bytes(p)) for aid, _, p, _ in rows}
+    assert got_b == want and len(got_b) == 6
     assert got_b[1][1] and not got_b[3][1]
-    with pytest.raises(ValueError):
-        mm.audio_fingerprint(df, kernel="nope")

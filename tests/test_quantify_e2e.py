@@ -366,11 +366,16 @@ def test_em_fixed_point_job_count(spark):
 def test_em_state_fused_pandas_twin_value_equal(spark, sf_dir):
     # r12: em_state's default is the fused Arrow construction (Counter
     # + broadcast-dict accumulate straight to the class grain); the r11
-    # kernel+join form stays one flag away and this pin keeps the two
-    # value-identical — integer counts, so equality is exact. A NULL-
-    # text document must vanish from BOTH (explode drops it in the JVM
-    # form, the Python pass skips it).
-    from rnadam_spark.queries.genomics_q import em_global_counts, em_state
+    # kernel+join form survives as the over-max_vocab fallback and this
+    # pin keeps the two value-identical — integer counts, so equality
+    # is exact. Scan 1's Counter partials are held to the explode +
+    # hash-aggregate form they replaced. A NULL-text document must
+    # vanish from BOTH (explode drops it in the JVM form, the Python
+    # pass skips it).
+    from pyspark.sql import functions as F
+
+    from rnadam_spark.functions.shingles import char_shingles
+    from rnadam_spark.queries.genomics_q import K, em_global_counts, em_state
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").union(
         spark.createDataFrame(
@@ -378,11 +383,16 @@ def test_em_state_fused_pandas_twin_value_equal(spark, sf_dir):
             "doc_id bigint, text string, lang string, source string, n_chars bigint",
         )
     )
-    gc_a = sorted(tuple(r) for r in em_global_counts(docs, pandas_kernel=False).collect())
-    gc_b = sorted(tuple(r) for r in em_global_counts(docs, pandas_kernel=True).collect())
+    explode_agg = (
+        docs.select(F.explode(char_shingles("text", K)).alias("kmer"))
+        .groupBy("kmer")
+        .agg(F.count("*").alias("g_cnt"))
+    )
+    gc_a = sorted(tuple(r) for r in explode_agg.collect())
+    gc_b = sorted(tuple(r) for r in em_global_counts(docs).collect())
     assert gc_a == gc_b and len(gc_a) > 1000
-    a = em_state(docs, pandas_kernel=False)
-    b = em_state(docs, pandas_kernel=True)
+    a = em_state(docs, max_vocab=0)  # the JVM join fallback
+    b = em_state(docs)
     try:
         cc_a = sorted(tuple(r) for r in a["cc"].collect())
         cc_b = sorted(tuple(r) for r in b["cc"].collect())
@@ -409,21 +419,18 @@ def test_em_state_vocab_guard_falls_back_to_join(spark, sf_dir):
     from rnadam_spark.queries.genomics_q import em_state
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    a = em_state(docs, pandas_kernel=True)  # default: fused, collect OK
-    b = em_state(docs, pandas_kernel=True, max_vocab=10)  # guard engages
-    c = em_state(docs, pandas_kernel=False)  # caller-chosen JVM form
+    a = em_state(docs)  # default: fused, collect OK
+    b = em_state(docs, max_vocab=0)  # guard engages
     try:
         cc_a = sorted(tuple(r) for r in a["cc"].collect())
         cc_b = sorted(tuple(r) for r in b["cc"].collect())
     finally:
-        for s in (a, b, c):
+        for s in (a, b):
             s["cc"].unpersist()
             s["edges"].unpersist()
     assert cc_a == cc_b and len(cc_a) > 1000
     plan_a = a["cc"]._jdf.queryExecution().executedPlan().toString()
     log_b = b["cc"]._jdf.queryExecution().analyzed().toString()
-    log_c = c["cc"]._jdf.queryExecution().analyzed().toString()
     assert "Join" not in plan_a  # fused form: no join at all
     assert "Join" in log_b  # fallback took the join form
-    assert "broadcast" not in log_b.lower()  # hint dropped over-cap
-    assert "broadcast" in log_c.lower()  # control: the hint exists to drop
+    assert "broadcast" not in log_b.lower()  # no hint over-cap

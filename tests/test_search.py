@@ -3,11 +3,59 @@ cross-check, and plan contracts."""
 
 from __future__ import annotations
 
-import duckdb
+import math
 
+import duckdb
+from pyspark.sql import functions as F
+
+from rnadam_spark.functions.rounding import hround
 from rnadam_spark.operators import search
 from rnadam_spark.plans.checks import count_shuffles
 from rnadam_spark.sources.tables import load_table
+
+
+# --- the conditional-sum / HOF expression forms the Arrow kernels
+# replaced (OPTIMIZATION_r13.md), kept as their independent oracle
+
+
+def _terms_of(text_col):
+    return F.regexp_extract_all(F.lower(F.col(text_col)), F.lit("[a-z0-9]+"), 0)
+
+
+def _corpus_stats_jvm(docs, query_terms, text_col="text"):
+    toks = _terms_of(text_col)
+    aggs = [F.count("*").alias("_n"), F.avg(F.size(toks)).alias("_avgdl")] + [
+        F.sum(F.array_contains(toks, t).cast("bigint")).alias(f"_df_{i}")
+        for i, t in enumerate(query_terms)
+    ]
+    row = docs.agg(*aggs).collect()[0]
+    dfs = {t: int(row[f"_df_{i}"] or 0) for i, t in enumerate(query_terms)}
+    return int(row["_n"]), float(row["_avgdl"] or 0.0), dfs
+
+
+def _bm25_topk_jvm(docs, query, k=10, k1=1.2, b=0.75, text_col="text", id_col="doc_id"):
+    terms = sorted(set(search._py_terms(query)))
+    n, avgdl, dfs = _corpus_stats_jvm(docs, terms, text_col)
+    idfs = [math.log((n - dfs[t] + 0.5) / (dfs[t] + 0.5) + 1.0) for t in terms]
+    toks = _terms_of(text_col)
+    dl = F.size(toks).cast("double")
+    denom_norm = 1.0 - b + b * dl / F.lit(max(avgdl, 1e-9))
+
+    def term_tf(term):
+        # closure helper, NOT a two-arg lambda default: filter() feeds a
+        # second lambda parameter the element INDEX
+        return F.size(F.filter(toks, lambda x: x == F.lit(term))).cast("double")
+
+    score = F.lit(0.0)
+    for t, idf in zip(terms, idfs):
+        tf = term_tf(t)
+        score = score + F.lit(idf) * tf * (k1 + 1.0) / (tf + k1 * denom_norm)
+    return (
+        docs.select(F.col(id_col), hround(score, 6).alias("score"))
+        .filter(F.col("score") > 0.0)
+        .orderBy(F.col("score").desc(), id_col)
+        .limit(k)
+    )
 
 
 def _docs(spark):
@@ -94,8 +142,6 @@ def test_bm25_kernels_equal(spark, sf_dir):
     # over the real corpus plus unicode lowercasing corners (İ → i +
     # combining dot contains an ASCII 'i'; Kelvin K → k; ß; Σ;
     # titlecase ǅ; fullwidth chars) and null/empty texts
-    import pytest
-
     from rnadam_spark.operators import search as search_mod
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -113,17 +159,8 @@ def test_bm25_kernels_equal(spark, sf_dir):
     )
     q = "the data system and network"
     a = [tuple(r) for r in search_mod.bm25_topk(docs, q, k=30).collect()]
-    jstats = search_mod.corpus_stats(
-        docs, sorted(set(search_mod._py_terms(q))), kernel="jvm"
-    )
+    jstats = _corpus_stats_jvm(docs, sorted(set(search_mod._py_terms(q))))
     pstats = search_mod.corpus_stats(docs, sorted(set(search_mod._py_terms(q))))
     assert jstats == pstats
-    j = [
-        tuple(r)
-        for r in search_mod.bm25_topk(docs, q, k=30, kernel="jvm").collect()
-    ]
+    j = [tuple(r) for r in _bm25_topk_jvm(docs, q, k=30).collect()]
     assert a == j and len(a) == 30
-    with pytest.raises(ValueError):
-        search_mod.bm25_topk(docs, q, kernel="nope")
-    with pytest.raises(ValueError):
-        search_mod.corpus_stats(docs, ["x"], kernel="nope")

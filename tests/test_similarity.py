@@ -1,3 +1,5 @@
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from rnadam_spark.operators import similarity
@@ -307,7 +309,7 @@ def test_incremental_semantic_dups(spark):
     assert capped == []
 
 
-def test_ivfpq_on_stored_codes(spark):
+def test_ivfpq_on_stored_codes(spark, monkeypatch):
     import random
 
     rng = random.Random(3)
@@ -347,27 +349,17 @@ def test_ivfpq_on_stored_codes(spark):
     ).collect()]
     assert allp == a
 
-    # VERDICT r6 #5: the broadcast-join ADC strategy returns the exact
-    # rows of the plan-literal strategy, and its plan probes the tiny
-    # lookup table via a broadcast join (plan size O(1) in m·2^nbits)
-    j = [(r.vec_id, r.score) for r in
-         similarity.pq_topk_on_codes(
-             codes.filter("vec_id != 0"), q, books, k=30, dim=4, strategy="join"
-         ).collect()]
-    assert j == a
+    # above PQ_LITERAL_MAX table entries the lookup table broadcasts as
+    # a (sub, code, qdot) table instead of plan literals: the exact rows
+    # of the literal form, and the plan probes the table via a broadcast
+    # join (plan size O(1) in m·2^nbits)
     from rnadam_spark.plans.checks import has_broadcast_join
 
-    jdf = similarity.pq_topk_on_codes(codes, q, books, k=30, dim=4, strategy="join")
-    assert has_broadcast_join(jdf)
-    # auto-switch: above PQ_LITERAL_MAX entries the default picks join
-    big_m, big_k = 2, 2  # patch the threshold instead of a huge codebook
-    orig = similarity.PQ_LITERAL_MAX
-    try:
-        similarity.PQ_LITERAL_MAX = big_m * big_k - 1
-        auto = similarity.pq_topk_on_codes(codes, q, books, k=30, dim=4)
-        assert has_broadcast_join(auto)
-    finally:
-        similarity.PQ_LITERAL_MAX = orig
+    monkeypatch.setattr(similarity, "PQ_LITERAL_MAX", 0)
+    j = [(r.vec_id, r.score) for r in
+         similarity.pq_topk_on_codes(codes.filter("vec_id != 0"), q, books, k=30, dim=4).collect()]
+    assert j == a
+    assert has_broadcast_join(similarity.pq_topk_on_codes(codes, q, books, k=30, dim=4))
 
 
 def test_hash_embed_properties(spark):
@@ -606,6 +598,74 @@ def test_ivf_topk_matches_retired_oracle(spark, sf_dir):
     assert got == want and len(got) == 20
 
 
+# --- interpreted-HOF references for the numpy embedding kernels (the
+# forms the kernels replaced; each kernel must match them bit for bit)
+
+
+def _bucket_bits_hof(emb: Column, planes: list[list[int]], p: Column | None = None) -> Column:
+    """``Σ_{j<p} (v·hⱼ ≥ 0)·2ʲ`` as ONE transform over the folded plane
+    literal + ONE aggregate, the interpreted expression the numpy bucket
+    kernel replaced (OPTIMIZATION_r13.md). ``p`` masks to the first p
+    planes (None = use all)."""
+    scores = F.transform(
+        similarity._lit_vectors(planes), lambda c: similarity.dot(emb, c)
+    )
+    powers = F.array(*[F.lit(2**j).cast("bigint") for j in range(len(planes))])
+
+    def term(s: Column, j: Column) -> Column:
+        keep = (s >= 0) if p is None else ((j.cast("bigint") < p) & (s >= 0))
+        return F.when(keep, F.element_at(powers, j + F.lit(1))).otherwise(
+            F.lit(0).cast("bigint")
+        )
+
+    return F.aggregate(
+        F.transform(scores, term), F.lit(0).cast("bigint"), lambda acc, x: acc + x
+    )
+
+
+def _lsh_buckets_hof(df, seed=99, dim=similarity.DIM, n_planes=similarity.N_PLANES):
+    planes = similarity.hyperplanes(n=n_planes, dim=dim, seed=seed)
+    bucket = _bucket_bits_hof(similarity._as_double("embedding"), planes)
+    return df.select("vec_id", bucket.cast("bigint").alias("bucket"))
+
+
+def _lsh_buckets_scaled_hof(df, target_bucket, seed=99, dim=similarity.DIM, n_planes_max=16):
+    planes = similarity.hyperplanes(n=n_planes_max, dim=dim, seed=seed)
+    n = df.agg(F.count("*").alias("__n"))
+    tgt = max(target_bucket, 1)
+    p = F.greatest(
+        F.lit(1).cast("bigint"),
+        sum(
+            F.when(F.lit(tgt * 2 ** (j - 1)) < F.col("__n"), 1).otherwise(0)
+            for j in range(1, n_planes_max + 1)
+        ).cast("bigint"),
+    )
+    bucket = _bucket_bits_hof(similarity._as_double("embedding"), planes, p=p)
+    return df.crossJoin(F.broadcast(n)).select("vec_id", bucket.cast("bigint").alias("bucket"))
+
+
+def _ivf_cells_hof(df, n_centroids=16, seed=1234, dim=similarity.DIM, centroids=None):
+    cents = (
+        centroids
+        if centroids is not None
+        else similarity.hyperplanes(n=n_centroids, dim=dim, seed=seed)
+    )
+    scores = similarity._centroid_scores(similarity._as_double("embedding"), cents)
+    return df.select("vec_id", F.array_max(scores)["cid"].cast("bigint").alias("cell"))
+
+
+def _pq_encode_hof(df, codebooks, dim=similarity.DIM):
+    m = len(codebooks)
+    emb = similarity._as_double("embedding")
+    codes = F.array(
+        *[
+            F.array_max(similarity._l2_scores(s, codebooks[sub]))["cid"]
+            for sub, s in enumerate(similarity._sub_slices(emb, m=m, dim=dim))
+        ]
+    )
+    return df.select("vec_id", codes.alias("codes"))
+
+
 def _corner_corpus(spark, dim=64, n=40, seed=7):
     # realistic float rows + every misshapen corner the numpy kernels
     # route through the scalar mirror: null, empty, short, long — plus
@@ -633,26 +693,22 @@ def _corner_corpus(spark, dim=64, n=40, seed=7):
 def test_ivf_cells_kernels_equal(spark):
     df = _corner_corpus(spark)
     got_p = {r.vec_id: r.cell for r in similarity.ivf_cells(df).collect()}
-    got_j = {r.vec_id: r.cell for r in similarity.ivf_cells(df, kernel="jvm").collect()}
+    got_j = {r.vec_id: r.cell for r in _ivf_cells_hof(df).collect()}
     assert got_p == got_j and len(got_p) == 46
     # trained-float centroids too (the cell_near_pairs path)
     cents = [[0.1 * ((i * 7 + j * 3) % 11 - 5) for j in range(64)] for i in range(8)]
     got_p = {r.vec_id: r.cell for r in similarity.ivf_cells(df, centroids=cents).collect()}
     got_j = {
         r.vec_id: r.cell
-        for r in similarity.ivf_cells(df, centroids=cents, kernel="jvm").collect()
+        for r in _ivf_cells_hof(df, centroids=cents).collect()
     }
     assert got_p == got_j
-    # exact-tie breaks to the larger cid in BOTH kernels
+    # exact-tie breaks to the larger cid in BOTH forms
     tie = spark.createDataFrame([(0, [1.0, 1.0, 0.0, 0.0])], SCHEMA)
     tie_cents = [[1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0], [-1.0, 0.0, 0.0, 0.0]]
-    for kern in ("pandas", "jvm"):
-        [r] = similarity.ivf_cells(tie, centroids=tie_cents, dim=4, kernel=kern).collect()
+    for form in (similarity.ivf_cells, _ivf_cells_hof):
+        [r] = form(tie, centroids=tie_cents, dim=4).collect()
         assert r.cell == 1
-    import pytest
-
-    with pytest.raises(ValueError):
-        similarity.ivf_cells(df, kernel="nope")
 
 
 def test_pq_encode_kernels_equal(spark):
@@ -665,38 +721,28 @@ def test_pq_encode_kernels_equal(spark):
     ]
     got_p = {r.vec_id: r.codes for r in similarity.pq_encode(df, books).collect()}
     got_j = {
-        r.vec_id: r.codes for r in similarity.pq_encode(df, books, kernel="jvm").collect()
+        r.vec_id: r.codes for r in _pq_encode_hof(df, books).collect()
     }
     assert got_p == got_j and len(got_p) == 46
-    import pytest
-
-    with pytest.raises(ValueError):
-        similarity.pq_encode(df, books, kernel="nope")
 
 
 def test_lsh_buckets_kernels_equal(spark):
-    import pytest
-
     df = _corner_corpus(spark)
     # an exact-zero dot must set the bit in BOTH kernels (0.0 >= 0)
     zero = spark.createDataFrame([(100, [0.0] * 64)], SCHEMA)
     df = df.union(zero)
     got_p = {r.vec_id: r.bucket for r in similarity.lsh_buckets(df).collect()}
     got_j = {
-        r.vec_id: r.bucket for r in similarity.lsh_buckets(df, kernel="jvm").collect()
+        r.vec_id: r.bucket for r in _lsh_buckets_hof(df).collect()
     }
     assert got_p == got_j and len(got_p) == 47
     assert got_p[100] == 2**similarity.N_PLANES - 1  # all-zero dots: every bit set
     # misshapen rows (null / empty / short / long) bucket to 0 in both
     for vid in (40, 41, 42, 43):
         assert got_p[vid] == 0
-    with pytest.raises(ValueError):
-        similarity.lsh_buckets(df, kernel="nope")
 
 
 def test_lsh_buckets_scaled_kernels_equal(spark):
-    import pytest
-
     # n spanning the p = 1, 2, 3 integer boundaries of the tgt·2^(j-1)
     # rule (tgt=8: p rises at n=9, 17, 33) + the misshapen corners
     df = _corner_corpus(spark, dim=4, n=30)
@@ -707,8 +753,6 @@ def test_lsh_buckets_scaled_kernels_equal(spark):
         }
         got_j = {
             r.vec_id: r.bucket
-            for r in similarity.lsh_buckets_scaled(df, tgt, dim=4, kernel="jvm").collect()
+            for r in _lsh_buckets_scaled_hof(df, tgt, dim=4).collect()
         }
         assert got_p == got_j and len(got_p) == 36
-    with pytest.raises(ValueError):
-        similarity.lsh_buckets_scaled(df, kernel="nope")

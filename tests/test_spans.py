@@ -10,12 +10,42 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from rnadam_spark.functions.shingles import token_ngrams
 from rnadam_spark.operators.spans import (
+    _merge_hit_positions,
     _window_hash_rows,
-    _window_hashes,
     duplicated_spans,
     remove_duplicated_spans,
 )
+
+
+def _window_hashes(text_col: str, min_tokens: int):
+    """The in-row expression the Arrow window kernel replaced
+    (OPTIMIZATION_r13.md) — its independent oracle: BIGINT hashes of
+    every ``min_tokens``-token window."""
+    return F.transform(token_ngrams(text_col, min_tokens), lambda g: F.xxhash64(g))
+
+
+def _contaminated_spans_jvm(docs, benchmark, min_tokens):
+    """contaminated_spans with both window tables built by the in-row
+    expression instead of the Arrow kernel (the replaced form)."""
+    windows = docs.select(
+        F.col("doc_id"),
+        F.posexplode(_window_hashes("text", min_tokens)).alias("pos", "wh"),
+    )
+    bench = benchmark.select(
+        F.explode(_window_hashes("text", min_tokens)).alias("wh")
+    ).distinct()
+    hits = windows.join(F.broadcast(bench), "wh").groupBy("doc_id").agg(
+        F.array_sort(F.collect_list("pos")).alias("_hits")
+    )
+    spans = _merge_hit_positions(F.col("_hits"), min_tokens)
+    return hits.select(F.col("doc_id"), F.explode(spans).alias("s")).select(
+        "doc_id",
+        F.col("s.s").cast("bigint").alias("span_start"),
+        F.col("s.e").cast("bigint").alias("span_end"),
+        (F.col("s.e") - F.col("s.s") + 1).cast("bigint").alias("span_tokens"),
+    )
 
 
 def _py_spans(texts: dict[int, str], L: int) -> dict[int, list[tuple[int, int]]]:
@@ -134,12 +164,9 @@ def test_short_docs_yield_no_windows(spark):
 
 
 def test_no_python_boundary(corpus):
-    # r13: the DEFAULT kernel is one MapInPandas (the vectorized
-    # XXH64 window builder) and nothing else Python; the JVM kernel
-    # stays boundary-free
+    # r13: the window builder is one MapInPandas (the vectorized XXH64
+    # kernel) and nothing else Python
     _, df = corpus
-    plan = duplicated_spans(df, min_tokens=4, kernel="jvm")._jdf.queryExecution().executedPlan().toString()
-    assert "Python" not in plan and "BatchEvalPython" not in plan
     plan_p = duplicated_spans(df, min_tokens=4)._jdf.queryExecution().executedPlan().toString()
     assert plan_p.count("MapInPandas") == 0  # materialized BEFORE the boundary snapshot
     assert "BatchEvalPython" not in plan_p
@@ -298,11 +325,9 @@ def test_xxh64_batch_matches_spark(spark):
 
 
 def test_duplicated_spans_kernels_equal(spark):
-    # window table AND final spans identical across kernels, incl. the
-    # tokenization corners (NBSP is NOT a Java \s separator), unicode
-    # text, short docs, null text, and real duplicated passages
-    import pytest
-
+    # the window table is identical to the in-row expression's, incl.
+    # the tokenization corners (NBSP is NOT a Java \s separator),
+    # unicode text, short docs, null text, and real duplicated passages
     passage = "the quick brown fox jumps over the lazy dog again and again ok"
     rows = [
         (1, f"intro {passage} outro one"),
@@ -317,8 +342,6 @@ def test_duplicated_spans_kernels_equal(spark):
     win_p = sorted(
         map(tuple, _window_hash_rows(docs, 12, "text", "doc_id").collect())
     )
-    from pyspark.sql import functions as F
-
     win_j = sorted(
         map(
             tuple,
@@ -329,20 +352,14 @@ def test_duplicated_spans_kernels_equal(spark):
         )
     )
     assert win_p == win_j and len(win_p) > 10
-    got_p = sorted(map(tuple, duplicated_spans(docs, 12).collect()))
-    got_j = sorted(map(tuple, duplicated_spans(docs, 12, kernel="jvm").collect()))
-    assert got_p == got_j and len(got_p) >= 3
-    with pytest.raises(ValueError):
-        duplicated_spans(docs, 12, kernel="nope")
+    assert len(duplicated_spans(docs, 12).collect()) >= 3
 
 
 def test_contaminated_spans_kernels_equal(spark):
-    # r13: contaminated_spans' corpus-side window table shares the
-    # vectorized XXH64 kernel; spans identical across kernels over the
-    # same corner corpus (incl. a doc whose only hit is unicode-adjacent
-    # and a clean doc)
-    import pytest
-
+    # r13: contaminated_spans' window tables come from the vectorized
+    # XXH64 kernel; spans identical to the in-row expression form over
+    # the same corner corpus (incl. a doc whose only hit is
+    # unicode-adjacent and a clean doc)
     from rnadam_spark.operators.spans import contaminated_spans
 
     passage = "what is the capital of france paris is the capital city"
@@ -360,9 +377,5 @@ def test_contaminated_spans_kernels_equal(spark):
         [(100, f"quiz: {passage} end of key")], "doc_id bigint, text string"
     )
     got_p = sorted(map(tuple, contaminated_spans(docs, bench, min_tokens=5).collect()))
-    got_j = sorted(
-        map(tuple, contaminated_spans(docs, bench, min_tokens=5, kernel="jvm").collect())
-    )
+    got_j = sorted(map(tuple, _contaminated_spans_jvm(docs, bench, 5).collect()))
     assert got_p == got_j and {r[0] for r in got_p} == {1, 3}
-    with pytest.raises(ValueError):
-        contaminated_spans(docs, bench, min_tokens=5, kernel="nope")

@@ -189,8 +189,8 @@ def test_contamination_broadcast_plan(spark):
 
 
 def test_contamination_sortmerge_parity(spark, sf_dir):
-    # broadcast_benchmark=False is the corpus-vs-corpus plan; results
-    # must be identical to the broadcast default
+    # the broadcast-join plan must agree with the Arrow twin, whose
+    # benchmark side is a collected driver set instead of a join
     from rnadam_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -201,9 +201,7 @@ def test_contamination_sortmerge_parity(spark, sf_dir):
     }
     b = {
         r.doc_id: (r.n_grams, r.n_contaminated, r.contamination)
-        for r in text.contamination_scores(
-            docs, bench, n=13, broadcast_benchmark=False
-        ).collect()
+        for r in text.contamination_scores_pandas(docs, bench, n=13).collect()
     }
     assert a == b and a
 
@@ -547,11 +545,13 @@ def test_curation_scores_pandas_twin_value_equal(spark, sf_dir):
 
 
 def test_quality_scores_pandas_kernel_matches_jvm(spark):
-    """r13: the Arrow quality kernel (default) must equal the staged-HOF
-    JVM form on every column — ratios at 6dp, the quality chain's
+    """r13: the Arrow quality kernel must equal the staged-HOF JVM form
+    it replaced (tokens staged once, then :func:`quality_columns`) on
+    every column — ratios at 6dp, the quality chain's
     least() clamps, and the NULL-text corner (NULL ratios, quality
     0.4)."""
-    from rnadam_spark.operators.text import quality_scores
+    from rnadam_spark.functions.shingles import tokens
+    from rnadam_spark.operators.text import quality_columns, quality_scores
 
     rows = [
         (0, "the quick brown fox, it jumped! 123 over 45 dogs."),
@@ -563,7 +563,10 @@ def test_quality_scores_pandas_kernel_matches_jvm(spark):
         (6, "wörds with ünïcode and the stopword the"),
     ]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    jvm = quality_scores(docs, kernel="jvm")
-    pnd = quality_scores(docs, kernel="pandas")
+    cols = quality_columns("text", toks=F.col("__qt"))
+    jvm = docs.select("doc_id", "text", tokens("text").alias("__qt")).select(
+        "doc_id", *[c.alias(name) for name, c in cols.items()]
+    )
+    pnd = quality_scores(docs)
     assert jvm.columns == pnd.columns
     assert jvm.exceptAll(pnd).count() == 0 and pnd.exceptAll(jvm).count() == 0
