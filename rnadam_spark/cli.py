@@ -687,7 +687,7 @@ def _run_curate(spark, args) -> None:
         from rnadam_spark.operators.sampling import hash_sample
 
         model = lm.train_char_lm(hash_sample(scrubbed, "doc_id", args.lm_sample_frac))
-        ppl = lm.lm_perplexity_pandas(scrubbed, model).select("doc_id", "perplexity")
+        ppl = lm.lm_perplexity(scrubbed, model).select("doc_id", "perplexity")
         kept = kept.join(ppl, "doc_id").filter(F.col("perplexity") <= args.max_perplexity)
     if args.classifier_weights is not None:
         from rnadam_spark.operators import lm
@@ -751,7 +751,7 @@ def _run_curate(spark, args) -> None:
         # neither subtree executes twice
         kept = truncate_lineage(kept)
         pp = truncate_lineage(
-            lm.paragraph_perplexity_pandas(kept, model).select(
+            lm.paragraph_perplexity(kept, model).select(
                 "doc_id", "para_idx", "perplexity"
             )
         )
@@ -769,7 +769,7 @@ def _run_curate(spark, args) -> None:
         # docs carry nothing to train on
         kept = text.excise_paragraphs(kept, bad).filter(F.length("text") > 0)
     if model is not None:
-        # both pandas scorers collect the model EAGERLY at construction,
+        # both LM scorers collect the model EAGERLY at construction,
         # so every consumer is done by here — release the cached table
         # instead of orphaning it in the session (r12 ADVICE)
         model.unpersist()

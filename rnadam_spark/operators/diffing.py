@@ -65,17 +65,15 @@ def vocabulary_shift(
     divergence, so ``agg(sum(js_contribution))`` is the scalar drift
     number). ``top_k`` keeps the biggest movers via TakeOrdered.
 
-    Shape: each vocabulary is one explode + one token groupBy (partial
-    aggregates map-side; output bounded by the language's vocabulary,
-    not corpus size), then a token-keyed full-outer join of the two
-    bounded tables with broadcast scalar totals."""
-    from rnadam_spark.operators.text import vocabulary_pandas
+    Shape: each vocabulary is one Arrow Counter pass + one token
+    groupBy (partial aggregates map-side; output bounded by the
+    language's vocabulary, not corpus size), then a token-keyed
+    full-outer join of the two bounded tables with broadcast scalar
+    totals."""
+    from rnadam_spark.operators.text import vocabulary
 
     def probs(df: DataFrame, name: str) -> DataFrame:
-        # the Arrow-batched vocabulary kernel (r12; pinned
-        # tf/df-exact-equal to the run-length HOF form by
-        # tests/test_text_curation)
-        v = vocabulary_pandas(df, text_col=text_col).select("token", "tf")
+        v = vocabulary(df, text_col=text_col).select("token", "tf")
         tot = v.agg(F.sum("tf").alias("_tot"))
         return v.crossJoin(F.broadcast(tot)).select(
             "token", (F.col("tf").cast("double") / F.col("_tot")).alias(name)

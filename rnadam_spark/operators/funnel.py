@@ -174,9 +174,9 @@ def curation_funnel(
     # text — the same shape (and cost) the CLI's model stages pay
     scrubbed_docs = staged.select(F.col(id_col), F.col("__scr").alias(text_col))
     if lm_model is not None and max_perplexity is not None:
-        from rnadam_spark.operators.lm import lm_perplexity_pandas
+        from rnadam_spark.operators.lm import lm_perplexity
 
-        ppl = lm_perplexity_pandas(
+        ppl = lm_perplexity(
             scrubbed_docs, lm_model, text_col=text_col, id_col=id_col
         ).select(id_col, (F.col("perplexity") <= max_perplexity).alias("_p_ppl"))
         flagged = flagged.join(ppl, id_col)

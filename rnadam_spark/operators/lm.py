@@ -15,10 +15,12 @@ Scale shapes, in order of appearance:
   ``alphabet**n`` rows — at char trigrams over printable ASCII that is
   < 1M rows no matter whether the corpus is 1 GB or 100 TB, so the
   trained model always broadcasts.
-- LM scoring and classifier scoring join the exploded corpus against
-  broadcast model tables and re-aggregate by ``doc_id``: the corpus
-  shuffles exactly once (map-side partial agg on doc_id), the models
-  never shuffle.
+- LM scoring collects the bounded model and scores each document (or
+  paragraph) in one Arrow-batched pass: no exchange, no join.
+- Classifier scoring joins the exploded corpus against the broadcast
+  weight table and re-aggregates by ``doc_id``: the corpus shuffles
+  exactly once (map-side partial agg on doc_id), the model never
+  shuffles.
 - Packing windows over a caller-sized hash group, not the whole corpus:
   per-task state is ``corpus/n_groups``, and the output example ids are
   deterministic in content, not partitioning.
@@ -38,7 +40,7 @@ from pyspark.sql import functions as F
 
 from rnadam_spark.functions.hashing import MOD, poly_hash_col
 from rnadam_spark.functions.rounding import hround
-from rnadam_spark.functions.shingles import char_shingles, tokens
+from rnadam_spark.functions.shingles import tokens
 from rnadam_spark.operators.sampling import _sample_code
 
 # ---------------------------------------------------------------------------
@@ -105,64 +107,6 @@ def train_char_lm(
     )
     model = part.groupBy("gram").agg(F.sum("g_p").cast("bigint").alias("gram_cnt"))
     return model.cache() if cache else model
-
-
-def lm_perplexity(
-    docs: DataFrame,
-    lm: DataFrame,
-    n: int = 3,
-    vocab_size: int = 128,
-    text_col: str = "text",
-    id_col: str | tuple[str, ...] = "doc_id",
-) -> DataFrame:
-    """(doc_id, n_grams, avg_neg_log_prob, perplexity): score each
-    document under an add-one-smoothed character ``n``-gram LM trained
-    by :func:`train_char_lm` — the CCNet quality signal (fluent prose
-    scores low, boilerplate/garbage scores high; filter or bucket on
-    it before training).
-
-    Per gram ``g = p·c`` (prefix ``p`` of ``n−1`` chars, final char
-    ``c``)::
-
-        log P(c | p) = ln(cnt(g) + 1) − ln(cnt(p) + vocab_size)
-
-    with unseen grams/prefixes counting 0 — every document scores, even
-    against a tiny LM. ``perplexity = exp(avg_neg_log_prob)``. Documents
-    shorter than ``n`` chars have no grams: kept with ``n_grams = 0``
-    and perplexity 1 (an audit row must never vanish).
-
-    Plan: both model tables broadcast (bounded by ``alphabet**n``);
-    the exploded corpus never shuffles until the final map-side-partial
-    ``doc_id`` re-aggregation — one exchange total."""
-    grams = lm.select("gram", "gram_cnt")
-    prefixes = F.broadcast(
-        grams.groupBy(F.col("gram").substr(1, n - 1).alias("prefix")).agg(
-            F.sum("gram_cnt").cast("bigint").alias("prefix_cnt")
-        )
-    )
-    ids = [id_col] if isinstance(id_col, str) else list(id_col)
-    doc_grams = docs.select(
-        *[F.col(c) for c in ids], F.explode_outer(char_shingles(text_col, n)).alias("gram")
-    )
-    scored = (
-        doc_grams.join(F.broadcast(grams), "gram", "left")
-        .withColumn("prefix", F.col("gram").substr(1, n - 1))
-        .join(prefixes, "prefix", "left")
-        .withColumn(
-            "_nlp",
-            F.when(
-                F.col("gram").isNotNull(),
-                F.log(F.coalesce(F.col("prefix_cnt"), F.lit(0)) + F.lit(vocab_size))
-                - F.log(F.coalesce(F.col("gram_cnt"), F.lit(0)) + F.lit(1)),
-            ),
-        )
-    )
-    anlp = F.coalesce(F.avg("_nlp"), F.lit(0.0))
-    return scored.groupBy(*ids).agg(
-        F.count("gram").cast("bigint").alias("n_grams"),
-        hround(anlp, 6).alias("avg_neg_log_prob"),
-        hround(F.exp(anlp), 6).alias("perplexity"),
-    )
 
 
 def _collect_char_lm(lm: DataFrame, n: int) -> tuple[dict, dict]:
@@ -316,7 +260,7 @@ class _NpCharScorer:
         return out
 
 
-def lm_perplexity_pandas(
+def lm_perplexity(
     docs: DataFrame,
     lm: DataFrame,
     n: int = 3,
@@ -324,26 +268,33 @@ def lm_perplexity_pandas(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Arrow-batched pandas twin of :func:`lm_perplexity` (scalar id
-    only) — same four rounded columns, pinned value-equal by
-    tests/test_lm.py. The r11 measured-twin rule extended to the LM
-    scorer: the JVM form pays an interpreted char_shingles transform,
-    a corpus-sized explode, and two broadcast-join probes per gram,
-    where Python scores a document with two dict lookups per position
-    against the collected (alphabet**n-bounded) model — measured
-    2.8x at sf10 / 3.9x at sf100 for the registered corpus-self-train
-    row (r12).
+    """(doc_id, n_grams, avg_neg_log_prob, perplexity): score each
+    document under an add-one-smoothed character ``n``-gram LM trained
+    by :func:`train_char_lm` — the CCNet quality signal (fluent prose
+    scores low, boilerplate/garbage scores high; filter or bucket on
+    it before training).
 
-    Parity contract with the JVM twin, mirrored here exactly:
-    documents shorter than ``n`` (and NULL text, via explode_outer)
-    keep an (id, 0, 0.0, 1.0) row; per-gram arithmetic, in-row
-    summation order, and 6dp half-up rounding are identical.
+    Per gram ``g = p·c`` (prefix ``p`` of ``n−1`` chars, final char
+    ``c``)::
+
+        log P(c | p) = ln(cnt(g) + 1) − ln(cnt(p) + vocab_size)
+
+    with unseen grams/prefixes counting 0 — every document scores, even
+    against a tiny LM. ``perplexity = exp(avg_neg_log_prob)``. Documents
+    shorter than ``n`` chars (and NULL text) have no grams: kept with
+    ``n_grams = 0`` and perplexity 1 (an audit row must never vanish).
+
+    One Arrow-batched pass scores each document against the collected
+    (alphabet**n-bounded) model with a dense numpy value table — no
+    exchange, no join. Measured 2.8x faster at sf10 (3.9x at sf100)
+    than the char_shingles explode + two broadcast joins + doc_id
+    re-aggregation form, its value-equality oracle in tests/test_lm.py.
+    ``doc_id`` keeps the input's type.
 
     EAGER AT CONSTRUCTION: collecting the model runs the (cached or
     bounded) training plan when this function is CALLED — callers
-    composing build-then-maybe-execute plans should defer the call or
-    use the lazy :func:`lm_perplexity`. Same note on
-    :func:`paragraph_perplexity_pandas`."""
+    composing build-then-maybe-execute plans should defer the call.
+    Same note on :func:`paragraph_perplexity`."""
     import pandas as pd
 
     G, P = _collect_char_lm(lm, n)
@@ -393,8 +344,8 @@ def perplexity_buckets(
 
     The two cut points come from one ``percentile_approx`` aggregate
     (fixed-size sketch per partition — no sort, no window) broadcast
-    back onto the scored table: scoring's single doc_id exchange stays
-    the only corpus-wide shuffle."""
+    back onto the scored table; scoring itself is one Arrow map with
+    no exchange."""
     from rnadam_spark.lineage import truncate_lineage
 
     # materialized once: the scored table feeds BOTH the percentile
@@ -402,7 +353,7 @@ def perplexity_buckets(
     # whole corpus-wide Arrow scoring pass executes twice (the
     # dsir_select discipline; r12 review)
     scored = truncate_lineage(
-        lm_perplexity_pandas(
+        lm_perplexity(
             docs, lm, n=n, vocab_size=vocab_size, text_col=text_col, id_col=id_col
         ).select(id_col, "perplexity")
     )
@@ -432,52 +383,24 @@ def paragraph_perplexity(
     paragraph-granularity perplexity — CCNet's actual unit (its LM
     filter scores and drops PARAGRAPHS, not documents, because real
     pages interleave fluent prose with boilerplate that a doc-level
-    average blurs together). Split on blank lines (the
-    ``paragraph_lang_scores`` convention), score each segment under
-    the same add-one char-n-gram model via the shared
-    :func:`lm_perplexity` kernel keyed on (doc_id, para_idx).
+    average blurs together). Split on ``split_pattern`` (default blank
+    lines, the ``paragraph_lang_scores`` convention), then each
+    paragraph scores under the same add-one char-n-gram model and
+    arithmetic as :func:`lm_perplexity`. The pattern compiles under
+    Python ``re`` here and under Java regex in
+    :func:`text.excise_paragraphs`, which rebuilds documents on the same
+    split: pass only patterns both dialects read alike (``\\n{2,}``,
+    literal separators such as the excise_paragraphs gate row's
+    ``' table '``).
 
-    Plan shape is unchanged from the doc-level scorer (which now
-    accepts a composite key): the model tables broadcast, the exploded
-    grams re-aggregate once on (doc_id, para_idx) with map-side
-    partials, paragraphs number in-row via posexplode — no extra
-    shuffle and no join for the finer grain. Callers excise tail
-    paragraphs and rebuild documents with a concat_ws groupBy on
-    doc_id (one more exchange, only when rewriting)."""
-    paras = docs.select(
-        F.col(id_col),
-        F.posexplode(F.split(F.col(text_col), split_pattern)).alias("para_idx", "_para"),
-    ).filter(F.length(F.trim(F.col("_para"))) > 0)
-    return lm_perplexity(
-        paras, lm, n=n, vocab_size=vocab_size, text_col="_para",
-        id_col=(id_col, "para_idx"),
-    )
-
-
-def paragraph_perplexity_pandas(
-    docs: DataFrame,
-    lm: DataFrame,
-    n: int = 3,
-    vocab_size: int = 128,
-    split_pattern: str = r"\n{2,}",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arrow-batched pandas twin of :func:`paragraph_perplexity` —
-    same five rounded columns, pinned value-equal by tests/test_lm.py;
-    measured 3.1x at sf10 (r12). One Python
-    pass does split + numbering + scoring against the collected model,
-    replacing posexplode + a second corpus-sized gram explode + two
-    join probes per char position.
-
-    Parity notes mirrored from the JVM twin: ``para_idx`` numbers ALL
-    split segments (blank ones keep their index and are then dropped);
-    a NULL-text document vanishes entirely (posexplode of split(NULL)
-    emits no rows); non-blank paragraphs shorter than ``n`` keep an
-    (id, idx, 0, 0.0, 1.0) row. ``split_pattern`` runs under Python
-    ``re`` here and Java regex in the JVM twin — the shipped patterns
-    (``\\n{2,}``, literal separators) are dialect-neutral; patterns
-    that are not must stay on the JVM form."""
+    One Python pass does split + numbering + scoring; measured 3.1x
+    faster at sf10 than the posexplode + gram explode + join form, its
+    value-equality oracle in tests/test_lm.py. ``para_idx`` numbers
+    ALL split segments (blank ones keep their index and are then
+    dropped, as ``F.trim`` would: spaces only); a NULL-text document
+    emits no rows; non-blank paragraphs shorter than ``n`` keep an
+    (id, idx, 0, 0.0, 1.0) row. Callers excise tail paragraphs and
+    rebuild documents with :func:`text.excise_paragraphs`."""
     import re
 
     import pandas as pd
@@ -502,9 +425,8 @@ def paragraph_perplexity_pandas(
                 if text is None:
                     continue
                 for idx, para in enumerate(splitter.split(text)):
-                    # strip(' '), not strip(): the JVM twin's blank
-                    # filter is F.trim, which removes ONLY spaces — a
-                    # segment of just '\n' is non-blank there
+                    # strip(' '), not strip(): F.trim removes ONLY
+                    # spaces, so a segment of just '\n' is non-blank
                     if not para.strip(" "):
                         continue
                     ids.append(did)

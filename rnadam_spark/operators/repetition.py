@@ -8,9 +8,11 @@ pre-training curation pipeline filters on:
 - ``repetition_stats`` — the Gopher-style repetition rules (Rae et al.
   2021, "Scaling Language Models", table A1): duplicate-line fraction,
   duplicate-line character fraction, fraction of characters in the most
-  common word n-gram, and the duplicated-n-gram character mass. All
-  per-row column expressions over the in-row value-counts kernel
-  (functions/runlength.py) — zero shuffle, scan speed at 100 TB.
+  common word n-gram, and the duplicated-n-gram character mass. One
+  Arrow-batched Python pass over each row — zero shuffle. The fused
+  curate chains threshold on :func:`dup_5gram_char_frac_column`, the
+  same stat as an in-row value-counts expression
+  (functions/runlength.py).
 - ``dedup_lines`` — C4/RefinedWeb-style global line dedup: a line that
   occurs more than once across the corpus is kept only at its first
   occurrence (smallest ``(doc_id, line_no)``). Aggregate-then-join, not
@@ -35,20 +37,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from rnadam_spark.functions.rounding import hround
-from rnadam_spark.functions.runlength import let_, value_counts
-from rnadam_spark.functions.shingles import ngrams_of, token_ngrams, tokens
-
-
-def lines_of(col: Column | str) -> Column:
-    """Trimmed, non-empty lines of a text column as a string array."""
-    c = F.col(col) if isinstance(col, str) else col
-    # the explicit lambda matters: passing F.trim itself would let
-    # transform() feed the element INDEX as trim's second (trimStr)
-    # parameter — index 1 would strip '1' characters instead of
-    # whitespace (observed; pinned by the padded-lines test)
-    return F.filter(
-        F.transform(F.split(c, "\n"), lambda t: F.trim(t)), lambda t: F.length(t) > 0
-    )
+from rnadam_spark.functions.runlength import value_counts
+from rnadam_spark.functions.shingles import token_ngrams
 
 
 def _dup_mass_frac(vc: Column) -> Column:
@@ -92,104 +82,35 @@ def repetition_stats(
 ) -> DataFrame:
     """(doc_id, n_lines, dup_line_frac, dup_line_char_frac,
     top_2gram_char_frac, top_3gram_char_frac, dup_5gram_char_frac):
-    the Gopher repetition filter inputs, one shuffle-free projection.
+    the Gopher repetition filter inputs, one shuffle-free Arrow-batched
+    ``mapInPandas`` pass (a Python ``Counter`` per document).
 
     - ``dup_line_frac``: fraction of line occurrences whose text occurs
       >= 2 times within the document.
     - ``dup_line_char_frac``: character-mass version of the same.
     - ``top_{2,3}gram_char_frac``: occurrences x length of the most
       common word n-gram over the document's character count (ties
-      broken toward the lexicographically-largest gram, so both engines
-      pick the same one).
+      broken toward the lexicographically-largest gram, so the DuckDB
+      oracle picks the same one).
     - ``dup_5gram_char_frac``: duplicated-5-gram character mass over
       all-5-gram character mass.
 
-    Every stat is a function of ONE row, so the whole operator
-    distributes with the scan; each value-counts is an O(n log n)
-    per-row sort of a small array (runlength.py kernel).
+    Measured 5.3x faster than the staged higher-order-function
+    projection at sf10 (3.5 vs 18.5 s), which is the value-equality
+    oracle in tests/test_repetition.py.
 
-    Staged in three chained projections (tokens+lines, then the
-    value-counts arrays, then the stats) so the tokenizer and each
-    O(n log n) value-counts sort run ONCE per row instead of once per
-    inline reference — higher-order expressions evaluate interpreted,
-    outside codegen subexpression elimination, so the fused form
-    re-sorted the 5-gram array for every stat that mentioned it (see
-    text.gopher_prelude; 3.3x on the gate row at sf10)."""
-    text = F.col(text_col)
-    n_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
-
-    staged = docs.select(
-        F.col(id_col),
-        F.length(text).alias("__nc"),
-        tokens(text).alias("__toks"),
-        lines_of(text).alias("__lns"),
-    )
-    n_chars = F.greatest(F.col("__nc"), F.lit(1)).cast("double")
-    counted = staged.select(
-        F.col(id_col),
-        F.col("__nc"),
-        F.size(F.col("__lns")).cast("bigint").alias("n_lines"),
-        value_counts(F.col("__lns")).alias("__vc_l"),
-        value_counts(ngrams_of(F.col("__toks"), 2)).alias("__vc2"),
-        value_counts(ngrams_of(F.col("__toks"), 3)).alias("__vc3"),
-        value_counts(ngrams_of(F.col("__toks"), 5)).alias("__vc5"),
-    )
-
-    def top_frac(vc: Column) -> Column:
-        return let_(
-            F.array_max(
-                F.transform(
-                    vc,
-                    lambda x: F.struct(x["cnt"].alias("cnt"), x["value"].alias("value")),
-                )
-            ),
-            lambda top: F.when(top.isNull(), F.lit(0.0)).otherwise(
-                top["cnt"].cast("double") * F.length(top["value"]).cast("double") / n_chars
-            ),
-        )
-
-    dup_line_frac = F.aggregate(
-        F.filter(F.col("__vc_l"), lambda x: x["cnt"] >= 2),
-        F.lit(0.0),
-        lambda a, x: a + x["cnt"].cast("double"),
-    ) / F.greatest(F.col("n_lines").cast("double"), F.lit(1.0))
-    return counted.select(
-        F.col(id_col),
-        F.col("n_lines"),
-        hround(dup_line_frac, 6).alias("dup_line_frac"),
-        hround(_dup_mass_frac(F.col("__vc_l")), 6).alias("dup_line_char_frac"),
-        hround(top_frac(F.col("__vc2")), 6).alias("top_2gram_char_frac"),
-        hround(top_frac(F.col("__vc3")), 6).alias("top_3gram_char_frac"),
-        hround(_dup_mass_frac(F.col("__vc5")), 6).alias("dup_5gram_char_frac"),
-    )
-
-
-def repetition_stats_pandas(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """The vectorized-Python twin of :func:`repetition_stats` — an
-    Arrow-batched ``mapInPandas`` computing the IDENTICAL seven columns
-    (pinned value-equal by tests/test_repetition.py on real corpus rows
-    plus null/empty/whitespace edges), the measured alternative for the
-    engine's heaviest interpreted-HOF kernel. The JVM side pays
-    interpreted higher-order evaluation per row; this side pays one
-    Arrow batch transfer plus Python ``Counter`` work per document —
-    5.3x faster at sf10 in the r11 measurement, which the registered
-    ``repetition_stats`` row follows.
-
-    Semantics mirrored exactly: tokens split on Java's ``\\s`` class
-    (``[ \\t\\n\\x0B\\f\\r]`` — NOT Python's unicode-aware ``\\s``),
-    lines trim ASCII spaces only (``F.trim`` semantics), n-gram ties
-    break toward the lexicographically largest gram (ASCII == UTF8
-    binary order for this corpus), fractions round half-up at 6dp, and
-    a NULL text yields Spark's exact shape (NULL n_lines, 0.0
-    fractions — pinned empirically by the twin-equality test)."""
+    Spark semantics mirrored exactly: tokens split on Java's ``\\s``
+    class (``[ \\t\\n\\x0B\\f\\r]`` — NOT Python's unicode-aware
+    ``\\s``), lines trim ASCII spaces only (``F.trim``), fractions
+    round half-up at 6dp, and a NULL text yields NULL n_lines and 0.0
+    fractions. ``doc_id`` keeps the input's type."""
     import math
     import re
     from collections import Counter
 
+    id_type = dict(docs.dtypes)[id_col]
     out_schema = (
-        f"{id_col} bigint, n_lines bigint, dup_line_frac double,"
+        f"{id_col} {id_type}, n_lines bigint, dup_line_frac double,"
         " dup_line_char_frac double, top_2gram_char_frac double,"
         " top_3gram_char_frac double, dup_5gram_char_frac double"
     )

@@ -109,7 +109,7 @@ def quality_scores(
     length/punct/stopword heuristics — the standard pre-training
     quality filters.
 
-    One Arrow pass with the ``curation_scores_pandas`` parity kit
+    One Arrow pass with the :func:`curation_scores` parity kit
     (Java's ASCII ``\\w``/``\\s`` classes via ``re.ASCII``, each ratio
     one IEEE division, the NULL-text corner → NULL ratios + quality 0.4
     exactly as least() skips nulls) — 3.6 vs 4.8s at sf10 against the
@@ -466,7 +466,7 @@ def c4_columns(
 # Gopher quality-rule constants (Rae et al. 2021, table A1). Word =
 # whitespace token (the engine-wide convention); "symbols" are the
 # hash mark and ellipsis; bullet/ellipsis line rules use trimmed
-# non-empty lines (repetition.lines_of semantics).
+# non-empty lines.
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 _BULLET_PREFIXES = ("•", "-", "*")
 
@@ -509,10 +509,10 @@ def gopher_columns(
     min_stopwords: int = 2,
     prelude: dict[str, Column] | None = None,
 ) -> dict[str, Column]:
-    """The :func:`gopher_quality` expressions as named Columns — the
-    single source of the rule arithmetic, exposed so fused
-    single-projection pipelines (the batch/streaming curate chains)
-    can apply the Gopher page filter without a join.
+    """The :func:`gopher_quality` rules as named Columns (the same
+    eleven values), exposed so fused single-projection pipelines (the
+    batch/streaming curate chains) can apply the Gopher page filter
+    without a join.
 
     ``prelude``: pass ``F.col`` references to the already-materialized
     :func:`gopher_prelude` arrays to tokenize once per row instead of
@@ -593,11 +593,10 @@ def gopher_quality(
     """(doc_id, n_words, mean_word_len, hash_word_ratio,
     ellipsis_word_ratio, bullet_line_frac, ellipsis_line_frac,
     alpha_word_frac, n_stopwords_present, keep_doc, drop_reason): the
-    Gopher document-
-    level quality rules (Rae et al. 2021, "Scaling Language Models",
-    table A1) as ONE shuffle-free projection — the companion to
-    :func:`repetition_stats`' Gopher repetition rules and
-    :func:`c4_clean`'s C4 rules.
+    Gopher document-level quality rules (Rae et al. 2021, "Scaling
+    Language Models", table A1) as one shuffle-free Arrow-batched pass
+    — the companion to ``repetition.repetition_stats``' Gopher
+    repetition rules and :func:`c4_clean`'s C4 rules.
 
     A document is dropped (``keep_doc = false``, ``drop_reason`` naming
     the FIRST failing rule in the paper's order) when:
@@ -615,56 +614,19 @@ def gopher_quality(
 
     Dropped documents keep their row (filtering is the caller's
     ``.filter("keep_doc")``) so audits can aggregate drop_reason.
-    Every column is a function of one input row — scan speed at 100 TB,
-    and stream-composable like the other stateless curation ops."""
-    pre_exprs = gopher_prelude(text_col)
-    staged = docs.select(
-        F.col(id_col),
-        F.col(text_col),
-        *[c.alias(name) for name, c in pre_exprs.items()],
-    )
-    cols = gopher_columns(
-        text_col,
-        min_words=min_words,
-        max_words=max_words,
-        min_mean_word_len=min_mean_word_len,
-        max_mean_word_len=max_mean_word_len,
-        max_symbol_ratio=max_symbol_ratio,
-        max_bullet_frac=max_bullet_frac,
-        max_ellipsis_frac=max_ellipsis_frac,
-        min_alpha_word_frac=min_alpha_word_frac,
-        min_stopwords=min_stopwords,
-        prelude={name: F.col(name) for name in pre_exprs},
-    )
-    return staged.select(F.col(id_col), *[c.alias(name) for name, c in cols.items()])
-
-
-def gopher_quality_pandas(
-    docs: DataFrame,
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_word_frac: float = 0.8,
-    min_stopwords: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The Arrow-batched pandas twin of :func:`gopher_quality` — same
-    eleven columns, pinned value-equal by tests/test_gopher.py; it
-    beat the staged-HOF form 2.5 vs 5.5s at sf10 (r11), the same twin
-    discipline as ``repetition.repetition_stats_pandas``. Semantics mirrored
-    exactly: Java ``\\s`` token split, ASCII-space-only trim for lines,
-    non-overlapping regex counts, 6dp half-up rounding, first-failing
-    drop_reason in the paper's order."""
+    Measured 2.5 vs 5.5 s at sf10 against the staged
+    :func:`gopher_prelude` + :func:`gopher_columns` projection, which
+    stays the form the fused curate chains inline and is this
+    operator's value-equality oracle in tests/test_gopher.py. Spark
+    semantics mirrored exactly: Java ``\\s`` token split,
+    ASCII-space-only trim for lines, non-overlapping regex counts, 6dp
+    half-up rounding. ``doc_id`` keeps the input's type."""
     import math
     import re
 
+    id_type = dict(docs.dtypes)[id_col]
     out_schema = (
-        f"{id_col} bigint, n_words bigint, mean_word_len double,"
+        f"{id_col} {id_type}, n_words bigint, mean_word_len double,"
         " hash_word_ratio double, ellipsis_word_ratio double,"
         " bullet_line_frac double, ellipsis_line_frac double,"
         " alpha_word_frac double, n_stopwords_present bigint,"
@@ -676,8 +638,8 @@ def gopher_quality_pandas(
     # (\r, \u0085, \u2028, \u2029 -- lines here are \n-split so none
     # contain \n); Python's `$` only honors a trailing \n. The lookahead
     # mirrors Java exactly (a CRLF corpus leaves \r on the trimmed line
-    # and the JVM form still counts it as ellipsis-ended; pinned by the
-    # twin test's CRLF edge row).
+    # and gopher_columns' rlike still counts it as ellipsis-ended; pinned
+    # by the CRLF edge row of tests/test_gopher.py).
     ellipsis_end_re = re.compile(
         "(\\.\\.\\.|\u2026)(?=[\r\u0085\u2028\u2029]?$)"
     )
@@ -860,33 +822,7 @@ def chunk_documents(
     )
 
 
-def vocabulary(
-    docs: DataFrame, top_k: int | None = None, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """(token, tf, df): corpus vocabulary with term and document
-    frequencies — the stats behind stopword lists, tokenizer training,
-    and contamination checks. One explode + one groupBy: tf partial-
-    aggregates map-side; df counts each document once via the
-    per-document run-length counts (functions/runlength.py — the same
-    in-row kernel the k-mer queries use; no count(distinct) expansion).
-    ``top_k`` returns the most frequent tokens via TakeOrdered (no
-    global sort)."""
-    from rnadam_spark.functions.runlength import with_value_counts
-
-    per_doc = (
-        with_value_counts(docs.select(F.col(id_col), F.col(text_col)), tokens(text_col), "kc")
-        .select(F.explode("kc").alias("tc"))
-        .select(F.col("tc.value").alias("token"), F.col("tc.cnt").alias("tf_doc"))
-    )
-    vocab = per_doc.groupBy("token").agg(
-        F.sum("tf_doc").alias("tf"), F.count("*").cast("bigint").alias("df")
-    )
-    if top_k is not None:
-        return vocab.orderBy(F.col("tf").desc(), "token").limit(top_k)
-    return vocab
-
-
-def curation_scores_pandas(
+def curation_scores(
     docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
     """(doc_id, quality, predicted_lang): the quality heuristic and the
@@ -897,16 +833,16 @@ def curation_scores_pandas(
     scores quality 0.4 and predicted_lang 'de', the argmax's never-
     improved initial).
 
-    Why a twin instead of the two JVM projections: Catalyst pushes the
-    composite's ``quality >= 0.9`` / ``predicted_lang = 'en'`` filters
-    below the projections INTO the scans' DataFilters, so the full
-    interpreted token/marker kernels evaluate TWICE per document (once
-    to filter, once to emit the column) — measured 36.5s at sf10 for
-    the composite whose parts sum to ~13s. A mapInPandas boundary is
-    opaque to predicate pushdown, so the filter runs on the emitted
-    column exactly once — composite 36.5 → ~6s at sf10. Java ``\\w``/``\\s`` are ASCII classes —
-    mirrored with ``re.ASCII``; every ratio is one IEEE division and
-    the quality chain is the same left-associated expression."""
+    Why one fused pass instead of the two JVM projections: Catalyst
+    pushes the composite's ``quality >= 0.9`` / ``predicted_lang =
+    'en'`` filters below the projections INTO the scans' DataFilters,
+    so the interpreted token/marker kernels evaluate TWICE per document
+    (once to filter, once to emit the column). A mapInPandas boundary
+    is opaque to predicate pushdown, so each kernel runs once — the
+    composite measured 36.5 → ~6 s at sf10. Java ``\\w``/``\\s`` are
+    ASCII classes — mirrored with ``re.ASCII``; every ratio is one IEEE
+    division and the quality chain is the same left-associated
+    expression."""
     import math
     import re
 
@@ -958,21 +894,20 @@ def curation_scores_pandas(
     return docs.select(id_col, text_col).mapInPandas(batches, out_schema)
 
 
-def vocabulary_pandas(
+def vocabulary(
     docs: DataFrame, top_k: int | None = None, text_col: str = "text", id_col: str = "doc_id"
 ) -> DataFrame:
-    """Arrow-batched pandas twin of :func:`vocabulary` — same (token,
-    tf, df) columns, pinned value-equal by tests/test_text_curation
-    (all-integer counts, so equality is exact, not rounded). Each
-    Arrow batch folds into ONE pair of Counters — a map-side combine
-    in Python, so a task emits one partial row per distinct token in
-    the batch (bounded by vocabulary, not corpus size) and the final
-    groupBy moves only those partials. Measured 1.8x at sf10 vs the
-    run-length HOF form (r12): per-token string
-    sorting under interpreted lambdas is exactly the shape the twin
-    rule flags, just with a smaller constant than the gram builders.
+    """(token, tf, df): corpus vocabulary with term and document
+    frequencies — the stats behind stopword lists, tokenizer training,
+    and contamination checks. Each Arrow batch folds into ONE pair of
+    Counters — a map-side combine in Python, so a task emits one
+    partial row per distinct token in the batch (bounded by
+    vocabulary, not corpus size) and one groupBy merges the partials.
+    Measured 1.8x faster at sf10 than the run-length explode + groupBy
+    form, its value-equality oracle in tests/test_text_curation.py.
     Java ``\\s`` tokenization mirrored exactly; NULL text contributes
-    nothing (the HOF form's empty-array explode)."""
+    nothing. ``top_k`` returns the most frequent tokens via
+    TakeOrdered (no global sort)."""
     import re
 
     ws = re.compile("[ \t\n\x0b\f\r]+")
@@ -1008,36 +943,20 @@ def vocabulary_pandas(
     return vocab
 
 
-def contamination_scores(
-    docs: DataFrame,
-    benchmark: DataFrame,
-    n: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    bench_text_col: str = "text",
+def _contamination_join(
+    docs: DataFrame, bench_grams: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
-    """(doc_id, n_grams, n_contaminated, contamination): fraction of a
-    document's distinct word ``n``-grams that appear anywhere in the
-    benchmark corpus — the standard pre-training decontamination stat
-    (13-gram overlap is the conventional window). Drop or flag
-    documents above a threshold before training so eval numbers stay
-    meaningful.
-
-    Shape: benchmark grams distinct once, then a broadcast left join
-    from the exploded document grams — eval suites are tiny next to a
-    100 TB corpus, so the scan side never shuffles. Documents
-    shorter than ``n`` tokens score 0 (kept via explode_outer — a doc
-    must never silently vanish from an audit)."""
-    bench_grams = (
-        benchmark.select(F.explode(token_ngrams(bench_text_col, n)).alias("gram"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
+    """:func:`contamination_scores` for a benchmark past
+    ``max_bench_grams``: the exploded document grams left-join the
+    distinct benchmark grams and re-aggregate by doc_id. No broadcast
+    hint: a gram table too big to collect to the driver is too big to
+    force onto every executor (the ``genomics_q.em_state`` over-cap
+    rule), so the planner picks the join from its size estimate."""
     doc_grams = docs.select(
         F.col(id_col),
         F.explode_outer(F.array_distinct(token_ngrams(text_col, n))).alias("gram"),
     )
-    joined = doc_grams.join(F.broadcast(bench_grams), "gram", "left")
+    joined = doc_grams.join(bench_grams.withColumn("_hit", F.lit(1)), "gram", "left")
     n_grams = F.count("gram")
     n_hit = F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
     return joined.groupBy(id_col).agg(
@@ -1049,7 +968,7 @@ def contamination_scores(
     )
 
 
-def contamination_scores_pandas(
+def contamination_scores(
     docs: DataFrame,
     benchmark: DataFrame,
     n: int = 13,
@@ -1058,34 +977,30 @@ def contamination_scores_pandas(
     bench_text_col: str = "text",
     max_bench_grams: int = 2_000_000,
 ) -> DataFrame:
-    """The Arrow-batched pandas twin of :func:`contamination_scores` —
-    same three columns, pinned value-equal by tests/test_text_curation
-    (r11's measured-twin discipline: repetition 5.3x, gopher 2.2x at
-    sf10; this one 21.8x). The benchmark's distinct grams collect once
-    to a driver set and ship in the task closure; per document the
-    n-gram set builds in Python and intersects that set — no join, no
-    interpreted slice+array_join per gram position. Java ``\\s``
-    tokenization and 6dp half-up rounding mirrored exactly; docs
-    shorter than ``n`` tokens (and NULL text) keep their (0, 0, 0.0)
-    audit row.
+    """(doc_id, n_grams, n_contaminated, contamination): fraction of a
+    document's distinct word ``n``-grams that appear anywhere in the
+    benchmark corpus — the standard pre-training decontamination stat
+    (13-gram overlap is the conventional window). Drop or flag
+    documents above a threshold before training so eval numbers stay
+    meaningful.
 
-    The driver-set design assumes the benchmark is eval-suite-sized —
-    the same boundedness argument that broadcasts it in the JVM form,
-    but a python set ships UNCOMPRESSED to every worker where the
-    broadcast relation stays columnar. ``max_bench_grams`` guards the
-    assumption: the distinct-gram count is checked first (one cheap
-    aggregate over the side that gets scanned anyway) and a benchmark
-    past the cap falls back to :func:`contamination_scores`' broadcast
-    join, which degrades gracefully instead of OOMing the driver
-    (r11 review — a corpus-fraction "benchmark" grows without bound).
-    The default cap is 2M grams (~0.5 GB as a Python set of ~100-char
-    strings): r11 ADVICE measured 20M as multi-GB on a 16g driver —
-    past its own guard's point. The gram set ships as a SparkContext
-    BROADCAST, not closure state: executors fetch one torrent copy
-    and share one deserialized set across tasks, instead of unpickling
-    a multi-hundred-MB closure per stage. The guard count and the
-    collect share one persisted materialization (r11 ADVICE: the
-    explode+distinct otherwise ran twice per call)."""
+    The benchmark's distinct grams collect once to a driver set and
+    ship as a SparkContext broadcast (one torrent copy per executor,
+    one deserialized set shared across tasks); per document the n-gram
+    set builds in Python and intersects that set — no join, no
+    corpus-side shuffle. Measured 4.8 vs 105 s at sf10 against the
+    explode + broadcast-join form, its value-equality oracle in
+    tests/test_text_curation.py. Java ``\\s`` tokenization and 6dp
+    half-up rounding mirrored exactly; docs shorter than ``n`` tokens
+    (and NULL text) keep their (0, 0, 0.0) audit row — a doc never
+    silently vanishes. ``doc_id`` keeps the input's type.
+
+    The driver set assumes an eval-suite-sized benchmark, and a
+    Python set of ~100-char strings is large (~0.5 GB at the default
+    2M-gram cap; 20M measured multi-GB on a 16g driver).
+    ``max_bench_grams`` guards it: the distinct-gram count runs first
+    over the same persisted table the collect reads, and a benchmark
+    past the cap scores through :func:`_contamination_join` instead."""
     import math
     import re
 
@@ -1098,17 +1013,15 @@ def contamination_scores_pandas(
     )
     try:
         if bench_grams_df.count() > max_bench_grams:
-            return contamination_scores(
-                docs, benchmark, n=n, text_col=text_col, id_col=id_col,
-                bench_text_col=bench_text_col,
-            )
+            return _contamination_join(docs, bench_grams_df, n, text_col, id_col)
         bench_set = {r.gram for r in bench_grams_df.collect()}
     finally:
         bench_grams_df.unpersist()
     bc_bench = docs.sparkSession.sparkContext.broadcast(bench_set)
     java_ws = re.compile("[ \t\n\x0b\f\r]+")
+    id_type = dict(docs.dtypes)[id_col]
     out_schema = (
-        f"{id_col} bigint, n_grams bigint, n_contaminated bigint,"
+        f"{id_col} {id_type}, n_grams bigint, n_contaminated bigint,"
         " contamination double"
     )
 

@@ -684,13 +684,9 @@ def gopher_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic in DuckDB so thresholds, first-failing drop_reason, and
     the 6dp-rounded stats hash-compare across engines.
 
-    Default implementation is the Arrow-batched pandas twin — the r11
-    measurement has it 2.2x
-    faster than the staged-HOF form at sf10 (2.5s vs 5.5s); the two are
-    pinned value-equal by tests/test_gopher.py, so the gate hash is
-    implementation-independent. The HOF column expressions remain the
-    composable form the fused curate chains inline."""
-    return text.gopher_quality_pandas(load_table(spark, sf_dir, "documents"))
+    The Arrow-batched operator measured 2.5 vs 5.5 s at sf10 against the
+    staged column-builder projection the fused curate chains inline."""
+    return text.gopher_quality(load_table(spark, sf_dir, "documents"))
 
 
 _LANGS = sorted(text.LANG_MARKERS)
@@ -750,15 +746,14 @@ def curated_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     The filter on rounded quality uses the identical rounded value on
     both engines, so the predicate cannot disagree at the boundary.
 
-    r12: quality + lang fused into ONE Arrow pass
-    (``text.curation_scores_pandas``) — the separate-projection form
-    let Catalyst push the two filters into the scans' DataFilters,
-    evaluating the full interpreted kernels TWICE per document (36.5s
-    at sf10 where the parts sum to ~13s); a mapInPandas boundary is
-    opaque to pushdown, so each kernel runs once (twin pinned
-    value-equal incl. NULL corners)."""
+    Quality + lang fused into ONE Arrow pass (``text.curation_scores``)
+    — the separate-projection form let Catalyst push the two filters
+    into the scans' DataFilters, evaluating the full interpreted kernels
+    TWICE per document (36.5s at sf10 where the parts sum to ~13s); a
+    mapInPandas boundary is opaque to pushdown, so each kernel runs
+    once."""
     docs = load_table(spark, sf_dir, "documents")
-    scores = text.curation_scores_pandas(docs)
+    scores = text.curation_scores(docs)
     canon = dedup.exact_dup_groups(docs).select(
         F.col("canonical_id").alias("doc_id"), "n_dups"
     )
@@ -1172,16 +1167,12 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit; both engines break top-gram ties toward the
     lexicographically-largest gram.
 
-    Default implementation is the Arrow-batched pandas twin: the
-    r11 measurement has it 5.3x faster than the interpreted-HOF form at sf10 (3.5s vs
-    18.5s) — this kernel does enough per-row array work that
-    interpreted higher-order evaluation costs more than the Arrow
-    transfer + Python Counter pass. The two forms are pinned
-    value-equal (tests/test_repetition.py twin test), so the gate hash
-    is implementation-independent."""
+    The Arrow-batched operator measured 5.3x faster than the
+    interpreted higher-order-function projection at sf10 (3.5 vs
+    18.5 s)."""
     from rnadam_spark.operators import repetition as rep
 
-    return rep.repetition_stats_pandas(
+    return rep.repetition_stats(
         load_table(spark, sf_dir, "documents", widen=True)
     )
 
@@ -1260,15 +1251,11 @@ def contamination_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     one task closure and the corpus side never shuffles). Docs shorter
     than 13 tokens score 0, never dropped.
 
-    Default implementation is the Arrow-batched pandas twin — the
-    biggest win of the r11 twin series: 21.8x at sf10 (4.8s vs 105s). Building a
-    13-token gram string per position through interpreted
-    slice+array_join, then array_distinct + explode + join, is exactly
-    the shape Python set arithmetic does in microseconds per document;
-    the two forms are pinned value-equal by tests/test_text_curation."""
+    The Arrow-batched operator measured 4.8 vs 105 s at sf10 against
+    the explode + broadcast-join form."""
     docs = load_table(spark, sf_dir, "documents")
     bench = docs.filter(F.col("doc_id") % _BENCH_MOD == 0)
-    return text.contamination_scores_pandas(docs, bench, n=DECONTAM_N)
+    return text.contamination_scores(docs, bench, n=DECONTAM_N)
 
 
 def _c4_bad_sql() -> str:
@@ -1506,8 +1493,8 @@ _LM_PPL_SQL = f"""
 def lm_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet-style perplexity scoring under a char-3-gram add-one LM
     trained on the corpus itself (operators/lm.py — the model table is
-    bounded by alphabet³ rows so it broadcasts at any corpus size; the
-    exploded corpus shuffles exactly once on doc_id). Self-training
+    bounded by alphabet³ rows, collected once, and every document
+    scores in one Arrow pass with no exchange). Self-training
     makes the query deterministic and the oracle closed-form: DuckDB
     re-derives the same gram/prefix counts and the same
     ln(prefix+V) − ln(gram+1) arithmetic, so n_grams, avg_neg_log_prob,
@@ -1516,14 +1503,13 @@ def lm_perplexity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rnadam_spark.operators import lm
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    # cache=False: the pandas scorer collects the model exactly once,
+    # cache=False: the Arrow scorer collects the model exactly once,
     # so a cached handle would be orphaned in the session after the
     # collect and accumulate across bench loops / repeated gate rows
     # (r12 ADVICE) — one uncached training pass is the same cost
     model = lm.train_char_lm(docs, n=_LM_N, cache=False)
-    # the Arrow-batched scorer (r12, 2.8x at sf10; pinned value-equal
-    # to the HOF+join form incl. NULL/short docs by tests/test_lm.py)
-    return lm.lm_perplexity_pandas(docs, model, n=_LM_N, vocab_size=_LM_V)
+    # the Arrow-batched scorer: 2.8x at sf10 against the explode + join form
+    return lm.lm_perplexity(docs, model, n=_LM_N, vocab_size=_LM_V)
 
 
 # rounded-perplexity threshold for the excision composite: ~p90 of the
@@ -1592,13 +1578,12 @@ def excise_ppl_tail_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rnadam_spark.operators import lm
 
     docs = load_table(spark, sf_dir, "documents", widen=True).select("doc_id", "text")
-    # cache=False: single immediate pandas-scorer consumer — a cached
+    # cache=False: single immediate Arrow-scorer consumer — a cached
     # handle would outlive the collect as an orphan (r12 ADVICE)
     model = lm.train_char_lm(docs, n=_LM_N, cache=False)
-    # the Arrow-batched paragraph scorer (r12, 3.1x at sf10;
-    # value-equality pinned by tests/test_lm.py incl. the
-    # trim/blank-segment edges)
-    ppl = lm.paragraph_perplexity_pandas(
+    # the Arrow-batched paragraph scorer: 3.1x at sf10 against the
+    # posexplode + gram explode + join form
+    ppl = lm.paragraph_perplexity(
         docs, model, n=_LM_N, vocab_size=_LM_V, split_pattern=_PARA_SPLIT
     )
     bad = ppl.filter(F.col("perplexity") >= _EXCISE_PPL_T).select("doc_id", "para_idx")
@@ -1657,8 +1642,9 @@ def dsir_log_weights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic 20% hash sample of documents — target ⊆ raw, so the
     oracle's rc-left-join ratio table equals the operator's full-outer
     form) and the raw corpus, then per-doc Σ log(p_target/p_raw) with
-    add-1 smoothing. Both model tables are bounded by n_buckets rows
-    (always broadcast); the corpus shuffles once on doc_id. The oracle
+    add-1 smoothing. Both model tables are bounded by n_buckets rows;
+    the log-ratio table is collected and the corpus scores in one
+    Arrow pass with no exchange. The oracle
     re-derives buckets with the identical rpad-8 polynomial hash, so
     n_features and 6dp log_weight hash-compare. The Gumbel-top-k
     resample step (dsir_select) is pinned by pytest goldens — its
@@ -1667,13 +1653,11 @@ def dsir_log_weights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rnadam_spark.operators import dsir
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
-    # r12 twin defaults (both pinned value-equal by tests/test_dsir.py),
-    # r13 (OPTIMIZATION_r13.md §9): since
-    # target ⊆ raw by a row-local hash predicate, ONE Arrow pass
-    # histograms both corpora (dsir_log_weights_self_pandas) — counts
-    # and ratio doubles identical to the two-scan form, 3 → 2 corpus
-    # passes (sf10: 11.7 → 9.8s, interleaved min-of-3)
-    return dsir.dsir_log_weights_self_pandas(
+    # OPTIMIZATION_r13.md §9: since target ⊆ raw by a row-local hash
+    # predicate, ONE Arrow pass histograms both corpora — counts and
+    # ratio doubles identical to the two-scan form, 3 → 2 corpus passes
+    # (sf10: 11.7 → 9.8s, interleaved min-of-3)
+    return dsir.dsir_log_weights_self(
         docs,
         sampling.sample_predicate(F.col("doc_id"), _DSIR_TARGET_FRAC, seed=_DSIR_SEED),
         DSIR_BUCKETS,

@@ -11,9 +11,103 @@ from collections import Counter
 
 import duckdb
 import pytest
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
-from rnadam_spark.functions.hashing import MOD, hash_family
+from rnadam_spark.functions.hashing import MOD, hash_family, poly_hash_col
+from rnadam_spark.functions.rounding import hround
+from rnadam_spark.functions.shingles import ngrams_of, tokens
 from rnadam_spark.operators import dsir
+
+
+def _bucket_of(gram: Column, n_buckets: int) -> Column:
+    """Bucket id in [0, n_buckets) of an n-gram string — polynomial
+    hash of the gram right-padded to ``dsir.HASH_CHARS`` chars (the
+    ``simhash16`` convention), reduced mod n_buckets."""
+    return poly_hash_col(F.rpad(gram, dsir.HASH_CHARS, "_"), dsir.HASH_CHARS) % F.lit(n_buckets)
+
+
+def _doc_feature_buckets(
+    text_col: str | Column = "text",
+    n_buckets: int = 10_000,
+    ns: tuple[int, ...] = (1, 2),
+    toks: Column | None = None,
+) -> Column:
+    """Array column of hashed n-gram feature buckets for one document
+    (with multiplicity — DSIR weights count every occurrence).
+
+    ``toks``: an already-tokenized array column — the staged-prelude
+    form (``gopher_prelude`` discipline). Inline, each gram width
+    re-tokenizes the document (interpreted higher-order expressions get
+    no codegen subexpression elimination), and the n=1 width used to
+    build its "grams" as single-element slice+array_join — an expensive
+    identity. With a staged token array, unigrams ARE the tokens
+    (byte-identical strings, so bucket ids are unchanged) and wider
+    grams build from the same array once."""
+    t = tokens(text_col) if toks is None else toks
+    grams = F.concat(*[t if n == 1 else ngrams_of(t, n) for n in ns])
+    # NULL text: tokens(NULL) is NULL and concat propagates it — the
+    # coalesce restores the pre-staging contract (empty array, as the
+    # per-n token_ngrams guards used to yield), so F.size() on the
+    # result stays 0 rather than NULL for null documents
+    grams = F.coalesce(grams, F.array().cast("array<string>"))
+    return F.transform(grams, lambda g: _bucket_of(g, n_buckets))
+
+
+def _bucket_counts_hof(
+    corpus: DataFrame,
+    n_buckets: int = 10_000,
+    ns: tuple[int, ...] = (1, 2),
+    text_col: str = "text",
+) -> DataFrame:
+    """Oracle: the explode + groupBy form that was ``dsir.bucket_counts``
+    before the Arrow Counter pass replaced it. (bucket, cnt):
+    hashed-n-gram bucket counts of a corpus, ≤ ``n_buckets`` rows; the
+    groupBy partial-aggregates map-side."""
+    staged = corpus.select(tokens(text_col).alias("__toks"))
+    return (
+        staged.select(
+            F.explode(
+                _doc_feature_buckets(text_col, n_buckets, ns, toks=F.col("__toks"))
+            ).alias("bucket")
+        )
+        .groupBy("bucket")
+        .agg(F.count("*").cast("bigint").alias("cnt"))
+    )
+
+
+def _dsir_log_weights_hof(
+    raw_docs: DataFrame,
+    target_counts: DataFrame,
+    raw_counts: DataFrame,
+    n_buckets: int = 10_000,
+    alpha: float = 1.0,
+    ns: tuple[int, ...] = (1, 2),
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Oracle: the explode + broadcast-join form that was
+    ``dsir.dsir_log_weights`` before the fused Arrow scorer replaced it
+    (the dsir gate row 17.7 → 11.4 s at sf10). Corpus exploded once →
+    broadcast join on the ≤n_buckets log-ratio table → map-side-partial
+    doc_id re-aggregation. Documents with no tokens keep n_features 0
+    and log_weight 0.0."""
+    ratios = F.broadcast(
+        dsir._log_ratio_table(target_counts, raw_counts, n_buckets, alpha)
+    )
+    staged = raw_docs.select(F.col(id_col), tokens(text_col).alias("__toks"))
+    feats = staged.select(
+        F.col(id_col),
+        F.explode_outer(
+            _doc_feature_buckets(text_col, n_buckets, ns, toks=F.col("__toks"))
+        ).alias("bucket"),
+    )
+    scored = feats.join(ratios, "bucket", "left")
+    return scored.groupBy(id_col).agg(
+        F.count("bucket").cast("bigint").alias("n_features"),
+        hround(F.coalesce(F.sum("log_ratio"), F.lit(0.0)), 6).alias("log_weight"),
+    )
+
 
 N_BUCKETS = 64  # small so test buckets collide like real ones do
 ALPHA = 1.0
@@ -286,13 +380,12 @@ def test_dsir_select_approx_agrees_with_exact(spark):
 
 
 def test_dsir_pandas_twins_value_equal(spark, sf_dir):
-    # r12 measured-twin discipline: the Counter histogram twin and the
-    # FUSED scorer twin (em_state pattern — final per-doc grain straight
-    # from the Arrow pass) must reproduce the explode+join forms EXACTLY
-    # on real corpus rows plus null/empty/short edges. n_features must
-    # count every feature occurrence, hit or not: the extra '[t]'-only
-    # doc below produces buckets the ratio table may miss.
-    from rnadam_spark.operators import dsir, sampling
+    # the Counter histogram and the FUSED scorer (final per-doc grain
+    # straight from the Arrow pass) must reproduce the explode+join
+    # oracles EXACTLY on real corpus rows plus null/empty/short edges.
+    # n_features must count every feature occurrence, hit or not: the
+    # extra '[t]'-only doc below produces buckets the ratio table may miss.
+    from rnadam_spark.operators import sampling
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text").union(
         spark.createDataFrame(
@@ -302,13 +395,13 @@ def test_dsir_pandas_twins_value_equal(spark, sf_dir):
         )
     )
     target = sampling.hash_sample(docs, "doc_id", 0.2, seed=31)
-    tc_a, rc_a = dsir.bucket_counts(target, 4096), dsir.bucket_counts(docs, 4096)
-    tc_b, rc_b = dsir.bucket_counts_pandas(target, 4096), dsir.bucket_counts_pandas(docs, 4096)
+    tc_a, rc_a = _bucket_counts_hof(target, 4096), _bucket_counts_hof(docs, 4096)
+    tc_b, rc_b = dsir.bucket_counts(target, 4096), dsir.bucket_counts(docs, 4096)
     assert sorted(map(tuple, tc_a.collect())) == sorted(map(tuple, tc_b.collect()))
     assert sorted(map(tuple, rc_a.collect())) == sorted(map(tuple, rc_b.collect()))
-    a = {r.doc_id: tuple(r)[1:] for r in dsir.dsir_log_weights(docs, tc_a, rc_a, 4096).collect()}
+    a = {r.doc_id: tuple(r)[1:] for r in _dsir_log_weights_hof(docs, tc_a, rc_a, 4096).collect()}
     b = {r.doc_id: tuple(r)[1:]
-         for r in dsir.dsir_log_weights_pandas(docs, tc_b, rc_b, 4096).collect()}
+         for r in dsir.dsir_log_weights(docs, tc_b, rc_b, 4096).collect()}
     assert set(a) == set(b) and len(a) > 500
     for k in a:
         assert a[k] == b[k], (k, a[k], b[k])
@@ -316,13 +409,13 @@ def test_dsir_pandas_twins_value_equal(spark, sf_dir):
 
 
 def test_dsir_self_pandas_equals_two_scan(spark, sf_dir):
-    # r13: the one-pass self form (single corpus scan histogramming
-    # raw+target together) must reproduce the two-scan pandas pipeline
+    # the one-pass self form (single corpus scan histogramming
+    # raw+target together) must reproduce the two-scan pipeline
     # exactly — same histogram integers → same ratio doubles → same
     # weights, on the registered query's own sample predicate
     from pyspark.sql import functions as F
 
-    from rnadam_spark.operators import dsir, sampling
+    from rnadam_spark.operators import sampling
     from rnadam_spark.queries.pipeline_q import (
         DSIR_BUCKETS,
         _DSIR_SEED,
@@ -332,13 +425,13 @@ def test_dsir_self_pandas_equals_two_scan(spark, sf_dir):
 
     docs = load_table(spark, sf_dir, "documents", widen=True)
     target = sampling.hash_sample(docs, "doc_id", _DSIR_TARGET_FRAC, seed=_DSIR_SEED)
-    two_scan = dsir.dsir_log_weights_pandas(
+    two_scan = dsir.dsir_log_weights(
         docs,
-        dsir.bucket_counts_pandas(target, DSIR_BUCKETS),
-        dsir.bucket_counts_pandas(docs, DSIR_BUCKETS),
+        dsir.bucket_counts(target, DSIR_BUCKETS),
+        dsir.bucket_counts(docs, DSIR_BUCKETS),
         DSIR_BUCKETS,
     )
-    one_pass = dsir.dsir_log_weights_self_pandas(
+    one_pass = dsir.dsir_log_weights_self(
         docs,
         sampling.sample_predicate(F.col("doc_id"), _DSIR_TARGET_FRAC, seed=_DSIR_SEED),
         DSIR_BUCKETS,
@@ -349,17 +442,17 @@ def test_dsir_self_pandas_equals_two_scan(spark, sf_dir):
 
 
 def test_dsir_kernels_equal(spark, sf_dir):
-    # r13: the end-to-end dsir() composition (Arrow twins) must yield
-    # the identical selected set as the explode + broadcast-join twins
-    # composed the same way (the twins are pinned above; this pins the
-    # composition + dsir_select on top of them)
-    from rnadam_spark.operators import dsir, sampling
+    # the end-to-end dsir() composition must yield the identical
+    # selected set as the explode + broadcast-join oracles composed the
+    # same way (the kernels are pinned above; this pins the composition
+    # + dsir_select on top of them)
+    from rnadam_spark.operators import sampling
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     target = sampling.hash_sample(docs, "doc_id", 0.2, seed=31)
     a = sorted(map(tuple, dsir.dsir(docs, target, fraction=0.25).collect()))
-    tc = dsir.bucket_counts(target, 10_000)
-    rc = dsir.bucket_counts(docs, 10_000)
-    w = dsir.dsir_log_weights(docs, tc, rc, 10_000)
+    tc = _bucket_counts_hof(target, 10_000)
+    rc = _bucket_counts_hof(docs, 10_000)
+    w = _dsir_log_weights_hof(docs, tc, rc, 10_000)
     b = sorted(map(tuple, dsir.dsir_select(w, 0.25, 29).collect()))
     assert a == b and len(a) > 50

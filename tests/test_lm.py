@@ -8,11 +8,115 @@ from collections import Counter
 
 import duckdb
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from rnadam_spark.functions.hashing import poly_hash_sql
-from rnadam_spark.functions.rounding import hround_sql
+from rnadam_spark.functions.rounding import hround, hround_sql
+from rnadam_spark.functions.shingles import char_shingles
 from rnadam_spark.operators import lm
 from rnadam_spark.operators.sampling import sample_code_sql
+
+
+def _lm_perplexity_hof(
+    docs: DataFrame,
+    lm: DataFrame,
+    n: int = 3,
+    vocab_size: int = 128,
+    text_col: str = "text",
+    id_col: str | tuple[str, ...] = "doc_id",
+) -> DataFrame:
+    """Oracle: the char_shingles explode + broadcast-join form that was
+    ``lm.lm_perplexity`` before the Arrow scorer (2.8x at sf10)
+    replaced it; ``id_col`` may be a composite key.
+
+    (doc_id, n_grams, avg_neg_log_prob, perplexity): score each
+    document under an add-one-smoothed character ``n``-gram LM trained
+    by :func:`train_char_lm` — the CCNet quality signal (fluent prose
+    scores low, boilerplate/garbage scores high; filter or bucket on
+    it before training).
+
+    Per gram ``g = p·c`` (prefix ``p`` of ``n−1`` chars, final char
+    ``c``)::
+
+        log P(c | p) = ln(cnt(g) + 1) − ln(cnt(p) + vocab_size)
+
+    with unseen grams/prefixes counting 0 — every document scores, even
+    against a tiny LM. ``perplexity = exp(avg_neg_log_prob)``. Documents
+    shorter than ``n`` chars have no grams: kept with ``n_grams = 0``
+    and perplexity 1 (an audit row must never vanish).
+
+    Plan: both model tables broadcast (bounded by ``alphabet**n``);
+    the exploded corpus never shuffles until the final map-side-partial
+    ``doc_id`` re-aggregation — one exchange total."""
+    grams = lm.select("gram", "gram_cnt")
+    prefixes = F.broadcast(
+        grams.groupBy(F.col("gram").substr(1, n - 1).alias("prefix")).agg(
+            F.sum("gram_cnt").cast("bigint").alias("prefix_cnt")
+        )
+    )
+    ids = [id_col] if isinstance(id_col, str) else list(id_col)
+    doc_grams = docs.select(
+        *[F.col(c) for c in ids], F.explode_outer(char_shingles(text_col, n)).alias("gram")
+    )
+    scored = (
+        doc_grams.join(F.broadcast(grams), "gram", "left")
+        .withColumn("prefix", F.col("gram").substr(1, n - 1))
+        .join(prefixes, "prefix", "left")
+        .withColumn(
+            "_nlp",
+            F.when(
+                F.col("gram").isNotNull(),
+                F.log(F.coalesce(F.col("prefix_cnt"), F.lit(0)) + F.lit(vocab_size))
+                - F.log(F.coalesce(F.col("gram_cnt"), F.lit(0)) + F.lit(1)),
+            ),
+        )
+    )
+    anlp = F.coalesce(F.avg("_nlp"), F.lit(0.0))
+    return scored.groupBy(*ids).agg(
+        F.count("gram").cast("bigint").alias("n_grams"),
+        hround(anlp, 6).alias("avg_neg_log_prob"),
+        hround(F.exp(anlp), 6).alias("perplexity"),
+    )
+
+
+def _paragraph_perplexity_hof(
+    docs: DataFrame,
+    lm: DataFrame,
+    n: int = 3,
+    vocab_size: int = 128,
+    split_pattern: str = r"\n{2,}",
+    text_col: str = "text",
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """Oracle: the posexplode + :func:`_lm_perplexity_hof` form that was
+    ``lm.paragraph_perplexity`` before the Arrow pass (3.1x at sf10).
+
+    (doc_id, para_idx, n_grams, avg_neg_log_prob, perplexity):
+    paragraph-granularity perplexity — CCNet's actual unit (its LM
+    filter scores and drops PARAGRAPHS, not documents, because real
+    pages interleave fluent prose with boilerplate that a doc-level
+    average blurs together). Split on blank lines (the
+    ``paragraph_lang_scores`` convention), score each segment under
+    the same add-one char-n-gram model via the shared
+    :func:`lm_perplexity` kernel keyed on (doc_id, para_idx).
+
+    Plan shape is unchanged from the doc-level scorer (which now
+    accepts a composite key): the model tables broadcast, the exploded
+    grams re-aggregate once on (doc_id, para_idx) with map-side
+    partials, paragraphs number in-row via posexplode — no extra
+    shuffle and no join for the finer grain. Callers excise tail
+    paragraphs and rebuild documents with a concat_ws groupBy on
+    doc_id (one more exchange, only when rewriting)."""
+    paras = docs.select(
+        F.col(id_col),
+        F.posexplode(F.split(F.col(text_col), split_pattern)).alias("para_idx", "_para"),
+    ).filter(F.length(F.trim(F.col("_para"))) > 0)
+    return _lm_perplexity_hof(
+        paras, lm, n=n, vocab_size=vocab_size, text_col="_para",
+        id_col=(id_col, "para_idx"),
+    )
+
 
 TRAIN = [
     (1, "the cat sat on the mat"),
@@ -350,13 +454,14 @@ def test_sample_to_mixture_deterministic(spark):
 
 
 def test_lm_and_classifier_plans_broadcast(spark):
-    """Model tables broadcast; the corpus side shuffles exactly once
-    (the doc_id re-aggregation)."""
+    """Classifier weights broadcast and the corpus side shuffles
+    exactly once (the doc_id re-aggregation); the LM scorer is one
+    Arrow map."""
     docs = spark.createDataFrame(SCORE, ["doc_id", "text"])
     model = lm.train_char_lm(spark.createDataFrame(TRAIN, ["doc_id", "text"]))
     plan = lm.lm_perplexity(docs, model)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+    # the LM scorer collects its bounded model: no join, no exchange
+    assert "Join" not in plan and "Exchange" not in plan
     cplan = (
         lm.classifier_score(docs, _weights_df(spark, 4096))
         ._jdf.queryExecution()
@@ -561,14 +666,14 @@ def _edge_docs(spark):
 
 
 def test_lm_perplexity_pandas_twin_value_equal(spark, sf_dir):
-    # r12 measured-twin discipline: the Arrow scorer must reproduce the
-    # JVM explode+join form EXACTLY (same 6dp-rounded values, same rows)
-    # on real corpus rows plus null/short/exact-n edges
+    # the Arrow scorer must reproduce the explode+join oracle EXACTLY
+    # (same 6dp-rounded values, same rows) on real corpus rows plus
+    # null/short/exact-n edges
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     both = docs.union(_edge_docs(spark))
     model = lm.train_char_lm(both.filter("doc_id % 10 = 0"))
-    a = {r.doc_id: tuple(r)[1:] for r in lm.lm_perplexity(both, model).collect()}
-    b = {r.doc_id: tuple(r)[1:] for r in lm.lm_perplexity_pandas(both, model).collect()}
+    a = {r.doc_id: tuple(r)[1:] for r in _lm_perplexity_hof(both, model).collect()}
+    b = {r.doc_id: tuple(r)[1:] for r in lm.lm_perplexity(both, model).collect()}
     model.unpersist()
     assert set(a) == set(b) and len(a) > 500
     for k in a:
@@ -583,11 +688,11 @@ def test_paragraph_perplexity_pandas_twin_value_equal(spark, sf_dir):
     model = lm.train_char_lm(both.filter("doc_id % 10 = 0"))
     a = {
         (r.doc_id, r.para_idx): tuple(r)[2:]
-        for r in lm.paragraph_perplexity(both, model).collect()
+        for r in _paragraph_perplexity_hof(both, model).collect()
     }
     b = {
         (r.doc_id, r.para_idx): tuple(r)[2:]
-        for r in lm.paragraph_perplexity_pandas(both, model).collect()
+        for r in lm.paragraph_perplexity(both, model).collect()
     }
     model.unpersist()
     assert set(a) == set(b) and len(a) > 500

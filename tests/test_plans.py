@@ -356,7 +356,8 @@ def test_round7_operators_plan_contracts(spark, sf_dir):
     # the round-7 surface keeps the engine's plan discipline:
     # dsir_select thresholds by broadcast (no Window, no global Sort in
     # the selection), excise_paragraphs rebuilds without a Window, and
-    # the DSIR weight chain broadcasts its bounded model tables
+    # the DSIR weight pass scores against its collected bounded
+    # log-ratio table (no Window, no Join)
     from pyspark.sql import functions as F
 
     from rnadam_spark.operators import dsir, text
@@ -368,7 +369,7 @@ def test_round7_operators_plan_contracts(spark, sf_dir):
     rc = dsir.bucket_counts(docs, 512)
     w = dsir.dsir_log_weights(docs, tc, rc, 512)
     assert not has_window(w)
-    assert has_broadcast_join(w)  # the <=n_buckets log-ratio table
+    assert "Join" not in w._jdf.queryExecution().executedPlan().toString()
 
     sel = dsir.dsir_select(w.limit(50), 0.5)
     plan = sel._jdf.queryExecution().executedPlan().toString()
@@ -433,12 +434,13 @@ _SELECTOR_PARAMS = frozenset(
 )
 
 
-def _selector_sites() -> list[str]:
+def _production_functions():
+    """(module name, function name, function) for every function defined
+    in the operators, queries and algorithms packages."""
     import importlib
     import inspect
     import pkgutil
 
-    sites = []
     for pkg_name in (
         "rnadam_spark.operators",
         "rnadam_spark.queries",
@@ -448,14 +450,37 @@ def _selector_sites() -> list[str]:
         for info in pkgutil.iter_modules(pkg.__path__):
             mod = importlib.import_module(f"{pkg_name}.{info.name}")
             for name, fn in inspect.getmembers(mod, inspect.isfunction):
-                if fn.__module__ != mod.__name__:
-                    continue
-                for param in inspect.signature(fn).parameters:
-                    if param in _SELECTOR_PARAMS:
-                        sites.append(f"{mod.__name__}.{name}({param}=)")
-    return sorted(sites)
+                if fn.__module__ == mod.__name__:
+                    yield mod.__name__, name, fn
+
+
+def _selector_sites() -> list[str]:
+    import inspect
+
+    return sorted(
+        f"{mod}.{name}({param}=)"
+        for mod, name, fn in _production_functions()
+        for param in inspect.signature(fn).parameters
+        if param in _SELECTOR_PARAMS
+    )
 
 
 def test_no_physical_form_selector_params():
     sites = _selector_sites()
     assert not sites, f"{len(sites)} physical-form selector parameters: {sites}"
+
+
+def test_no_pandas_twins_or_materialize_params():
+    # an operator's Arrow form is its production form under the plain
+    # name; the table-level HOF form it replaced is a test oracle, not a
+    # `*_pandas` sibling, and no table form takes an opt-out of its own
+    # stage boundary (`materialize=`)
+    import inspect
+
+    sites = sorted(
+        f"{mod}.{name}" + ("(materialize=)" if "materialize" in params else "")
+        for mod, name, fn in _production_functions()
+        for params in [inspect.signature(fn).parameters]
+        if name.endswith("_pandas") or "materialize" in params
+    )
+    assert not sites, f"{len(sites)} twin names / materialize parameters: {sites}"

@@ -297,16 +297,21 @@ def test_nfkc_normalize_idempotent(spark, texts):
 @given(texts=CORPUS)
 @PROP_SETTINGS
 def test_staged_gopher_equals_inline_columns(spark, texts):
-    """The staged gopher_quality (materialized prelude) must equal the
+    """The staged Gopher projection (materialized prelude) must equal the
     inline gopher_columns projection on arbitrary text — the refactor
-    that made the prelude a separate projection must be invisible."""
+    that made the prelude a separate projection must be invisible —
+    and so must the Arrow-batched text.gopher_quality."""
+    from tests.test_gopher import _gopher_quality_hof
+
     df = _df(spark, texts)
-    staged = tx.gopher_quality(df).collect()
+    staged = _gopher_quality_hof(df).collect()
     cols = tx.gopher_columns("text")
     inline = df.select(
         "doc_id", *[c.alias(name) for name, c in cols.items()]
     ).collect()
     assert sorted(map(tuple, staged)) == sorted(map(tuple, inline))
+    arrow = tx.gopher_quality(df).collect()
+    assert sorted(map(tuple, arrow)) == sorted(map(tuple, inline))
 
 
 @given(texts=CORPUS)

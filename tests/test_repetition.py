@@ -9,8 +9,104 @@ import re
 from collections import Counter
 
 import duckdb
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
+from rnadam_spark.functions.rounding import hround
+from rnadam_spark.functions.runlength import let_, value_counts
+from rnadam_spark.functions.shingles import ngrams_of, tokens
 from rnadam_spark.operators import repetition, text
+
+
+def _lines_of(col: Column | str) -> Column:
+    """Trimmed, non-empty lines of a text column as a string array."""
+    c = F.col(col) if isinstance(col, str) else col
+    # the explicit lambda matters: passing F.trim itself would let
+    # transform() feed the element INDEX as trim's second (trimStr)
+    # parameter — index 1 would strip '1' characters instead of
+    # whitespace (observed; pinned by the padded-lines test)
+    return F.filter(
+        F.transform(F.split(c, "\n"), lambda t: F.trim(t)), lambda t: F.length(t) > 0
+    )
+
+
+def _repetition_stats_hof(
+    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Oracle: the staged higher-order-function form of
+    ``repetition.repetition_stats`` (the production form is the Arrow
+    pass, 5.3x faster at sf10). (doc_id, n_lines, dup_line_frac,
+    dup_line_char_frac, top_2gram_char_frac, top_3gram_char_frac,
+    dup_5gram_char_frac), one shuffle-free projection.
+
+    - ``dup_line_frac``: fraction of line occurrences whose text occurs
+      >= 2 times within the document.
+    - ``dup_line_char_frac``: character-mass version of the same.
+    - ``top_{2,3}gram_char_frac``: occurrences x length of the most
+      common word n-gram over the document's character count (ties
+      broken toward the lexicographically-largest gram, so both engines
+      pick the same one).
+    - ``dup_5gram_char_frac``: duplicated-5-gram character mass over
+      all-5-gram character mass.
+
+    Every stat is a function of ONE row, so the whole operator
+    distributes with the scan; each value-counts is an O(n log n)
+    per-row sort of a small array (runlength.py kernel).
+
+    Staged in three chained projections (tokens+lines, then the
+    value-counts arrays, then the stats) so the tokenizer and each
+    O(n log n) value-counts sort run ONCE per row instead of once per
+    inline reference — higher-order expressions evaluate interpreted,
+    outside codegen subexpression elimination, so the fused form
+    re-sorted the 5-gram array for every stat that mentioned it (see
+    text.gopher_prelude; 3.3x on the gate row at sf10)."""
+    text = F.col(text_col)
+    n_chars = F.greatest(F.length(text), F.lit(1)).cast("double")
+
+    staged = docs.select(
+        F.col(id_col),
+        F.length(text).alias("__nc"),
+        tokens(text).alias("__toks"),
+        _lines_of(text).alias("__lns"),
+    )
+    n_chars = F.greatest(F.col("__nc"), F.lit(1)).cast("double")
+    counted = staged.select(
+        F.col(id_col),
+        F.col("__nc"),
+        F.size(F.col("__lns")).cast("bigint").alias("n_lines"),
+        value_counts(F.col("__lns")).alias("__vc_l"),
+        value_counts(ngrams_of(F.col("__toks"), 2)).alias("__vc2"),
+        value_counts(ngrams_of(F.col("__toks"), 3)).alias("__vc3"),
+        value_counts(ngrams_of(F.col("__toks"), 5)).alias("__vc5"),
+    )
+
+    def top_frac(vc: Column) -> Column:
+        return let_(
+            F.array_max(
+                F.transform(
+                    vc,
+                    lambda x: F.struct(x["cnt"].alias("cnt"), x["value"].alias("value")),
+                )
+            ),
+            lambda top: F.when(top.isNull(), F.lit(0.0)).otherwise(
+                top["cnt"].cast("double") * F.length(top["value"]).cast("double") / n_chars
+            ),
+        )
+
+    dup_line_frac = F.aggregate(
+        F.filter(F.col("__vc_l"), lambda x: x["cnt"] >= 2),
+        F.lit(0.0),
+        lambda a, x: a + x["cnt"].cast("double"),
+    ) / F.greatest(F.col("n_lines").cast("double"), F.lit(1.0))
+    return counted.select(
+        F.col(id_col),
+        F.col("n_lines"),
+        hround(dup_line_frac, 6).alias("dup_line_frac"),
+        hround(repetition._dup_mass_frac(F.col("__vc_l")), 6).alias("dup_line_char_frac"),
+        hround(top_frac(F.col("__vc2")), 6).alias("top_2gram_char_frac"),
+        hround(top_frac(F.col("__vc3")), 6).alias("top_3gram_char_frac"),
+        hround(repetition._dup_mass_frac(F.col("__vc5")), 6).alias("dup_5gram_char_frac"),
+    )
 
 
 def _hr(x: float) -> float:
@@ -343,15 +439,10 @@ def test_pyref_repetition_matches_duckdb():
 
 
 def test_repetition_stats_pandas_twin_value_equal(spark, sf_dir):
-    """The Arrow-batched pandas twin must reproduce the HOF operator
+    """The Arrow-batched repetition_stats must reproduce the HOF oracle
     EXACTLY — same 6dp values, same null shape — on real corpus rows
     plus the edge shapes (null text, empty text, whitespace-only,
-    repeated lines, a dominant n-gram)."""
-    from rnadam_spark.operators.repetition import (
-        repetition_stats,
-        repetition_stats_pandas,
-    )
-
+    repeated lines, a dominant n-gram), and keep a string id's type."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     edge = spark.createDataFrame(
         [
@@ -365,8 +456,11 @@ def test_repetition_stats_pandas_twin_value_equal(spark, sf_dir):
         "doc_id bigint, text string",
     )
     both = docs.union(edge)
-    a = {r.doc_id: tuple(r)[1:] for r in repetition_stats(both).collect()}
-    b = {r.doc_id: tuple(r)[1:] for r in repetition_stats_pandas(both).collect()}
+    a = {r.doc_id: tuple(r)[1:] for r in _repetition_stats_hof(both).collect()}
+    b = {r.doc_id: tuple(r)[1:] for r in repetition.repetition_stats(both).collect()}
     assert set(a) == set(b) and len(a) > 500
     for k in a:
         assert a[k] == b[k], (k, a[k], b[k])
+    keyed = both.select(F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text")
+    got = {r.doc_id: tuple(r)[1:] for r in repetition.repetition_stats(keyed).collect()}
+    assert got == {f"d{k}": v for k, v in a.items()}

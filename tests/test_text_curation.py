@@ -3,9 +3,32 @@ the curation steps between raw scrape and training shards."""
 
 from collections import Counter
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rnadam_spark.functions.runlength import with_value_counts
+from rnadam_spark.functions.shingles import tokens
 from rnadam_spark.operators import text
+
+
+def _vocabulary_hof(
+    docs: DataFrame, top_k: int | None = None, text_col: str = "text", id_col: str = "doc_id"
+) -> DataFrame:
+    """Oracle: the run-length explode + groupBy form that was
+    ``text.vocabulary`` before the Arrow Counter pass (1.8x at sf10)
+    replaced it. df counts each document once via the per-document
+    run-length counts (no count(distinct) expansion)."""
+    per_doc = (
+        with_value_counts(docs.select(F.col(id_col), F.col(text_col)), tokens(text_col), "kc")
+        .select(F.explode("kc").alias("tc"))
+        .select(F.col("tc.value").alias("token"), F.col("tc.cnt").alias("tf_doc"))
+    )
+    vocab = per_doc.groupBy("token").agg(
+        F.sum("tf_doc").alias("tf"), F.count("*").cast("bigint").alias("df")
+    )
+    if top_k is not None:
+        return vocab.orderBy(F.col("tf").desc(), "token").limit(top_k)
+    return vocab
 
 
 def test_redact_pii_golden(spark):
@@ -120,7 +143,7 @@ def test_vocabulary_matches_counter(spark, sf_dir):
 
 
 def test_vocabulary_plan_shapes(spark, sf_dir):
-    # one groupBy shuffle; the per-doc counts are in-row (run-length)
+    # one groupBy shuffle; the per-batch counts combine map-side
     from rnadam_spark.plans import count_shuffles
     from rnadam_spark.sources.tables import load_table
 
@@ -181,27 +204,34 @@ def test_contamination_scores_golden(spark):
 
 
 def test_contamination_broadcast_plan(spark):
-    from rnadam_spark.plans import has_broadcast_join
-
+    # under the cap the benchmark ships as a broadcast variable: the
+    # scoring pass is one Arrow map with no join and no exchange
     docs = spark.createDataFrame([(1, "a b c d e f")], ["doc_id", "text"])
     bench = spark.createDataFrame([(1, "a b c")], ["bench_id", "text"])
-    assert has_broadcast_join(text.contamination_scores(docs, bench, n=3))
+    df = text.contamination_scores(docs, bench, n=3)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" in plan and "Join" not in plan and "Exchange" not in plan
 
 
 def test_contamination_sortmerge_parity(spark, sf_dir):
-    # the broadcast-join plan must agree with the Arrow twin, whose
-    # benchmark side is a collected driver set instead of a join
+    # the over-cap join path must agree with the Arrow path, whose
+    # benchmark side is a collected driver set instead of a join. A
+    # benchmark past max_bench_grams is too big to collect, so it is too
+    # big to force-broadcast as well: the join carries no hint
     from rnadam_spark.sources.tables import load_table
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bench = docs.filter(F.col("doc_id") % 20 == 0)
+    over = text.contamination_scores(docs, bench, n=13, max_bench_grams=0)
+    optimized = over._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" in optimized and "broadcast" not in optimized.lower()
     a = {
         r.doc_id: (r.n_grams, r.n_contaminated, r.contamination)
-        for r in text.contamination_scores(docs, bench, n=13).collect()
+        for r in over.collect()
     }
     b = {
         r.doc_id: (r.n_grams, r.n_contaminated, r.contamination)
-        for r in text.contamination_scores_pandas(docs, bench, n=13).collect()
+        for r in text.contamination_scores(docs, bench, n=13).collect()
     }
     assert a == b and a
 
@@ -452,13 +482,11 @@ def test_vocabulary_matches_retired_oracle(spark):
 
 
 def test_contamination_pandas_twin_value_equal(spark, sf_dir):
-    """The Arrow-batched contamination twin must reproduce the JVM
-    broadcast-join form EXACTLY on real corpus rows plus null/short/
-    exact-13-token/contaminated edges."""
-    from rnadam_spark.operators.text import (
-        contamination_scores,
-        contamination_scores_pandas,
-    )
+    """The Arrow driver-set path must reproduce the join path (the
+    form past ``max_bench_grams``) EXACTLY on real corpus rows plus
+    null/short/exact-13-token/contaminated edges, and keep a string
+    id's type."""
+    from rnadam_spark.operators.text import contamination_scores
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     thirteen = "a b c d e f g h i j k l m"
@@ -474,23 +502,24 @@ def test_contamination_pandas_twin_value_equal(spark, sf_dir):
     )
     both = docs.union(edge)
     bench = both.filter("doc_id % 20 = 0 or doc_id = 300004")
-    a = {r.doc_id: tuple(r)[1:] for r in contamination_scores(both, bench).collect()}
-    b = {
+    a = {
         r.doc_id: tuple(r)[1:]
-        for r in contamination_scores_pandas(both, bench).collect()
+        for r in contamination_scores(both, bench, max_bench_grams=0).collect()
     }
+    b = {r.doc_id: tuple(r)[1:] for r in contamination_scores(both, bench).collect()}
     assert set(a) == set(b) and len(a) > 500
     for k in a:
         assert a[k] == b[k], (k, a[k], b[k])
     # the planted benchmark doc is fully contaminated on both sides
     assert a[300004][2] == 1.0
+    keyed = both.select(F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text")
+    got = {r.doc_id: tuple(r)[1:] for r in contamination_scores(keyed, bench).collect()}
+    assert got == {f"d{k}": v for k, v in a.items()}
 
 
 def test_vocabulary_pandas_twin_value_equal(spark, sf_dir):
-    # r12 measured-twin discipline: all-integer counts, so the pin is
+    # all-integer counts, so the pin against the run-length oracle is
     # exact equality on real corpus rows plus null/empty/whitespace edges
-    from rnadam_spark.operators.text import vocabulary, vocabulary_pandas
-
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     edge = spark.createDataFrame(
         [
@@ -502,8 +531,8 @@ def test_vocabulary_pandas_twin_value_equal(spark, sf_dir):
         "doc_id bigint, text string",
     )
     both = docs.union(edge)
-    a = {r.token: (r.tf, r.df) for r in vocabulary(both).collect()}
-    b = {r.token: (r.tf, r.df) for r in vocabulary_pandas(both).collect()}
+    a = {r.token: (r.tf, r.df) for r in _vocabulary_hof(both).collect()}
+    b = {r.token: (r.tf, r.df) for r in text.vocabulary(both).collect()}
     # the driver corpus's synthetic vocabulary is ~32 tokens; the edge
     # rows add 2 more
     assert a == b and len(a) > 30
@@ -511,12 +540,12 @@ def test_vocabulary_pandas_twin_value_equal(spark, sf_dir):
 
 
 def test_curation_scores_pandas_twin_value_equal(spark, sf_dir):
-    # r12: the fused Arrow kernel behind curated_documents must equal
+    # the fused Arrow kernel behind curated_documents must equal
     # quality_scores ⋈ lang_scores exactly — including the NULL-text
     # corners (least() skips nulls -> quality 0.4; the argmax never
     # improves past its 'de' initial) and empty/whitespace/tie rows
     from rnadam_spark.operators.text import (
-        curation_scores_pandas,
+        curation_scores,
         lang_scores,
         quality_scores,
     )
@@ -537,7 +566,7 @@ def test_curation_scores_pandas_twin_value_equal(spark, sf_dir):
     q = {r.doc_id: r.quality for r in quality_scores(both).collect()}
     lg = {r.doc_id: r.predicted_lang for r in lang_scores(both).collect()}
     fused = {r.doc_id: (r.quality, r.predicted_lang)
-             for r in curation_scores_pandas(both).collect()}
+             for r in curation_scores(both).collect()}
     assert set(fused) == set(q) and len(fused) > 500
     for k, (qv, lv) in fused.items():
         assert qv == q[k] and lv == lg[k], (k, (qv, lv), (q[k], lg[k]))
