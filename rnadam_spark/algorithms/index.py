@@ -85,8 +85,15 @@ def build_index(
     two extra shuffles plus zipWithUniqueId's partition-count job,
     Index.scala:94-98.) The hash is 128-bit md5, matching
     functions/runlength.count_classes — see the module docstring.
+
+    Eager: the (t_id, kmer, class_id) table all three outputs project is
+    materialized here, once (``timers`` checkpoints every stage anyway;
+    without timers ``truncate_lineage`` stores it), so writing the
+    outputs does not re-run the extraction, the shingle explode and the
+    (t_id, kmer) shuffle once per output.
     """
     from rnadam_spark import instrument as ins
+    from rnadam_spark.lineage import truncate_lineage
 
     seqs = ins.timed(timers, ins.EXTRACT, transcript_sequences(transcripts, genome))
     counts = ins.timed(timers, ins.SPLIT_KMERS, transcript_kmer_counts(seqs, k))
@@ -95,7 +102,10 @@ def build_index(
         "kmer",
         F.md5(F.concat_ws(":", F.col("t_id"), F.col("cnt"))).alias("class_id"),
     )
-    with_class = ins.timed(timers, ins.GENERATE_CLASSES, with_class)
+    if timers is None:
+        with_class = truncate_lineage(with_class)
+    else:
+        with_class = ins.timed(timers, ins.GENERATE_CLASSES, with_class)
     kmer_to_class = with_class.select("kmer", "class_id")
     class_kmers = with_class.select("class_id", "kmer")
     class_transcripts = with_class.select("class_id", "t_id").distinct()

@@ -30,6 +30,19 @@ it, µ is materialized once as a single partition sorted by t_id, so the
 normalization and length-calibration sums add in the same order
 whatever the plan shape or edge layout.
 
+Every other table the pipeline reads more than once — ``t_len``, the
+Tare features, ``class_counts``, ``rel_kmers`` — is materialized once
+through :func:`~rnadam_spark.lineage.truncate_lineage` (a reliable
+checkpoint when ``checkpoint_dir`` is set), not ``.cache()``. With
+``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` at its
+``false`` default, a cached aggregate keeps all
+``spark.sql.shuffle.partitions`` (32) partitions, AQE never coalesces
+them, and every later read of a few thousand rows runs 32 near-empty
+tasks. A checkpoint stores the AQE-coalesced partitions and cuts the
+lineage. The edge table stays cached: its partition count is explicit
+and sized from the data, and the E-step relies on its
+hashpartitioning(class_id).
+
 The loop stops at its exact fixed point (:func:`em_iterations`): when
 no class has more than one edge row — every index the reference's
 (transcript, multiplicity) class key builds — the E-step's α is
@@ -258,10 +271,13 @@ def quantify(
     an ``abundance`` column (relative abundances, sum 1).
 
     ``timers`` (an ``instrument.StageTimers``) forces + times each
-    stage under the reference's Timers.scala names; ``None`` (the
-    default) keeps the pipeline fully lazy.
+    stage under the reference's Timers.scala names. Without timers the
+    tables read more than once (transcript lengths, Tare features,
+    class counts, class shares, the edge table and µ) are still
+    materialized here, eagerly; the returned frame stays lazy.
 
-    ``checkpoint_dir``: when set, per-iteration lineage truncation uses
+    ``checkpoint_dir``: when set, every lineage truncation on the
+    untimed path (the static tables above and the per-iteration µ) uses
     reliable ``checkpoint()`` into that fault-tolerant directory instead
     of ``localCheckpoint`` — executor loss mid-loop then recovers by
     re-reading checkpointed state instead of failing the job (see
@@ -269,26 +285,30 @@ def quantify(
     from rnadam_spark import instrument as ins
     from rnadam_spark.algorithms import tare
 
-    # static across the loop and broadcast every iteration — cache so
-    # each broadcast exchange reads the materialized rows instead of
-    # re-deriving from the source scan
-    t_len = transcript_lengths(transcripts).cache()
-    t_len = ins.timed(timers, ins.EXTRACT_LENGTHS, t_len)
+    def stage(name: str, df: DataFrame) -> DataFrame:
+        # a table read more than once is stored once: under timers,
+        # timed() checkpoints it; otherwise truncate_lineage does, eagerly
+        if timers is not None:
+            return ins.timed(timers, name, df)
+        return truncate_lineage(df, checkpoint_dir)
+
+    # static across the loop and broadcast into the edge table, the
+    # length calibration and the transcript join
+    t_len = stage(ins.EXTRACT_LENGTHS, transcript_lengths(transcripts))
 
     kmer_counts = ins.timed(timers, ins.COUNT_KMERS, count_read_kmers(reads, k))
     if calibrate_kmer_bias:
-        kmer_counts = ins.timed(timers, ins.TARE_KMERS, tare.calibrate_kmers(kmer_counts))
+        kmer_counts = ins.timed(
+            timers, ins.TARE_KMERS, tare.calibrate_kmers(kmer_counts, checkpoint_dir)
+        )
 
-    class_counts = map_kmers_to_classes(kmer_counts, kmer_to_class)
-    if timers is None:  # timed() caches; avoid double-cache under timers
-        class_counts = class_counts.cache()
-    class_counts = ins.timed(timers, ins.COUNT_CLASSES, class_counts)
-    rel_kmers = relative_class_kmers(class_counts).cache()  # static, broadcast per iteration
-    rel_kmers = ins.timed(timers, ins.NORMALIZING, rel_kmers)
+    class_counts = stage(ins.COUNT_CLASSES, map_kmers_to_classes(kmer_counts, kmer_to_class))
+    rel_kmers = stage(ins.NORMALIZING, relative_class_kmers(class_counts))
 
     # the static membership-edge table, enriched ONCE with both static
     # dimensions (class share rel_p, transcript length), PRE-PARTITIONED
-    # on class_id into a data-sized partition count, and cached. The
+    # on class_id into a data-sized partition count, and cached (an
+    # explicit count, so the cache pins no unused partitions). The
     # repartition is paid once at cache time and every iteration's
     # E-step window then reuses the cached hashpartitioning(class_id) —
     # its plan is broadcast-join + local sort + window with NO exchange

@@ -7,7 +7,8 @@ lambda, no explode, no shuffle; the regression of log-count on context
 fractions uses ``pyspark.ml``'s deterministic LinearRegression solver
 instead of 2015's LinearRegressionWithSGD (Tare.scala:121) — reference
 tests assert directional properties, not weights, so the
-better-converging solver is drop-in (SURVEY.md §7 risk register). The
+better-converging solver is drop-in (SURVEY.md §7 risk register); it
+fits no separate intercept (see :func:`calibrate_kmers`). The
 length-bias OLS (Tare.scala:164-177, driver-side jblas normal
 equations) becomes closed-form ``covar_pop/var_pop`` aggregates — fully
 distributed.
@@ -69,31 +70,44 @@ def featurize_kmers(kmer_counts: DataFrame) -> DataFrame:
     )
 
 
-def calibrate_kmers(kmer_counts: DataFrame) -> DataFrame:
+def calibrate_kmers(kmer_counts: DataFrame, checkpoint_dir: str | None = None) -> DataFrame:
     """(kmer, cnt) → (kmer, cnt) recalibrated (Tare.scala:110-136).
 
     The reference's accumulators for (n, Σ multiplicity)
     (Tare.scala:112-116) are an aggregation here — accumulators are not
     exactly-once under task retries (SURVEY.md A12).
+
+    The regression has no separate intercept: the 16 context fractions
+    sum to 1, so the constant column already lies in their span. With an
+    intercept the normal matrix is singular, Cholesky fails and Spark
+    falls back to L-BFGS; without it the normal equations are full rank
+    and solve directly, and the fitted values — the projection of the
+    labels onto the same column space — are unchanged.
+
+    The features are read by the fit, the mean and the prediction, so
+    they are materialized once here (eagerly, via ``truncate_lineage``
+    into ``checkpoint_dir`` when set); the returned frame reads them.
     """
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    from pyspark.ml.functions import array_to_vector
     from pyspark.ml.regression import LinearRegression
 
-    feats = featurize_kmers(kmer_counts).cache()
+    from rnadam_spark.lineage import truncate_lineage
+
+    feats = truncate_lineage(featurize_kmers(kmer_counts), checkpoint_dir)
 
     stats = feats.agg(
         F.count("*").alias("n"), F.sum("cnt").alias("total_mult")
     ).select((F.log(F.col("total_mult") / F.col("n"))).alias("mean"))
 
     train = feats.select(F.col("label"), array_to_vector("features").alias("features"))
-    model = LinearRegression(featuresCol="features", labelCol="label").fit(train)
+    model = LinearRegression(featuresCol="features", labelCol="label", fitIntercept=False).fit(
+        train
+    )
 
     predicted = model.transform(
         feats.select("kmer", "cnt", "label", array_to_vector("features").alias("features"))
     )
-    out = recalibrate_counts(predicted, stats)
-    feats.unpersist()
-    return out
+    return recalibrate_counts(predicted, stats)
 
 
 def recalibrate_counts(predicted: DataFrame, stats: DataFrame) -> DataFrame:

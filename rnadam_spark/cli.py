@@ -1224,10 +1224,14 @@ def main(argv: list[str] | None = None) -> None:
             tc = spark.read.parquet(args.model + "/target_counts")
             rc = spark.read.parquet(args.model + "/raw_counts")
         else:
+            from rnadam_spark.lineage import truncate_lineage
+
             n_buckets = args.n_buckets
             target = spark.read.parquet(args.target)
-            tc = dsir_mod.bucket_counts(target, n_buckets)
-            rc = dsir_mod.bucket_counts(raw, n_buckets)
+            # stored once: the weights and the -save_model writes both
+            # read them, and each lazy histogram is a full corpus pass
+            tc = truncate_lineage(dsir_mod.bucket_counts(target, n_buckets))
+            rc = truncate_lineage(dsir_mod.bucket_counts(raw, n_buckets))
         weights = dsir_mod.dsir_log_weights(raw, tc, rc, n_buckets)
         selected = dsir_mod.dsir_select(weights, args.fraction, seed=args.seed)
         # join back to carry the text; weight columns stay for audits

@@ -93,6 +93,37 @@ def test_cli_index_then_quantify(spark, tmp_path):
         assert abs(got[names[i]] - expected) <= 0.05, (got, expected)
 
 
+def _capture_parquet_writes(monkeypatch, *sources):
+    """Record (path, scans of each of ``sources``) for every parquet
+    write the CLI makes."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from rnadam_spark.plans import count_parquet_scans
+
+    writes = []
+    parquet = DataFrameWriter.parquet
+
+    def capturing(self, path, *args, **kwargs):
+        writes.append((path, [count_parquet_scans(self._df, src) for src in sources]))
+        return parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", capturing)
+    return writes
+
+
+def test_cli_index_writes_read_the_stored_table(spark, tmp_path, monkeypatch):
+    # build_index stores its (t_id, kmer, class_id) table once: none of
+    # the four index outputs re-runs the genome extraction
+    _, paths = _write_fixtures(spark, tmp_path, [0.5, 0.3, 0.2])
+    writes = _capture_parquet_writes(monkeypatch, paths["genome"], paths["genes"])
+    index_prefix = str(tmp_path / "index")
+    cli.main(["index", paths["genome"], paths["genes"], "15", index_prefix])
+    assert sorted(p.removeprefix(index_prefix) for p, _ in writes) == [
+        "_classes", "_contents", "_kmers", "_members"
+    ]
+    assert all(scans == [0, 0] for _, scans in writes), writes
+
+
 def test_cli_full_calibration_pipeline(spark, tmp_path):
     # The reference's DEFAULT quantify runs with BOTH calibrations ON
     # (cli/Quantify.scala:57-65); this is the P6+M1 ∘ P7+M2 composition
@@ -849,6 +880,34 @@ def test_cli_extract_html_dsir_split(spark, tmp_path):
     assert sp.count() == 31
     pair = {r.doc_id: (r.group_id, r.split) for r in sp.filter(F.col("doc_id") >= 51).collect()}
     assert pair[51] == pair[52]
+
+
+def test_cli_dsir_save_model_writes_stored_counts(spark, tmp_path, monkeypatch):
+    # -save_model writes the histograms the weights were computed from,
+    # stored once: neither count table re-scans its corpus, and each
+    # holds the corpus's bucket counts
+    from rnadam_spark.operators.dsir import bucket_counts
+
+    raw = spark.createDataFrame(
+        [(i, f"the quick brown fox {i} jumps over the lazy dog") for i in range(1, 9)]
+        + [(100 + i, "buy cheap pills online now discount sale") for i in range(4)],
+        ["doc_id", "text"],
+    )
+    tgt = spark.createDataFrame(
+        [(i, "a quick brown fox jumps over a lazy dog") for i in range(3)], ["doc_id", "text"]
+    )
+    raw_path, tgt_path = str(tmp_path / "raw.parquet"), str(tmp_path / "tgt.parquet")
+    raw.write.parquet(raw_path)
+    tgt.write.parquet(tgt_path)
+    model_path = str(tmp_path / "dsir_model")
+    writes = _capture_parquet_writes(monkeypatch, raw_path, tgt_path)
+    cli.main(["dsir", raw_path, str(tmp_path / "selected.parquet"), "-target", tgt_path,
+              "-fraction", "0.5", "-n_buckets", "256", "-save_model", model_path])
+    scans = dict(writes)
+    for name, corpus in (("target_counts", tgt), ("raw_counts", raw)):
+        assert scans[f"{model_path}/{name}"] == [0, 0], name
+        saved = sorted(spark.read.parquet(f"{model_path}/{name}").collect())
+        assert saved == sorted(bucket_counts(corpus, 256).collect()), name
 
 
 def test_cli_curate_excise_ppl_tail(spark, tmp_path):

@@ -106,9 +106,11 @@ def test_quantify_reliable_checkpoint_matches_local(spark, tmp_path):
     # checkpoint_dir switches lineage truncation from localCheckpoint to
     # reliable checkpoint() (survives executor loss on a real cluster);
     # the numbers must be identical — truncation is not allowed to touch
-    # the arithmetic
+    # the arithmetic. Both calibrations on, so the Tare features and
+    # the static tables are truncated too. Reads ∝ length: the length
+    # calibration recovers the uniform abundance.
     t_len = [500, 300, 200]
-    abundances = [0.5, 0.3, 0.2]
+    abundances = [x / sum(t_len) for x in t_len]
     transcripts, names, kmer_map, class_map = gen.generate_independent_transcripts(
         20, t_len, seed=77
     )
@@ -116,24 +118,24 @@ def test_quantify_reliable_checkpoint_matches_local(spark, tmp_path):
     reads_df, kmer_df, class_df, t_df = _dataframes(
         spark, transcripts, names, kmer_map, class_map, reads
     )
-    kwargs = dict(
-        k=20, max_iterations=5, calibrate_kmer_bias=False, calibrate_length_bias=False
-    )
-    local = quantify(reads_df, kmer_df, class_df, t_df, **kwargs)
+    local = quantify(reads_df, kmer_df, class_df, t_df, k=20, max_iterations=5)
     reliable = quantify(
-        reads_df, kmer_df, class_df, t_df, checkpoint_dir=str(tmp_path / "ckpt"), **kwargs
+        reads_df, kmer_df, class_df, t_df, k=20, max_iterations=5,
+        checkpoint_dir=str(tmp_path / "ckpt"),
     )
     got_local = {r.t_id: r.abundance for r in local.select("t_id", "abundance").collect()}
     got_reliable = {
         r.t_id: r.abundance for r in reliable.select("t_id", "abundance").collect()
     }
     assert got_local == got_reliable
-    for i, expected in enumerate(abundances):
-        assert abs(got_reliable[str(i)] - expected) <= 0.05
-    # the reliable run actually wrote checkpoint state
-    import os
+    for i in range(len(t_len)):
+        assert abs(got_reliable[str(i)] - 1.0 / len(t_len)) <= 0.05
+    # the reliable run wrote every truncation there: transcript lengths,
+    # Tare features, class counts, class shares and µ (one-member
+    # classes: one EM iteration, so µ is truncated once, after the loop)
+    import glob
 
-    assert any(os.scandir(tmp_path / "ckpt"))
+    assert len(glob.glob(str(tmp_path / "ckpt" / "*" / "rdd-*"))) == 5
 
 
 def _python_em(class_counts, members, t_len, k, max_iterations):
@@ -361,6 +363,37 @@ def test_em_fixed_point_job_count(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     assert len(jobs) <= 40, len(jobs)
+
+
+def test_quantify_stages_stay_data_sized(spark):
+    # the saving pinned without a clock: the tables quantify reads more
+    # than once go through AQE-coalesced checkpoints, not .cache() — a
+    # cached aggregate keeps every spark.sql.shuffle.partitions
+    # partition (AQE may not change a cached plan's output
+    # partitioning), and each later read ran that many near-empty
+    # tasks. CLI defaults: both calibrations, 50 iterations. Inputs sit
+    # in one partition each, so the bound does not follow the host's
+    # core count.
+    from rnadam_spark.algorithms.quantify import edge_partitions
+
+    sc = spark.sparkContext
+    dfs = [df.coalesce(1) for df in _dataframes(spark, *_independent_case())]
+    group = "quantify-stage-sizes"
+    sc.setJobGroup(group, "quantify with CLI defaults")
+    try:
+        quantify(*dfs, k=20, max_iterations=50).select("t_id", "abundance").collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    ran = [
+        (s, info.numCompletedTasks)
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+        if (info := tracker.getStageInfo(s)) is not None and info.numCompletedTasks
+    ]
+    assert ran
+    bound = max(4, edge_partitions(dfs[2].count()))
+    assert max(n for _, n in ran) <= bound, ran
 
 
 def test_em_state_fused_pandas_twin_value_equal(spark, sf_dir):

@@ -94,23 +94,53 @@ def test_featurize_matches_shingle_reference(spark, k):
     assert all(r.features == r.want for r in pairs)
 
 
-def test_calibrate_kmers_reduces_gc_bias(spark):
-    # TareSuite.scala:68-94: synthetic counts from a known log-space GC
-    # bias curve; after calibration the max count must drop and the min
-    # must rise (directional property, solver-independent)
+def _gc_biased_counts():
+    """Synthetic counts from a known log-space GC bias curve
+    (TareSuite.scala:68-94)."""
     rng = random.Random(121212)
     seq = generate_string(500, rng)
     kmers = [seq[i : i + 15] for i in range(len(seq) - 14)]
     rows = []
-    for km in set(kmers):
+    for km in sorted(set(kmers)):
         gc = sum(c in "GCgc" for c in km) / 15.0
         count = int(100.0 * math.exp(2.0 + (gc - 0.5)))
         rows.append((km, count))
+    return rows
+
+
+def test_calibrate_kmers_reduces_gc_bias(spark):
+    # TareSuite.scala:68-94: after calibration the max count must drop
+    # and the min must rise (directional property, solver-independent)
+    rows = _gc_biased_counts()
     df = spark.createDataFrame(rows, KMER_COUNTS)
     calibrated = {r.kmer: r.cnt for r in tare.calibrate_kmers(df).collect()}
     raw = dict(rows)
     assert max(calibrated.values()) < max(raw.values())
     assert min(calibrated.values()) > min(raw.values())
+
+
+def test_calibrate_kmers_matches_lstsq_with_intercept(spark):
+    # the fit has no separate intercept because the 16 context fractions
+    # sum to 1: the constant column is already in their span, so the
+    # fitted values equal those of the least-squares fit WITH an
+    # intercept. Reference: numpy lstsq on [1 | fractions], then
+    # count' = ⌊exp(mean + y − ŷ)⌋ with mean = log(Σ cnt / n)
+    import numpy as np
+
+    rows = _gc_biased_counts()
+    feats = tare.featurize_kmers(spark.createDataFrame(rows, KMER_COUNTS)).collect()
+    x = np.array([[1.0, *r.features] for r in feats])
+    y = np.array([r.label for r in feats])
+    beta, *_ = np.linalg.lstsq(x, y, rcond=None)
+    mean = math.log(sum(c for _, c in rows) / len(rows))
+    want = {
+        r.kmer: math.floor(math.exp(mean + yi - fi))
+        for r, yi, fi in zip(feats, y, x @ beta)
+    }
+    calibrated = tare.calibrate_kmers(spark.createDataFrame(rows, KMER_COUNTS))
+    got = {r.kmer: r.cnt for r in calibrated.collect()}
+    assert len(got) == len(want) > 400
+    assert got == want, {k: (got[k], want[k]) for k in want if got.get(k) != want[k]}
 
 
 def test_calibrate_tx_len_bias_golden(spark):
